@@ -1,7 +1,7 @@
-"""tools/ledger.py is the round-10 close-out artifact generator — pin its
-invariants so the verification round can trust it: every REGISTRY key gets
-exactly one row, placement buckets are disjoint-and-exhaustive, the driver
-history honors the certified-vs-red distinction check_rotation uses, sweep
+"""tools/ledger.py generates LEDGER.md and the README coverage block — pin
+its invariants: every REGISTRY key gets exactly one row, placement buckets
+are disjoint-and-exhaustive, the committed files match a fresh regeneration,
+the driver history keeps certified and red keys apart, sweep
 FAILURE lines parse into verdicts (ADVICE r9 medium: they used to be
 silently dropped, overstating certification), and the latest-sweep choice
 is deterministic by round number, not file mtime.
@@ -28,22 +28,26 @@ def test_ledger_rows_cover_registry_exactly():
 def test_ledger_placement_buckets_are_sound():
     rows, hist, *_ = ledger.build_rows()
     s = ledger.summary(rows, hist, "x.log", {})
-    # certified + live + staged + rows-only-unwindowed + unstaged == total
-    # (placement buckets are disjoint per key; the rows_only ATTRIBUTE
-    # count stopped matching the bucket once R14 staged the 6 rows-only
-    # keys for their first driver sample)
+    # every key sits in exactly one placement bucket: latest driver sample
+    # green or red, in the live window, or never driver-sampled
     assert (
         s["driver_certified"]
-        + s["live_window"]
-        + s["staged_next"]
-        + s["rows_only_unwindowed"]
-        + len(s["unstaged"])
         + len(s["driver_red_latest"])
+        + s["live_window"]
+        + len(s["never_sampled"])
         == s["total"]
     )
-    # the round-10 state: nothing unstaged, nothing red
-    assert s["unstaged"] == []
+    assert s["never_sampled"] == [
+        r["key"] for r in rows if r["driver"] == "never sampled"
+    ]
     assert s["driver_red_latest"] == []
+
+
+def test_ledger_and_readme_match_fresh_regeneration():
+    """`tools/ledger.py --check`: LEDGER.md and the README block must be
+    regenerated whenever their inputs (REGISTRY, CORRECTNESS files,
+    sweeps, PLANS.md) change."""
+    assert ledger.check() == []
 
 
 def test_driver_history_redness_rules():
@@ -146,28 +150,3 @@ def test_latest_sweep_skips_partial_log_from_later_round(tmp_path, monkeypatch):
     name, verdicts = ledger.latest_sweep()
     assert name == "r10_close.log"
     assert len(verdicts) == len(keys)
-
-
-def test_rotation_recert_exemption_expires_after_reproof():
-    """check_rotation's _DRIVER_RECERT pass is scoped, not permanent
-    (ADVICE r12): a recert key whose newest driver hash is from the
-    LATEST landed round is no longer excused — re-windowing it again
-    would waste a slot — while keys whose hashes predate the latest
-    round stay excused."""
-    import check_rotation as cr
-
-    latest = {"old_key": 2, "fresh_key": 13, "other": 13}
-    active = cr.active_recerts(latest, ["old_key", "fresh_key", "never"])
-    assert "old_key" in active       # last proved r2 < r13: still owed
-    assert "fresh_key" not in active  # re-proved in the latest round
-    assert "never" in active          # no hash at all: certainly owed
-    # live repo invariant, state-independent (VERDICT r13 "What's wrong" #1):
-    # active recerts are always drawn FROM the listed window, but whether
-    # the set is full (window open, CORRECTNESS not landed) or empty
-    # (driver artifacts landed, every listed key freshly re-proved) flips
-    # every round by design — assert the subset invariant plus the two
-    # legal states explicitly instead of pinning one of them.
-    real = cr.sampled_rounds()
-    active = cr.active_recerts(real)
-    assert active <= set(cr._DRIVER_RECERT)
-    assert active == set(cr._DRIVER_RECERT) or not active

@@ -1,0 +1,63 @@
+"""Per-change oracle gate: a sample of catalog keys runs on Spark and on its
+DuckDB twin at sf0.001 through tools/check_oracle.py's own ``duck_con`` and
+``compare``, and must read EXACT (rows-only keys: Spark must run).
+
+The full sweep (``python tools/check_oracle.py``, every key at sf0.01) is
+too slow for every change; this sample is chosen to catch drift from a
+mechanical edit: one key per catalog family (SURVEY.md §2, A–K), the
+benchmark's catalog keys, and at least one key per shared SQL-text helper
+at the top of catalog.py.
+"""
+
+import sys
+from pathlib import Path
+
+import pytest
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+
+import check_oracle  # noqa: E402
+
+from tests.conftest import SF_SMALL  # noqa: E402
+from varda_spark.catalog import REGISTRY  # noqa: E402
+
+SAMPLE = [
+    # benchmark catalog keys
+    "tpch_q5", "dedup_minhash", "emb_semantic_dedup",
+    # one per family
+    "paginate_window",   # A (A8 paging)
+    "filter_eq",         # B
+    "join_equi",         # C
+    "agg_sum",           # D
+    "win_rank",          # E
+    "sort_limit",        # F
+    "set_union",         # G
+    "str_digest",        # H
+    "stream_tumbling",   # I
+    "udf_grouped_map",   # J (rows-only)
+    # one per helper (dedup_minhash covers _minhash_cte)
+    "agg_ops_snips",     # fixed_int, dfixed_int, fdiv
+    "sample_split",      # md5_int, omd5_int
+    "agg_auc",           # ppm, oppm
+    "agg_pow2_hist",     # bitlen
+    "sim_hamming_topk",  # dsign_words, _OSIGN_WORDS
+    "scan_dpp",          # _scratch_table
+]
+
+
+@pytest.fixture(scope="module")
+def con():
+    c = check_oracle.duck_con(SF_SMALL)
+    yield c
+    c.close()
+
+
+@pytest.mark.parametrize("key", SAMPLE)
+def test_key_matches_oracle(spark, con, key):
+    q = REGISTRY[key]
+    sdf = q.fn(spark, SF_SMALL).toPandas()
+    if q.sql is None:
+        assert len(sdf.columns) > 0
+        return
+    assert check_oracle.array_output_cols(sdf) == []
+    assert check_oracle.compare(key, sdf, con.sql(q.sql).df()) == "EXACT"

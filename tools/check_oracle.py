@@ -36,10 +36,12 @@ TABLES = [
 ]
 
 
-def duck_con() -> duckdb.DuckDBPyConnection:
+def duck_con(sf_dir: str | None = None) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
+        con.sql(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir or SF_DIR}/{t}.parquet')"
+        )
     return con
 
 

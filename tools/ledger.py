@@ -1,4 +1,4 @@
-"""Generate LEDGER.md: the per-key certification ledger for round-10 close-out.
+"""Generate LEDGER.md: the per-key certification ledger.
 
 One row per registered key × (oracle twin, driver certification round +
 status, latest local full-sweep verdict, scale-smoke evidence, plan shape,
@@ -14,6 +14,7 @@ twice, r7 and r8).
 Usage:
   python tools/ledger.py            # write LEDGER.md + print summary
   python tools/ledger.py --readme   # also refresh the README counts block
+  python tools/ledger.py --check    # exit 1 if either file is stale
 """
 
 from __future__ import annotations
@@ -23,32 +24,12 @@ import json
 import os
 import re
 import sys
+import textwrap
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from varda_spark.catalog import REGISTRY, _DRIVER_PRIORITY  # noqa: E402
-
-try:
-    from varda_spark.catalog import _DRIVER_PRIORITY_R10  # noqa: E402
-except ImportError:  # post-r10 checkouts: the staging list was promoted
-    _DRIVER_PRIORITY_R10 = []
-try:
-    from varda_spark.catalog import _DRIVER_PRIORITY_R11  # noqa: E402
-except ImportError:  # post-r11-open checkouts: first 50 promoted, rest -> R12
-    _DRIVER_PRIORITY_R11 = []
-try:
-    from varda_spark.catalog import _DRIVER_PRIORITY_R12  # noqa: E402
-except ImportError:  # post-r12-open checkouts: the final tail was promoted
-    _DRIVER_PRIORITY_R12 = []
-try:
-    from varda_spark.catalog import _DRIVER_PRIORITY_R13  # noqa: E402
-except ImportError:  # pre-r12-open checkouts
-    _DRIVER_PRIORITY_R13 = []
-try:
-    from varda_spark.catalog import _DRIVER_PRIORITY_R14  # noqa: E402
-except ImportError:  # pre-r13-open checkouts
-    _DRIVER_PRIORITY_R14 = []
 
 
 def driver_history() -> dict[str, tuple[int, str]]:
@@ -176,9 +157,6 @@ def build_rows():
     smoke_name, smoke = catalog_smoke()
     shapes = plan_shapes()
     live = set(_DRIVER_PRIORITY[:50])
-    staged10 = (set(_DRIVER_PRIORITY_R10) | set(_DRIVER_PRIORITY_R11)
-                | set(_DRIVER_PRIORITY_R12) | set(_DRIVER_PRIORITY_R13)
-                | set(_DRIVER_PRIORITY_R14))
     rows = []
     for key, spec in REGISTRY.items():
         twinned = spec.sql is not None
@@ -187,12 +165,8 @@ def build_rows():
             driver = f"r{rnd} {status}"
         elif key in live:
             driver = "live window"
-        elif key in staged10:
-            driver = "staged next"
-        elif not twinned:
-            driver = "rows-only (no window)"
         else:
-            driver = "UNSTAGED"
+            driver = "never sampled"
         rows.append(
             {
                 "key": key,
@@ -213,8 +187,7 @@ def summary(rows, hist, sweep_name, sweep) -> dict:
     red = {k for k, (rnd, s) in hist.items() if s != "green" and k in REGISTRY}
     latest_round = max((rnd for rnd, _ in hist.values()), default=0)
     live = [r["key"] for r in rows if r["driver"] == "live window"]
-    staged = [r["key"] for r in rows if r["driver"] == "staged next"]
-    unstaged = [r["key"] for r in rows if r["driver"] == "UNSTAGED"]
+    never = [r["key"] for r in rows if r["driver"] == "never sampled"]
     exact = sum(1 for r in rows if r["local"] == "EXACT")
     rows_only_sweep = sum(1 for r in rows if r["local"] == "rows-only")
     sweep_failed = sorted(
@@ -226,19 +199,13 @@ def summary(rows, hist, sweep_name, sweep) -> dict:
         "total": total,
         "twinned": twinned,
         "rows_only": total - twinned,
-        # placement bucket (disjoint from certified/live/staged): rows-only
-        # keys NOT in any window. Since R14 staged the 6 rows-only keys for
-        # their first driver sample, this differs from the rows_only
-        # ATTRIBUTE count above — the bucket arithmetic must use this one.
-        "rows_only_unwindowed": len(
-            [r for r in rows if r["driver"] == "rows-only (no window)"]
-        ),
         "driver_certified": len(certified),
         "driver_red_latest": sorted(red),
         "latest_round": latest_round,
         "live_window": len(live),
-        "staged_next": len(staged),
-        "unstaged": sorted(unstaged),
+        # outside the live window and absent from every CORRECTNESS file,
+        # in registry order (the README names them)
+        "never_sampled": never,
         "sweep": sweep_name,
         "sweep_exact": exact,
         # denominator for the EXACT ratio: twinned keys the sweep verdicted
@@ -264,17 +231,12 @@ def readme_paragraph(s: dict) -> str:
         f"driver hash-checks a rotating window of 50 keys per round: rounds 1–{s['latest_round']}\n"
         f"certified {s['driver_certified']} distinct keys, "
         f"{'all green on their latest sample' if not s['driver_red_latest'] else 'red on latest: ' + ', '.join(s['driver_red_latest'])};\n"
-        + (
-            f"the live window holds {s['live_window']} never-sampled keys — the FINAL\n"
-            f"certification tail; nothing is left to stage. Latest committed\n"
-            if s["staged_next"] == 0 and s["live_window"] > 0
-            else (
-                "every twinned key has been driver-sampled; the rotation is complete. Latest committed\n"
-                if s["staged_next"] == 0
-                else f"the live window holds {s['live_window']} never-sampled keys and\n"
-                f"{s['staged_next']} are staged for the next rotation window (`_DRIVER_PRIORITY_R13`, catalog.py). Latest committed\n"
-            )
+        f"the live window holds {s['live_window']} never-sampled keys, and\n"
+        f"{len(s['never_sampled'])} keys have never been driver-sampled:\n"
+        + textwrap.fill(
+            ", ".join(f"`{k}`" for k in s["never_sampled"]) or "none", 76
         )
+        + ". Latest committed\n"
         + f"full sweep: {s['sweep_exact']}/{s['sweep_checked']} EXACT"
         f"{'' if not s['sweep_failed'] else ' — FAILURES: ' + ', '.join(s['sweep_failed'])}"
         f" (`sweeps/{s['sweep']}`). This paragraph is\n"
@@ -285,7 +247,11 @@ def readme_paragraph(s: dict) -> str:
     )
 
 
-def main() -> int:
+_BLOCK_RE = r"<!-- ledger:begin.*?<!-- ledger:end -->"
+
+
+def render() -> tuple[str, str, dict]:
+    """(LEDGER.md text, README block, summary) from the committed inputs."""
     rows, hist, sweep_name, sweep, smoke_name = build_rows()
     s = summary(rows, hist, sweep_name, sweep)
     s["catalog_smoke"] = smoke_name
@@ -300,9 +266,8 @@ def main() -> int:
             "" if not s["driver_red_latest"]
             else f" — RED on latest sample: {', '.join(s['driver_red_latest'])}"
         ),
-        f"- live driver window: {s['live_window']} keys; staged next window: "
-        f"{s['staged_next']}; unstaged twinned tail: "
-        f"{len(s['unstaged'])} {s['unstaged'] or ''}",
+        f"- live driver window: {s['live_window']} keys; never driver-sampled: "
+        f"{len(s['never_sampled'])} {s['never_sampled'] or ''}",
         f"- latest committed full sweep: {s['sweep_exact']}/{s['sweep_checked']} "
         f"EXACT ({s['sweep']}; {s['sweep_rows_only']} rows-only keys recorded "
         f"without a hash verdict)"
@@ -328,55 +293,52 @@ def main() -> int:
             f"| {r['key']} | {r['twin']} | {r['driver']} | {r['local']} | "
             f"{r['smoke']} | {r['plan']} |"
         )
+    block = (
+        "<!-- ledger:begin (generated by tools/ledger.py --readme; do not hand-edit) -->\n"
+        + readme_paragraph(s)
+        + "<!-- ledger:end -->"
+    )
+    return "\n".join(lines) + "\n", block, s
+
+
+def check() -> list[str]:
+    """Problems with the committed LEDGER.md / README block; [] when both
+    match a fresh regeneration of the same inputs."""
+    ledger_text, block, _ = render()
+    problems = []
     out = os.path.join(ROOT, "LEDGER.md")
-    ledger_text = "\n".join(lines) + "\n"
+    old = open(out).read() if os.path.exists(out) else ""
+    if old != ledger_text:
+        problems.append("LEDGER.md is stale — rerun tools/ledger.py")
+    text = open(os.path.join(ROOT, "README.md")).read()
+    m = re.search(_BLOCK_RE, text, re.S)
+    if not m or m.group(0) != block:
+        problems.append("README ledger block is stale — rerun tools/ledger.py --readme")
+    return problems
+
+
+def main() -> int:
     if "--check" in sys.argv:
-        # VERDICT r10 item 8: fail if the committed README block or
-        # LEDGER.md drift from a fresh regeneration of the same inputs
-        # (the r10 one-regeneration-behind skew, made self-reporting).
-        ok = True
-        old = open(out).read() if os.path.exists(out) else ""
-        if old != ledger_text:
-            print("CHECK FAIL: LEDGER.md is stale — rerun tools/ledger.py")
-            ok = False
-        readme = os.path.join(ROOT, "README.md")
-        text = open(readme).read()
-        want_block = (
-            "<!-- ledger:begin (generated by tools/ledger.py --readme; do not hand-edit) -->\n"
-            + readme_paragraph(s)
-            + "<!-- ledger:end -->"
-        )
-        m = re.search(r"<!-- ledger:begin.*?<!-- ledger:end -->", text, re.S)
-        if not m or m.group(0) != want_block:
-            print("CHECK FAIL: README ledger block is stale — rerun"
-                  " tools/ledger.py --readme")
-            ok = False
-        if ok:
-            print("CHECK OK: LEDGER.md and README block match a fresh"
-                  " regeneration")
-        return 0 if ok else 1
+        problems = check()
+        for p in problems:
+            print(f"CHECK FAIL: {p}")
+        if not problems:
+            print("CHECK OK: LEDGER.md and README block match a fresh regeneration")
+        return 1 if problems else 0
+    ledger_text, block, s = render()
+    out = os.path.join(ROOT, "LEDGER.md")
     open(out, "w").write(ledger_text)
     print(f"wrote {out}: {s['total']} keys")
     print(json.dumps(s, indent=1))
     if "--readme" in sys.argv:
         readme = os.path.join(ROOT, "README.md")
         text = open(readme).read()
-        block = (
-            "<!-- ledger:begin (generated by tools/ledger.py --readme; do not hand-edit) -->\n"
-            + readme_paragraph(s)
-            + "<!-- ledger:end -->"
-        )
         if "<!-- ledger:begin" in text:
-            text = re.sub(
-                r"<!-- ledger:begin.*?<!-- ledger:end -->", block, text, flags=re.S
-            )
+            text = re.sub(_BLOCK_RE, lambda _: block, text, flags=re.S)
             open(readme, "w").write(text)
             print("README.md counts block refreshed")
         else:
             print("README.md has no ledger markers — insert them once by hand")
-    if s["unstaged"]:
-        print(f"WARN: unstaged twinned keys: {s['unstaged']}")
-        return 1
     return 0
 
 

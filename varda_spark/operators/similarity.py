@@ -41,15 +41,32 @@ def norm(a: str) -> Column:
     )
 
 
-def quantized(a: str, scale: int = 10000) -> Column:
+def quantized_sql(a: str, scale: int = 10000) -> str:
     """array<bigint> quantization: floor(x * scale). Integer dot products
     over these are exact and associative → engine-independent ranking."""
-    return F.expr(f"transform({a}, x -> CAST(floor(CAST(x AS DOUBLE) * {scale}) AS BIGINT))")
+    return f"transform({a}, x -> CAST(floor(CAST(x AS DOUBLE) * {scale}) AS BIGINT))"
+
+
+def quantized(a: str, scale: int = 10000) -> Column:
+    return F.expr(quantized_sql(a, scale))
 
 
 def qdot(a: str, b: str) -> Column:
     return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+    )
+
+
+def sign_word(emb: str, lo: int) -> str:
+    """32-bit sign word of the 32 elements of ``emb`` from 1-based ``lo``:
+    bit 31 - i is set iff element lo + i is >= 0. A weighted SUM of bits,
+    so the value does not depend on fold order."""
+    lits = ", ".join(str(1 << (31 - i)) for i in range(32))
+    return (
+        f"aggregate(zip_with(slice({emb}, {lo}, 32), array({lits}),"
+        " (x, p) -> CASE WHEN CAST(x AS DOUBLE) >= 0"
+        " THEN p ELSE CAST(0 AS BIGINT) END),"
+        " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
     )
 
 
@@ -62,20 +79,10 @@ def sign_words64(df: DataFrame, id_col: str = "vec_id", emb: str = "embedding",
     stream_cascade all scan (bit_count(w^q) Hamming in whole-stage codegen);
     e_q is the floor-quantized integer vector for the exact re-rank stage.
     All integer math → bit-exact across engines and batch/stream."""
-    lits = ", ".join(str(1 << (31 - i)) for i in range(32))
-
-    def word(lo: int) -> str:
-        return (
-            f"aggregate(zip_with(slice({emb}, {lo}, 32), array({lits}),"
-            " (x, p) -> CASE WHEN CAST(x AS DOUBLE) >= 0"
-            " THEN p ELSE CAST(0 AS BIGINT) END),"
-            " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
-
     return df.select(
         id_col,
-        F.expr(word(1)).alias("w1"),
-        F.expr(word(33)).alias("w2"),
+        F.expr(sign_word(emb, 1)).alias("w1"),
+        F.expr(sign_word(emb, 33)).alias("w2"),
         quantized(emb, scale).alias("e_q"),
     )
 

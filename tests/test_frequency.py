@@ -27,6 +27,7 @@ Expected (selection=*, actives only):
 import pytest
 from pyspark.sql import Row, functions as F
 
+from varda_spark.annotate import annotate_keys
 from varda_spark.expressions import compile_selection
 from varda_spark.frequency import frequency
 
@@ -126,3 +127,79 @@ def test_trio_mendel_rule_matches_transmission_enumeration(spark):
     for r in rows:
         assert 0 <= r.n_violations <= r.n_sites
         assert 0 <= r.violation_ppm <= 1000000
+
+
+# ---- annotation queries against a plain-Python reference -------------------
+QUERIES = {"all": "*", "pub": "public", "nobody": "sample:nobody", "off": "sample:s4"}
+PREDICATES = {
+    "all": lambda s: True,
+    "pub": lambda s: s.public,
+    "nobody": lambda s: False,
+    "off": lambda s: s.name == "s4",  # the inactive sample only
+}
+
+
+def _reference(keys, observations, regions, samples, pred):
+    """key -> (vn, vf) by direct enumeration over collected rows."""
+    sel = [s for s in samples if s.active and pred(s)]
+    ids = {s.sample_id for s in sel}
+    out = {}
+    for k in {(k.chromosome, k.position, k.reference, k.observed) for k in keys}:
+        vn = sum(
+            s.pool_size for s in sel
+            if not s.coverage_profile
+            or any(r.sample_id == s.sample_id and r.chromosome == k[0] and r.begin <= k[1] <= r.end
+                   for r in regions)
+        )
+        vc = sum(o.support for o in observations
+                 if o.sample_id in ids and (o.chromosome, o.position, o.reference, o.observed) == k)
+        out[k] = (vn, vc / vn if vn else 0.0)
+    return out
+
+
+def _by_key(df):
+    return {(r.chromosome, r.position, r.reference, r.observed): r for r in df.collect()}
+
+
+def test_annotate_matches_python_reference(spark, fixture_dfs):
+    """Degenerate selections (no active match; only the inactive sample),
+    overlapping regions of one sample, a never-observed key and duplicate
+    input keys, all against direct enumeration."""
+    samples, regions, observations, keys = fixture_dfs
+    dup_keys = keys.unionByName(keys)
+    got = _by_key(annotate_keys(dup_keys, observations, regions, samples, QUERIES))
+    assert len(got) == keys.count()  # duplicates collapse to one row per key
+    rows = [x.collect() for x in (keys, observations, regions, samples)]
+    for name, pred in PREDICATES.items():
+        want = _reference(*rows, pred)
+        have = {k: (r[f"{name}_vn"], r[f"{name}_vf"]) for k, r in got.items()}
+        assert have == want, name  # the same IEEE division on both sides
+    a = ("1", 160, "A", "G")
+    assert got[a].all_vn == 12  # s1's two overlapping regions count once
+    for k, r in got.items():
+        assert (r.nobody_vn, r.nobody_vf, r.off_vn, r.off_vf) == (0, 0.0, 0, 0.0), k
+    assert got[("1", 999, "G", "A")].all_vf == 0.0  # no sample observed it
+
+
+def test_annotate_without_queries_returns_distinct_keys(tiny_warehouse):
+    from perfbench import gen
+
+    wh, inputs = tiny_warehouse
+    out = wh.annotate(inputs.query_vcf, {})
+    assert out.columns == ["chromosome", "position", "reference", "observed"]
+    rows = [tuple(r) for r in out.collect()]
+    assert len(rows) == len(set(rows))
+    assert set(rows) == gen.query_keys(inputs.query_vcf)
+
+
+def test_fused_queries_equal_single_query_calls(spark, fixture_dfs):
+    samples, regions, observations, keys = fixture_dfs
+    three = {"all": "*", "pub": "public", "big": "pooled"}
+    fused = annotate_keys(keys, observations, regions, samples, three)
+    got = _by_key(fused)
+    for name, text in three.items():
+        single = annotate_keys(keys, observations, regions, samples, {name: text})
+        cols = [f"{name}_vn", f"{name}_vf"]
+        assert [fused.schema[c] for c in cols] == [single.schema[c] for c in cols]
+        for k, r in _by_key(single).items():
+            assert (got[k][cols[0]], got[k][cols[1]]) == (r[cols[0]], r[cols[1]]), (name, k)

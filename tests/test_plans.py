@@ -5,8 +5,11 @@ or un-pushes a filter should fail here, not in a 100 TB run.
 (tools/audit_plans.py sweeps every key for anti-patterns; these tests pin
 the positive shape of a few load-bearing plans.)"""
 
+import os
+
 from varda_spark.catalog import REGISTRY
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.001"
 
 
@@ -51,7 +54,7 @@ def test_array_output_guard_trips(spark):
     result must trip the guard; a scalar-only one must not."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from check_oracle import array_output_cols
 
     bad = spark.sql(
@@ -81,3 +84,32 @@ def test_bucketed_agg_has_no_exchange(spark):
     requirement, which is the point of the key."""
     plan = plan_of(spark, "agg_bucketed_noshuffle")
     assert "Exchange hashpartitioning" not in plan, plan
+
+
+def _annotate_scans(wh, vcf: str, queries: dict[str, str]) -> dict[str, int]:
+    """File scans per input in the annotate plan, dynamic-pruning subqueries
+    included. Each input is told apart by a column only it has."""
+    plan = wh.annotate(vcf, queries)._jdf.queryExecution().executedPlan().toString()
+    scans = [ln.split("FileScan ", 1)[1] for ln in plan.splitlines() if "FileScan " in ln]
+    cols = [s.split("]", 1)[0] for s in scans]
+    return {
+        "query_vcf": sum(s.startswith("text") for s in scans),
+        "samples": sum("active#" in c for c in cols),
+        "observations": sum("support#" in c for c in cols),
+        "regions": sum("begin#" in c for c in cols),
+    }
+
+
+def test_annotate_reads_inputs_once_for_any_query_count(tiny_warehouse):
+    """Every annotation query is a flag and a conditional sum in ONE plan:
+    adding queries adds no scan of the query VCF or of any warehouse table
+    (one frequency() plan per query scanned the VCF 13 times for 2
+    queries)."""
+    wh, inputs = tiny_warehouse
+    queries = {"ALL": "*", "PUB": "public", "PRIV": "not public"}
+    one = _annotate_scans(wh, inputs.query_vcf, dict(list(queries.items())[:1]))
+    two = _annotate_scans(wh, inputs.query_vcf, dict(list(queries.items())[:2]))
+    three = _annotate_scans(wh, inputs.query_vcf, queries)
+    assert all(one.values()), one  # the classifier sees every input
+    assert one == three, (one, three)
+    assert two["query_vcf"] < 13, two

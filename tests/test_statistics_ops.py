@@ -336,7 +336,8 @@ def test_value_domain_windows_stay_bounded(spark):
     from varda_spark.sources.tables import read_table
 
     sf = SF_SMALL
-    for cand in ("/root/repo/scaledata/sf5", "/root/repo/scaledata/sf1"):
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for cand in (f"{root}/scaledata/sf5", f"{root}/scaledata/sf1"):
         if os.path.exists(f"{cand}/lineitem.parquet"):
             sf = cand
             break

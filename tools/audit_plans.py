@@ -10,9 +10,11 @@ Usage: python tools/audit_plans.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from varda_spark.catalog import REGISTRY  # noqa: E402
 from varda_spark.session import get_spark  # noqa: E402
@@ -305,7 +307,7 @@ BNLJ_OK = {
     "freq_zygosity",     # same 1-row scalar as freq_variant
     "freq_selected",     # same 1-row scalar as freq_variant
     "freq_keys",         # same 1-row scalar as freq_variant
-    "freq_annotate",     # two frequency() subplans, same 1-row scalar ×2
+    "freq_annotate",     # one fused plan: one 1-row scalar, a column per query
     "join_range",        # small range dim (demo of non-equi)
     "stream_watermark",  # 1-row max-ts horizon
     "tpch_q15",          # 1-row scalar max

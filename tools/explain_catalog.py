@@ -8,10 +8,12 @@ Usage: python tools/explain_catalog.py  (writes PLANS.md at repo root)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE  # noqa: E402
 from varda_spark.catalog import REGISTRY  # noqa: E402
@@ -65,7 +67,7 @@ def main() -> None:
         ) or "—"
         pushed = "✓" if re.search(r"PushedFilters: \[[^\]]", plan) else "—"
         lines.append(f"| {name} | {joins} | {shuffles} (pushed filters {pushed}) | {other} |")
-    open("/root/repo/PLANS.md", "w").write("\n".join(lines) + "\n")
+    open(os.path.join(ROOT, "PLANS.md"), "w").write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(HEADLINE)} queries)")
     spark.stop()
 

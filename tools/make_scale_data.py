@@ -24,7 +24,7 @@ This is BENCH data only: correctness is proven by the DuckDB oracle at
 sf0.01; this data exists to measure wall-clock scaling one more decade.
 
 Usage: python tools/make_scale_data.py [K] [src_dir] [out_dir]
-       defaults: K=10, src=/root/testdata/sf0.1, out=/root/repo/scaledata/sf1
+       defaults: K=10, src=the sf0.1 test tables, out=<repo>/scaledata/sf1
 """
 
 from __future__ import annotations
@@ -38,7 +38,8 @@ import duckdb
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    out = sys.argv[3] if len(sys.argv) > 3 else "/root/repo/scaledata/sf1"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = sys.argv[3] if len(sys.argv) > 3 else os.path.join(root, "scaledata", "sf1")
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     tables = [

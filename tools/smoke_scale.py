@@ -14,18 +14,20 @@ Usage: python tools/smoke_scale.py key [key ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from varda_spark.catalog import REGISTRY  # noqa: E402
 from varda_spark.session import get_spark  # noqa: E402
 
 DIRS = {
     "0.1": "/root/testdata/sf0.1",
-    "1": "/root/repo/scaledata/sf1",
-    "5": "/root/repo/scaledata/sf5",
+    "1": os.path.join(ROOT, "scaledata", "sf1"),
+    "5": os.path.join(ROOT, "scaledata", "sf5"),
 }
 
 

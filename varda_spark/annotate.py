@@ -4,18 +4,19 @@ Public varda shape (`tasks.py write_annotation` [P]): given an input VCF
 and one or more named sample-selection queries, emit the same VCF with
 ``{QUERY}_VN`` / ``{QUERY}_VF`` INFO fields per variant. The reference
 runs a correlated per-record subquery loop against PostgreSQL; here the
-whole annotation is ONE Spark plan per query: the input's variant keys
-left-join the pre-aggregated frequency table (C5 completeness — every
-input variant gets a row, zero-observation variants get VN/VF of the
-covered pool and 0.0).
+whole annotation is ONE Spark plan for all queries (frequency.frequencies):
+every query is a flag on the broadcast sample dimension and a conditional
+sum, so the input's keys and the sample dimension are read once (C5
+completeness — every input variant gets a row, zero-observation variants
+get VN/VF of the covered pool and 0.0).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from varda_spark.expressions import compile_selection
-from varda_spark.frequency import VARIANT_KEY, frequency
+from varda_spark.frequency import VARIANT_KEY, frequencies
 from varda_spark.sources.sinks import format_annotated_vcf_lines, write_annotated_vcf
 from varda_spark.sources.vcf import read_vcf
 
@@ -27,22 +28,15 @@ def annotate_keys(
     samples: DataFrame,
     queries: dict[str, str],
 ) -> DataFrame:
-    """Annotate distinct variant keys with per-query VN/VF columns.
+    """Annotate variant keys (duplicates allowed) with per-query VN/VF columns.
 
     queries: name → selection-DSL expression (expressions.py). Output has
-    the key columns plus ``{name}_vn`` / ``{name}_vf`` per query —
+    the distinct key columns plus ``{name}_vn`` / ``{name}_vf`` per query —
     the columnar equivalent of the reference's INFO fields.
     """
-    out = keys.select(*VARIANT_KEY).distinct()
-    for name, expr_text in queries.items():
-        sel = compile_selection(expr_text)
-        f = frequency(out, observations, regions, samples, sel).select(
-            *VARIANT_KEY,
-            F.col("vn").alias(f"{name}_vn"),
-            F.col("vf").alias(f"{name}_vf"),
-        )
-        out = out.join(f, VARIANT_KEY, "left")
-    return out
+    sels = {name: compile_selection(text) for name, text in queries.items()}
+    out = frequencies(keys, observations, regions, samples, sels)
+    return out.select(*VARIANT_KEY, *[f"{n}_{m}" for n in queries for m in ("vn", "vf")])
 
 
 def annotate_vcf(
@@ -58,8 +52,7 @@ def annotate_vcf(
 
     Returns the annotated keys DataFrame (also written to ``out_path``).
     """
-    keys = read_vcf(spark, vcf_path).select(*VARIANT_KEY).distinct()
-    ann = annotate_keys(keys, observations, regions, samples, queries)
+    ann = annotate_keys(read_vcf(spark, vcf_path), observations, regions, samples, queries)
     lines = format_annotated_vcf_lines(ann, list(queries))
     write_annotated_vcf(lines, out_path, list(queries))
     return ann

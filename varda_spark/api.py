@@ -176,7 +176,5 @@ class VardaWarehouse:
 
     def annotate(self, vcf_path: str, queries: dict[str, str]) -> DataFrame:
         """Annotate a VCF's variant keys with per-query VN/VF columns."""
-        keys = read_vcf(self.spark, vcf_path).select(
-            "chromosome", "position", "reference", "observed"
-        ).distinct()
-        return annotate_keys(keys, self.observations(), self.regions(), self.samples(), queries)
+        obs, regions, samples = self.observations(), self.regions(), self.samples()
+        return annotate_keys(read_vcf(self.spark, vcf_path), obs, regions, samples, queries)

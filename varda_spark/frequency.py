@@ -14,8 +14,11 @@ expression, compute
   VF = VC / VN  (0 when VN = 0 gives NULL → caller decides; varda emits 0).
 
 In the reference this runs as a correlated per-VCF-record subquery loop
-against PostgreSQL; here it is ONE plan: binned interval join (C1) for the
-denominator + equi-join/aggregate for the numerator + a left join so every
+against PostgreSQL; here every selection of a call shares ONE plan that
+reads the keys, the facts and the sample dimension once: the active samples
+are broadcast with one boolean flag per selection, and each selection is a
+conditional sum — in the numerator aggregate, in the covered pool behind a
+binned interval join (C1), and in a one-row unconditional pool. Every
 requested key yields a row (C5).
 
 Scale: observations/regions are the 100 TB fact tables, partitioned by
@@ -33,6 +36,84 @@ from varda_spark.operators.interval import interval_join
 VARIANT_KEY = ["chromosome", "position", "reference", "observed"]
 
 
+def frequencies(
+    variant_keys: DataFrame | None,
+    observations: DataFrame,
+    regions: DataFrame,
+    samples: DataFrame,
+    selections: dict[str, Column],
+) -> DataFrame:
+    """Per variant key and per named selection: ``{name}_vn``, ``_vc``,
+    ``_vf``, ``_vc_hom`` and ``_vc_het`` (plain ``vn``… for the name "").
+
+    variant_keys: (chromosome, position, reference, observed), duplicates
+    allowed; None = every key present in `observations` (the database-wide
+    frequency table). selections: name → boolean Column over `samples` (the
+    B3 expression DSL compiles to this). Inactive samples never count.
+    Unused output columns are pruned from the plan by the optimizer.
+    """
+    if not selections:  # no aggregate to compute: the distinct keys alone
+        base = observations if variant_keys is None else variant_keys
+        return base.select(*VARIANT_KEY).distinct()
+    flags = [f"_q{i}" for i in range(len(selections))]
+    dim = F.broadcast(
+        samples.filter(F.col("active")).select(
+            "sample_id", "pool_size", "coverage_profile",
+            *[sel.alias(q) for q, sel in zip(flags, selections.values())],
+        )
+    )
+
+    def conditional_sums(value: str, tag: str, extra: Column = F.lit(True)) -> list[Column]:
+        return [
+            F.coalesce(F.sum(F.when(F.col(q) & extra, F.col(value))), F.lit(0)).alias(q + tag)
+            for q in flags
+        ]
+
+    # ---- numerator: keys ⟕ (observations ⟕ flagged dim), one sum per flag --
+    # (rows of unselected or inactive samples carry NULL flags: sum nothing)
+    flagged = observations.join(dim, "sample_id", "left")
+    if variant_keys is not None:
+        flagged = variant_keys.select(*VARIANT_KEY).distinct().join(flagged, VARIANT_KEY, "left")
+    num = flagged.groupBy(*VARIANT_KEY).agg(
+        *conditional_sums("support", "_vc"),
+        *conditional_sums("support", "_hom", F.col("zygosity") == "homozygous"),
+        *conditional_sums("support", "_het", F.col("zygosity") == "heterozygous"),
+    )
+
+    # ---- covered pool: each key ⟕ covering regions of covered samples ----
+    covering = regions.join(dim.filter(F.col("coverage_profile")), "sample_id")
+    carried = num.columns[len(VARIANT_KEY):]
+    covered = (
+        interval_join(
+            num,
+            covering.select("sample_id", "chromosome", "begin", "end", "pool_size", *flags),
+            how="left",
+            strategy="binned",  # pinned: regions scale with samples×genome
+        )
+        # overlapping regions of one sample count once (C3 semi-join shape)
+        .dropDuplicates([*VARIANT_KEY, "sample_id"])
+        .groupBy(*VARIANT_KEY)
+        .agg(*[F.first(c).alias(c) for c in carried], *conditional_sums("pool_size", "_cov"))
+    )
+
+    # ---- unconditional pool: no-coverage-profile samples count everywhere --
+    uncond = dim.filter(~F.col("coverage_profile")).agg(*conditional_sums("pool_size", "_un"))
+
+    out = covered.crossJoin(F.broadcast(uncond))
+    cols = []
+    for q, name in zip(flags, selections):
+        vn, vc = F.col(q + "_cov") + F.col(q + "_un"), F.col(q + "_vc")
+        prefix = f"{name}_" if name else ""
+        cols += [
+            vn.alias(prefix + "vn"),
+            vc.alias(prefix + "vc"),
+            F.when(vn > 0, vc / vn).otherwise(F.lit(0.0)).alias(prefix + "vf"),
+            F.col(q + "_hom").alias(prefix + "vc_hom"),
+            F.col(q + "_het").alias(prefix + "vc_het"),
+        ]
+    return out.select(*VARIANT_KEY, *cols)
+
+
 def frequency(
     variant_keys: DataFrame | None,
     observations: DataFrame,
@@ -44,106 +125,9 @@ def frequency(
 ) -> DataFrame:
     """Per variant key: VN (covered pool), VC (support sum), VF (=VC/VN).
 
-    variant_keys: distinct (chromosome, position, reference, observed);
-    None = annotate every key present in `observations` (the database-wide
-    frequency table), which skips the numerator's semi-join — one fewer
-    shuffle on the widest data.
-    selection: extra boolean Column over `samples` (the B3 expression DSL
-    compiles to this); None = all samples. Inactive samples never count.
+    The one-selection case of `frequencies`. selection: None = all samples.
+    split_zygosity adds vc_hom / vc_het.
     """
-    sel = samples.filter(F.col("active"))
-    if selection is not None:
-        sel = sel.filter(selection)
-    sel = F.broadcast(sel.select("sample_id", "pool_size", "coverage_profile"))
-
-    if variant_keys is None:
-        # annotate-everything path (r14, guide §2.4): the key set IS the
-        # numerator's group-key set, so the keys-distinct + left join
-        # collapse into ONE aggregation over observations with a flagged
-        # broadcast left join against the selection — the selected-sample
-        # restriction moves from an inner join + outer re-join into the
-        # aggregate's conditions (vc for a key with no selected rows is a
-        # sum of zeros, identical to the old coalesce(NULL, 0); NULL
-        # sample_ids match nothing in either shape). Removes the
-        # keys-distinct exchange, the join re-exchange on the folded key
-        # prefix, and a whole SortMergeJoin from the flagship plan.
-        flagged = observations.join(
-            sel.select("sample_id").withColumn("_sel", F.lit(True)),
-            "sample_id",
-            "left",
-        )
-        num = flagged.groupBy(*VARIANT_KEY).agg(
-            F.coalesce(
-                F.sum(F.when(F.col("_sel"), F.col("support"))), F.lit(0)
-            ).alias("vc"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("_sel") & (F.col("zygosity") == "homozygous"),
-                        F.col("support"),
-                    )
-                ),
-                F.lit(0),
-            ).alias("vc_hom"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("_sel") & (F.col("zygosity") == "heterozygous"),
-                        F.col("support"),
-                    )
-                ),
-                F.lit(0),
-            ).alias("vc_het"),
-        )
-        keyed_num = num
-    else:
-        keys = variant_keys.select(*VARIANT_KEY).distinct()
-        restricted = observations.join(sel.select("sample_id"), "sample_id").join(
-            keys, VARIANT_KEY, "left_semi"
-        )
-        num = restricted.groupBy(*VARIANT_KEY).agg(
-            F.sum("support").alias("vc"),
-            F.sum(F.when(F.col("zygosity") == "homozygous", F.col("support")).otherwise(F.lit(0))).alias("vc_hom"),
-            F.sum(F.when(F.col("zygosity") == "heterozygous", F.col("support")).otherwise(F.lit(0))).alias("vc_het"),
-        )
-        keyed_num = keys.join(num, VARIANT_KEY, "left")
-
-    # ---- denominator part 1: covered samples via binned interval join ----
-    loci = keyed_num.select("chromosome", "position").distinct()
-    covered = (
-        interval_join(
-            loci,
-            regions.join(sel.filter(F.col("coverage_profile")).select("sample_id"), "sample_id")
-            .select("sample_id", "chromosome", "begin", "end"),
-            strategy="binned",  # pinned: regions scale with samples×genome
-        )
-        # overlapping regions of one sample count once (C3 semi-join shape)
-        .select("chromosome", "position", "sample_id")
-        .distinct()
-        .join(sel, "sample_id")
-        .groupBy("chromosome", "position")
-        .agg(F.sum("pool_size").alias("vn_covered"))
-    )
-
-    # ---- denominator part 2: no-coverage-profile samples count everywhere --
-    uncond = sel.filter(~F.col("coverage_profile")).agg(
-        F.coalesce(F.sum("pool_size"), F.lit(0)).alias("vn_uncond")
-    )
-
-    out = (
-        keyed_num
-        .join(covered, ["chromosome", "position"], "left")
-        .crossJoin(F.broadcast(uncond))
-        .withColumn("vn", F.coalesce(F.col("vn_covered"), F.lit(0)) + F.col("vn_uncond"))
-        .withColumn("vc", F.coalesce(F.col("vc"), F.lit(0)))
-        .withColumn("vc_hom", F.coalesce(F.col("vc_hom"), F.lit(0)))
-        .withColumn("vc_het", F.coalesce(F.col("vc_het"), F.lit(0)))
-        .withColumn(
-            "vf",
-            F.when(F.col("vn") > 0, F.col("vc") / F.col("vn")).otherwise(F.lit(0.0)),
-        )
-    )
-    cols = [*VARIANT_KEY, "vn", "vc", "vf"]
-    if split_zygosity:
-        cols += ["vc_hom", "vc_het"]
-    return out.select(*cols)
+    sel = F.lit(True) if selection is None else selection
+    out = frequencies(variant_keys, observations, regions, samples, {"": sel})
+    return out.select(*VARIANT_KEY, "vn", "vc", "vf", *(["vc_hom", "vc_het"] if split_zygosity else []))

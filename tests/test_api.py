@@ -70,3 +70,110 @@ def test_full_lifecycle(spark, tmp_path):
     by_pos = {r.position: r for r in ann}
     assert by_pos[100].ALL_vn == 2 and by_pos[100].PUB_vn == 1
     assert by_pos[300].ALL_vf == 1.0
+
+
+def _declared_types(ddl: str) -> dict[str, str]:
+    from pyspark.sql.types import StructType
+
+    return {f.name: f.dataType.simpleString() for f in StructType.fromDDL(ddl).fields}
+
+
+def test_warehouse_without_fact_files_reads_empty(spark, tmp_path):
+    """A header-only VCF, a 0-byte BED and a track-only BED import 0 rows
+    and leave fact directories without data files; the warehouse still
+    answers queries, and the checksum guard still holds."""
+    wh = VardaWarehouse(spark, str(tmp_path / "wh"))
+    vcf = tmp_path / "header_only.vcf"
+    vcf.write_text(VCF_A.split("chr1\t")[0])
+    empty_bed, track_bed = tmp_path / "empty.bed", tmp_path / "track.bed"
+    empty_bed.write_text("")
+    track_bed.write_text('track name="empty"\n')
+
+    sa, sb = wh.create_sample("A", public=True), wh.create_sample("B")
+    assert wh.import_variation(sa, str(vcf)) == 0
+    assert wh.import_coverage(sa, str(empty_bed)) == 0
+    assert wh.import_coverage(sb, str(track_bed)) == 0
+    with pytest.raises(DuplicateImportError):
+        wh.import_variation(sb, str(vcf))
+    with pytest.raises(DuplicateImportError):
+        wh.import_coverage(sb, str(empty_bed))
+    wh.activate_sample(sa)
+    wh.activate_sample(sb)
+
+    assert wh.observations().count() == 0 and wh.regions().count() == 0
+    assert wh.frequency().collect() == []
+    assert wh.annotate(str(vcf), {"ALL": "*"}).collect() == []
+    query = tmp_path / "query.vcf"
+    query.write_text(VCF_A)
+    ann = {r.position: (r.ALL_vn, r.ALL_vf) for r in wh.annotate(str(query), {"ALL": "*"}).collect()}
+    assert ann == {100: (0, 0.0), 300: (0, 0.0)}
+
+
+def test_numeric_chromosomes_read_back_as_declared_types(spark, tmp_path):
+    """chr1/chr2 normalize to "1"/"2"; partition discovery must not turn
+    the chromosome column into an int."""
+    from varda_spark.api import _OBS_SCHEMA, _REGION_SCHEMA, _SAMPLE_SCHEMA
+
+    wh = VardaWarehouse(spark, str(tmp_path / "wh"))
+    vcf, bed = tmp_path / "a.vcf", tmp_path / "a.bed"
+    vcf.write_text(VCF_A + "chr2\t500\t.\tG\tA\t50\tPASS\t.\tGT\t0/1\n")
+    bed.write_text(BED_A + "chr2\t400\t600\n")
+    sid = wh.create_sample("A")
+    wh.import_variation(sid, str(vcf))
+    wh.import_coverage(sid, str(bed))
+    wh.activate_sample(sid)
+
+    for df, ddl in [
+        (wh.observations(), _OBS_SCHEMA),
+        (wh.regions(), _REGION_SCHEMA),
+        (wh.samples(), _SAMPLE_SCHEMA),
+    ]:
+        assert dict(df.dtypes) == _declared_types(ddl)
+    freq = wh.frequency()
+    assert dict(freq.dtypes)["chromosome"] == "string"
+    assert sorted(r.chromosome for r in freq.collect()) == ["1", "1", "2"]
+
+
+def test_local_table_plans_in_the_jvm(spark):
+    from varda_spark.api import _MANIFEST_SCHEMA
+    from varda_spark.session import local_table
+
+    empty = local_table(spark, [], _MANIFEST_SCHEMA)
+    one = local_table(spark, [dict(checksum="c", kind="vcf", sample_id=7)], _MANIFEST_SCHEMA)
+    for df in (empty, one):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        assert dict(df.dtypes) == _declared_types(_MANIFEST_SCHEMA)
+    assert empty.collect() == [] and [tuple(r) for r in one.collect()] == [("c", "vcf", 7)]
+
+
+def test_lifecycle_job_budget(spark, tmp_path):
+    """create → import → activate for two seeded samples: tiny tables stay
+    in the JVM, reads carry their schema, and imports count while writing,
+    so the whole ingest runs few Spark jobs. Each import still returns the
+    row count of its input."""
+    from perfbench import gen
+    from varda_spark.sources.bed import read_bed
+    from varda_spark.sources.vcf import read_vcf
+
+    inputs = gen.generate(str(tmp_path / "in"), 1, n_samples=2, n_sites=300)
+    wh = VardaWarehouse(spark, str(tmp_path / "wh"))
+    sc = spark.sparkContext
+    group = f"lifecycle-budget-{id(wh)}"
+    sc.setJobGroup(group, "lifecycle job budget")
+    try:
+        counts = []
+        for s in inputs.samples:
+            sid = wh.create_sample(s.name, public=s.public)
+            counts.append((wh.import_variation(sid, s.vcf), read_vcf, s.vcf))
+            if s.bed:
+                counts.append((wh.import_coverage(sid, s.bed), read_bed, s.bed))
+            wh.activate_sample(sid)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert any(s.bed for s in inputs.samples)
+    assert jobs <= 20, jobs
+    for n, reader, path in counts:
+        assert n == reader(spark, path).count() > 0

@@ -12,6 +12,15 @@ Warehouse layout under ``root/``:
   regions/        fact, partitioned by chromosome
   manifest/       (checksum, kind, sample_id) — duplicate-import guard
 
+Every table is read with its declared schema (``_SAMPLE_SCHEMA`` …), so a
+read launches no schema-inference job, a numeric-only ``chromosome``
+partition stays a string, and a table holding no data files yet (a
+header-only VCF's import) reads as empty. The tiny driver-side rows — a new
+sample, a manifest entry, a table not yet on disk — are JVM-local tables
+(``session.local_table``), so no job starts Python workers, and an import
+counts its rows with an ``Observation`` during its write instead of parsing
+the input a second time.
+
 Scale notes: facts are append-only per import (one atomic parquet write
 each); the tiny dimensions rewrite via merge_upsert. Frequency/annotation
 read whatever imports have landed — the same decoupling varda gets from
@@ -23,12 +32,13 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from varda_spark.annotate import annotate_keys
 from varda_spark.expressions import compile_selection
 from varda_spark.frequency import frequency
 from varda_spark.operators.merge import merge_upsert
+from varda_spark.session import local_table
 from varda_spark.sources.bed import read_bed
 from varda_spark.sources.vcf import read_vcf
 
@@ -60,8 +70,8 @@ class VardaWarehouse:
     def _read(self, name: str, schema: str) -> DataFrame:
         path = self._path(name)
         if not os.path.exists(path):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
+            return local_table(self.spark, [], schema)
+        return self.spark.read.schema(schema).parquet(path)
 
     def _overwrite_dim(self, name: str, df: DataFrame) -> None:
         """Directory-swap rewrite of a (tiny) dimension.
@@ -100,12 +110,13 @@ class VardaWarehouse:
         name twice raises (names are the user-facing key, as in the
         reference's one-task-per-sample REST lifecycle)."""
         cur = self.samples()
-        if cur.filter(F.col("name") == name).limit(1).count() > 0:
+        if not cur.filter(F.col("name") == name).isEmpty():
             raise ValueError(f"sample name {name!r} already exists")
         sample_id = int.from_bytes(hashlib.sha1(name.encode()).digest()[:8], "big") >> 2
-        row = self.spark.createDataFrame(
-            [Row(sample_id=sample_id, name=name, pool_size=pool_size,
-                 coverage_profile=False, public=public, active=False, version=0)],
+        row = local_table(
+            self.spark,
+            [dict(sample_id=sample_id, name=name, pool_size=pool_size,
+                  coverage_profile=False, public=public, active=False, version=0)],
             _SAMPLE_SCHEMA,
         )
         self._overwrite_dim("samples", cur.unionByName(row))
@@ -120,17 +131,27 @@ class VardaWarehouse:
                 h.update(chunk)
         digest = h.hexdigest()
         manifest = self._read("manifest", _MANIFEST_SCHEMA)
-        if manifest.filter(F.col("checksum") == digest).limit(1).count() > 0:
+        if not manifest.filter(F.col("checksum") == digest).isEmpty():
             raise DuplicateImportError(f"{kind} content {digest} already imported")
         return digest
 
     def _record_import(self, digest: str, kind: str, sample_id: int) -> None:
         # recorded only AFTER the fact write lands — a failed import must
         # not burn its checksum (the re-import would be rejected forever)
-        entry = self.spark.createDataFrame(
-            [Row(checksum=digest, kind=kind, sample_id=sample_id)], _MANIFEST_SCHEMA
+        entry = local_table(
+            self.spark, [dict(checksum=digest, kind=kind, sample_id=sample_id)], _MANIFEST_SCHEMA
         )
         entry.write.mode("append").parquet(self._path("manifest"))
+
+    def _append_fact(self, name: str, df: DataFrame, digest: str, kind: str, sample_id: int) -> int:
+        """Append one import's rows to a fact table, then record its
+        checksum; returns the row count, observed during the write."""
+        rows = Observation()
+        df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("append").partitionBy(
+            "chromosome"
+        ).parquet(self._path(name))
+        self._record_import(digest, kind, sample_id)
+        return rows.get["n"]
 
     def import_variation(self, sample_id: int, vcf_path: str) -> int:
         """VCF → observations for this sample (per-ALT/per-sample decompose,
@@ -138,18 +159,15 @@ class VardaWarehouse:
         number of observation rows this import added."""
         digest = self._check_duplicate(vcf_path, "vcf")
         obs = read_vcf(self.spark, vcf_path).withColumn("sample_id", F.lit(sample_id).cast("long"))
-        obs.write.mode("append").partitionBy("chromosome").parquet(self._path("observations"))
-        self._record_import(digest, "vcf", sample_id)
-        return obs.count()
+        return self._append_fact("observations", obs, digest, "vcf", sample_id)
 
     def import_coverage(self, sample_id: int, bed_path: str) -> int:
         """BED → regions; flips the sample's coverage_profile flag."""
         digest = self._check_duplicate(bed_path, "bed")
         reg = read_bed(self.spark, bed_path).withColumn("sample_id", F.lit(sample_id).cast("long"))
-        reg.write.mode("append").partitionBy("chromosome").parquet(self._path("regions"))
-        self._record_import(digest, "bed", sample_id)
+        n = self._append_fact("regions", reg, digest, "bed", sample_id)
         self._set_sample_flag(sample_id, "coverage_profile", True)
-        return reg.count()
+        return n
 
     def activate_sample(self, sample_id: int) -> None:
         """Only activated samples count in any frequency (varda semantics)."""

@@ -4,13 +4,19 @@ At 100 TB on a real cluster the same knobs apply — AQE coalesces /
 re-splits shuffle partitions at runtime, so ``spark.sql.shuffle.partitions``
 is an upper bound, not a hand-tuned constant; skew-join handling and
 broadcast selection are delegated to AQE rather than hard-coded.
+
+``local_table`` builds the tiny driver-side tables (dimension rows, a
+manifest entry) that must not cost a Python-worker job.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # Session-level confs that must also be applied to an externally provided
 # session (e.g. the verify driver's) before reading our tables.
@@ -63,3 +69,16 @@ def get_spark(app_name: str = "varda_spark", *, shuffle_partitions: int | None =
     for k, v in RUNTIME_CONFS.items():
         b = b.config(k, v)
     return configure(b.getOrCreate())
+
+
+def local_table(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
+    """A tiny driver-side table (dimension rows, a manifest entry, a text
+    header) as a JVM ``LocalTableScan``.
+
+    ``createDataFrame`` over Python rows plans as ``Scan ExistingRDD`` of a
+    Python RDD, so every job touching it starts Python-worker tasks; an
+    Arrow table is shipped to the JVM once and planned as a local relation,
+    which the optimizer can even evaluate without a job."""
+    struct = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, struct)

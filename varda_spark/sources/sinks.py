@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from varda_spark.session import local_table
+
 
 def write_observations(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Observation fact table: partition by chromosome, sort by position.
@@ -92,7 +94,7 @@ def write_annotated_vcf(lines: DataFrame, path: str, header_queries: list[str]) 
             f'##INFO=<ID={q}_VF,Number=1,Type=Float,Description="Variant frequency ({q})">'
         )
     header.append("#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO")
-    hdf = spark.createDataFrame([(h,) for h in header], ["value"])
+    hdf = local_table(spark, [{"value": h} for h in header], "value string")
     hdf.unionByName(lines).coalesce(1).write.mode("overwrite").text(path)
 
 

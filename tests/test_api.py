@@ -147,11 +147,25 @@ def test_local_table_plans_in_the_jvm(spark):
     assert empty.collect() == [] and [tuple(r) for r in one.collect()] == [("c", "vcf", 7)]
 
 
+def _jobs_of(sc, label: str, call):
+    """Run ``call()`` under its own job group; returns (result, jobs)."""
+    import uuid
+
+    group = f"{label}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, label)
+    try:
+        out = call()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_lifecycle_job_budget(spark, tmp_path):
-    """create → import → activate for two seeded samples: tiny tables stay
-    in the JVM, reads carry their schema, and imports count while writing,
-    so the whole ingest runs few Spark jobs. Each import still returns the
-    row count of its input."""
+    """create → import → activate for two seeded samples: the sample
+    dimension and the manifest are read and written on the driver, so
+    create/activate launch no Spark job and each import only its fact
+    write. Each import still returns the row count of its input."""
     from perfbench import gen
     from varda_spark.sources.bed import read_bed
     from varda_spark.sources.vcf import read_vcf
@@ -159,21 +173,91 @@ def test_lifecycle_job_budget(spark, tmp_path):
     inputs = gen.generate(str(tmp_path / "in"), 1, n_samples=2, n_sites=300)
     wh = VardaWarehouse(spark, str(tmp_path / "wh"))
     sc = spark.sparkContext
-    group = f"lifecycle-budget-{id(wh)}"
-    sc.setJobGroup(group, "lifecycle job budget")
-    try:
-        counts = []
-        for s in inputs.samples:
-            sid = wh.create_sample(s.name, public=s.public)
-            counts.append((wh.import_variation(sid, s.vcf), read_vcf, s.vcf))
-            if s.bed:
-                counts.append((wh.import_coverage(sid, s.bed), read_bed, s.bed))
-            wh.activate_sample(sid)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    counts, jobs = [], 0
+    for s in inputs.samples:
+        sid, n = _jobs_of(sc, "create", lambda: wh.create_sample(s.name, public=s.public))
+        assert n == 0, ("create_sample", n)
+        rows, n = _jobs_of(sc, "import_variation", lambda: wh.import_variation(sid, s.vcf))
+        counts.append((rows, read_vcf, s.vcf))
+        jobs += n
+        if s.bed:
+            rows, n = _jobs_of(sc, "import_coverage", lambda: wh.import_coverage(sid, s.bed))
+            counts.append((rows, read_bed, s.bed))
+            jobs += n
+        _, n = _jobs_of(sc, "activate", lambda: wh.activate_sample(sid))
+        assert n == 0, ("activate_sample", n)
     assert any(s.bed for s in inputs.samples)
-    assert jobs <= 20, jobs
+    assert jobs <= 3, jobs
     for n, reader, path in counts:
         assert n == reader(spark, path).count() > 0
+
+
+def test_crash_mid_swap_keeps_the_dimension(spark, tmp_path, monkeypatch):
+    """A process that dies between moving ``samples/`` aside and moving the
+    new copy in leaves only ``samples__old``. The next read must roll it
+    back: the old rows return, and their names stay taken."""
+    import os
+
+    wh = VardaWarehouse(spark, str(tmp_path / "wh"))
+    sa = wh.create_sample("A", public=True)
+    wh.activate_sample(sa)
+    before = [r.asDict() for r in wh.samples().collect()]
+
+    rename = os.rename
+
+    def crash_on_swap_in(src, dst):
+        if str(src).endswith("__new"):
+            raise OSError("simulated crash mid-swap")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_swap_in)
+    with pytest.raises(OSError):
+        wh.create_sample("B")
+    monkeypatch.undo()
+    assert not os.path.exists(tmp_path / "wh" / "samples")
+
+    assert [r.asDict() for r in wh.samples().collect()] == before
+    assert before[0]["active"] is True
+    with pytest.raises(ValueError):
+        wh.create_sample("A")
+    sb = wh.create_sample("B")
+    assert {r.sample_id: r.active for r in wh.samples().collect()} == {sa: True, sb: False}
+    assert sorted(os.listdir(tmp_path / "wh")) == ["samples"]
+
+
+def test_reads_dimensions_written_by_spark(spark, tmp_path):
+    """A warehouse whose ``samples/`` and ``manifest/`` were written by
+    Spark (snappy part files, ``_SUCCESS``, ``.crc``) reads back with the
+    same rows and declared types, keeps refusing its recorded checksums,
+    and accepts later updates that Spark can still read."""
+    import hashlib
+
+    from varda_spark.api import _MANIFEST_SCHEMA, _SAMPLE_SCHEMA
+    from varda_spark.session import local_table
+
+    root = tmp_path / "wh"
+    vcf = tmp_path / "a.vcf"
+    vcf.write_text(VCF_A)
+    sid = int.from_bytes(hashlib.sha1(b"A").digest()[:8], "big") >> 2
+    row = dict(sample_id=sid, name="A", pool_size=2, coverage_profile=False,
+               public=True, active=False, version=0)
+    local_table(spark, [row], _SAMPLE_SCHEMA).write.parquet(str(root / "samples"))
+    digest = hashlib.sha1(vcf.read_bytes()).hexdigest()
+    local_table(spark, [dict(checksum=digest, kind="vcf", sample_id=sid)], _MANIFEST_SCHEMA) \
+        .write.parquet(str(root / "manifest"))
+    assert "_SUCCESS" in {p.name for p in (root / "samples").iterdir()}
+
+    wh = VardaWarehouse(spark, str(root))
+    got = wh.samples()
+    assert [r.asDict() for r in got.collect()] == [row]
+    assert dict(got.dtypes) == _declared_types(_SAMPLE_SCHEMA)
+    with pytest.raises(DuplicateImportError):
+        wh.import_variation(sid, str(vcf))
+    with pytest.raises(ValueError):
+        wh.create_sample("A")
+
+    wh.activate_sample(sid)
+    assert [r.active for r in wh.samples().collect()] == [True]
+    on_disk = spark.read.parquet(str(root / "samples"))
+    assert [(r.name, r.active, r.version) for r in on_disk.collect()] == [("A", True, 1)]
+    assert dict(on_disk.dtypes) == _declared_types(_SAMPLE_SCHEMA)

@@ -87,14 +87,19 @@ def test_bucketed_agg_has_no_exchange(spark):
 
 
 def _annotate_scans(wh, vcf: str, queries: dict[str, str]) -> dict[str, int]:
-    """File scans per input in the annotate plan, dynamic-pruning subqueries
-    included. Each input is told apart by a column only it has."""
+    """Scans per input in the annotate plan, dynamic-pruning subqueries
+    included. The facts and the query VCF are file scans, each told apart
+    by a column only it has; the sample dimension is a driver-local table,
+    so its scans are the plan's ``LocalTableScan`` nodes, and no file scan
+    may read ``samples/`` (its ``active``/``pool_size`` columns)."""
     plan = wh.annotate(vcf, queries)._jdf.queryExecution().executedPlan().toString()
-    scans = [ln.split("FileScan ", 1)[1] for ln in plan.splitlines() if "FileScan " in ln]
+    lines = plan.splitlines()
+    scans = [ln.split("FileScan ", 1)[1] for ln in lines if "FileScan " in ln]
     cols = [s.split("]", 1)[0] for s in scans]
+    assert not any("active#" in c or "pool_size#" in c for c in cols), cols
     return {
         "query_vcf": sum(s.startswith("text") for s in scans),
-        "samples": sum("active#" in c for c in cols),
+        "samples": sum("LocalTableScan " in ln for ln in lines),
         "observations": sum("support#" in c for c in cols),
         "regions": sum("begin#" in c for c in cols),
     }

@@ -3,7 +3,7 @@ workflow (SURVEY §3 — create sample, import variation/coverage, activate,
 annotate) becomes method calls over a parquet warehouse. Every method
 delegates to the oracle-/pytest-verified building blocks; this module adds
 only the lifecycle glue: directory layout, the duplicate-import checksum
-guard (A7), sample-dimension upserts, and activation gating.
+guard (A7), sample-dimension updates, and activation gating.
 
 Warehouse layout under ``root/``:
   samples/        dimension (sample_id, name, pool_size, coverage_profile,
@@ -15,31 +15,41 @@ Warehouse layout under ``root/``:
 Every table is read with its declared schema (``_SAMPLE_SCHEMA`` …), so a
 read launches no schema-inference job, a numeric-only ``chromosome``
 partition stays a string, and a table holding no data files yet (a
-header-only VCF's import) reads as empty. The tiny driver-side rows — a new
-sample, a manifest entry, a table not yet on disk — are JVM-local tables
-(``session.local_table``), so no job starts Python workers, and an import
-counts its rows with an ``Observation`` during its write instead of parsing
-the input a second time.
+header-only VCF's import) reads as empty. An import counts its rows with an
+``Observation`` during its write instead of parsing the input a second time.
+
+``samples/`` and ``manifest/`` are one-row-per-call metadata (PostgreSQL row
+writes in the reference), so they never touch a Spark job: the driver reads
+and writes them with ``pyarrow.parquet`` in the declared types, as plain
+parquet directories that ``spark.read.parquet`` still reads. ``samples()``
+is a snapshot of the dimension taken at call time, handed to Spark as a
+JVM-local table (``session.local_table``); a later create/activate does not
+change a DataFrame already returned.
 
 Scale notes: facts are append-only per import (one atomic parquet write
-each); the tiny dimensions rewrite via merge_upsert. Frequency/annotation
-read whatever imports have landed — the same decoupling varda gets from
-PostgreSQL MVCC, without row-level updates.
+each); the sample dimension is rewritten whole by a directory swap, the
+manifest grows by one atomically renamed file per import. Frequency/
+annotation read whatever imports have landed — the same decoupling varda
+gets from PostgreSQL MVCC, without row-level updates.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from varda_spark.annotate import annotate_keys
 from varda_spark.expressions import compile_selection
 from varda_spark.frequency import frequency
-from varda_spark.operators.merge import merge_upsert
-from varda_spark.session import local_table
+from varda_spark.session import arrow_schema, local_table
 from varda_spark.sources.bed import read_bed
+from varda_spark.sources.sinks import recover_compaction
 from varda_spark.sources.vcf import read_vcf
 
 _SAMPLE_SCHEMA = (
@@ -73,22 +83,37 @@ class VardaWarehouse:
             return local_table(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(path)
 
-    def _overwrite_dim(self, name: str, df: DataFrame) -> None:
-        """Directory-swap rewrite of a (tiny) dimension.
+    def _rows(self, name: str, schema: str) -> list[dict]:
+        """A driver-side table's rows, read with pyarrow in the declared
+        types. A swap that crashed between its two renames is rolled back
+        first (``recover_compaction``), so a dimension never reads as
+        empty while its only complete copy sits in ``__old``."""
+        path = self._path(name)
+        if os.path.exists(path) or os.path.exists(path + "__old"):
+            recover_compaction(path)
+        if not os.path.exists(path):
+            return []
+        return pq.read_table(path, schema=arrow_schema(schema)).to_pylist()
 
-        Write ``__new``, move the live dir aside to ``__old``, move
-        ``__new`` in, then drop ``__old`` — a crash at any step leaves
-        either the old or the new complete directory on disk (the renames
-        are atomic on a local/posix filesystem; on object stores swap in a
-        manifest-pointer commit instead). Single-writer, like the rest of
-        the lifecycle (see class docstring)."""
-        import shutil
+    def _overwrite_dim(self, name: str, rows: list[dict], schema: str) -> None:
+        """Directory-swap rewrite of a (tiny) dimension from the driver.
 
+        Write the rows as one parquet file into ``__new``, move the live
+        dir aside to ``__old``, move ``__new`` in, then drop ``__old`` — a
+        crash at any step leaves either the old or the new complete
+        directory on disk (the renames are atomic on a local/posix
+        filesystem; on object stores swap in a manifest-pointer commit
+        instead). Callers read through ``_rows`` first, which rolls a
+        crashed swap back, so ``__old`` is never deleted before the live
+        dir is whole again. Single-writer, like the rest of the
+        lifecycle."""
         final = self._path(name)
         tmp, old = final + "__new", final + "__old"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        if os.path.exists(tmp):  # a write that crashed before its swap
+            shutil.rmtree(tmp)
+        os.makedirs(tmp)
+        table = pa.Table.from_pylist(rows, schema=arrow_schema(schema))
+        pq.write_table(table, f"{tmp}/part-00000.parquet")
         if os.path.exists(final):
             os.rename(final, old)
         os.rename(tmp, final)
@@ -97,7 +122,8 @@ class VardaWarehouse:
 
     # ---- lifecycle (varda REST §3) --------------------------------------
     def samples(self) -> DataFrame:
-        return self._read("samples", _SAMPLE_SCHEMA)
+        """The sample dimension as of this call (a driver-local snapshot)."""
+        return local_table(self.spark, self._rows("samples", _SAMPLE_SCHEMA), _SAMPLE_SCHEMA)
 
     def create_sample(
         self, name: str, *, pool_size: int = 1, public: bool = False
@@ -109,17 +135,13 @@ class VardaWarehouse:
         DIFFERENT samples can never mint the same id. Creating the same
         name twice raises (names are the user-facing key, as in the
         reference's one-task-per-sample REST lifecycle)."""
-        cur = self.samples()
-        if not cur.filter(F.col("name") == name).isEmpty():
+        rows = self._rows("samples", _SAMPLE_SCHEMA)
+        if any(r["name"] == name for r in rows):
             raise ValueError(f"sample name {name!r} already exists")
         sample_id = int.from_bytes(hashlib.sha1(name.encode()).digest()[:8], "big") >> 2
-        row = local_table(
-            self.spark,
-            [dict(sample_id=sample_id, name=name, pool_size=pool_size,
-                  coverage_profile=False, public=public, active=False, version=0)],
-            _SAMPLE_SCHEMA,
-        )
-        self._overwrite_dim("samples", cur.unionByName(row))
+        rows.append(dict(sample_id=sample_id, name=name, pool_size=pool_size,
+                         coverage_profile=False, public=public, active=False, version=0))
+        self._overwrite_dim("samples", rows, _SAMPLE_SCHEMA)
         return sample_id
 
     def _check_duplicate(self, path: str, kind: str) -> str:
@@ -130,18 +152,22 @@ class VardaWarehouse:
             for chunk in iter(lambda: fh.read(1 << 20), b""):
                 h.update(chunk)
         digest = h.hexdigest()
-        manifest = self._read("manifest", _MANIFEST_SCHEMA)
-        if not manifest.filter(F.col("checksum") == digest).isEmpty():
+        if any(r["checksum"] == digest for r in self._rows("manifest", _MANIFEST_SCHEMA)):
             raise DuplicateImportError(f"{kind} content {digest} already imported")
         return digest
 
     def _record_import(self, digest: str, kind: str, sample_id: int) -> None:
         # recorded only AFTER the fact write lands — a failed import must
-        # not burn its checksum (the re-import would be rejected forever)
-        entry = local_table(
-            self.spark, [dict(checksum=digest, kind=kind, sample_id=sample_id)], _MANIFEST_SCHEMA
-        )
-        entry.write.mode("append").parquet(self._path("manifest"))
+        # not burn its checksum (the re-import would be rejected forever).
+        # Readers skip dot-prefixed files, and the rename is atomic, so a
+        # crash never leaves a partial visible entry.
+        entry = [dict(checksum=digest, kind=kind, sample_id=sample_id)]
+        path = self._path("manifest")
+        os.makedirs(path, exist_ok=True)
+        part = f"part-{uuid.uuid4().hex}.parquet"
+        pq.write_table(pa.Table.from_pylist(entry, schema=arrow_schema(_MANIFEST_SCHEMA)),
+                       f"{path}/.{part}")
+        os.rename(f"{path}/.{part}", f"{path}/{part}")
 
     def _append_fact(self, name: str, df: DataFrame, digest: str, kind: str, sample_id: int) -> int:
         """Append one import's rows to a fact table, then record its
@@ -174,12 +200,11 @@ class VardaWarehouse:
         self._set_sample_flag(sample_id, "active", True)
 
     def _set_sample_flag(self, sample_id: int, flag: str, value: bool) -> None:
-        cur = self.samples()
-        upd = cur.filter(F.col("sample_id") == sample_id).withColumn(
-            flag, F.lit(value)
-        ).withColumn("version", F.col("version") + 1)
-        merged = merge_upsert(cur, upd, ["sample_id"])
-        self._overwrite_dim("samples", merged)
+        rows = self._rows("samples", _SAMPLE_SCHEMA)
+        for r in rows:
+            if r["sample_id"] == sample_id:
+                r[flag], r["version"] = value, r["version"] + 1
+        self._overwrite_dim("samples", rows, _SAMPLE_SCHEMA)
 
     # ---- queries ---------------------------------------------------------
     def observations(self) -> DataFrame:

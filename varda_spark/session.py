@@ -11,6 +11,7 @@ manifest entry) that must not cost a Python-worker job.
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pyarrow as pa
@@ -71,6 +72,13 @@ def get_spark(app_name: str = "varda_spark", *, shuffle_partitions: int | None =
     return configure(b.getOrCreate())
 
 
+@functools.lru_cache(maxsize=None)
+def arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema of a Spark DDL schema string, for tables the driver
+    builds or reads and writes with pyarrow in the declared types."""
+    return to_arrow_schema(StructType.fromDDL(ddl))
+
+
 def local_table(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
     """A tiny driver-side table (dimension rows, a manifest entry, a text
     header) as a JVM ``LocalTableScan``.
@@ -79,6 +87,5 @@ def local_table(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
     Python RDD, so every job touching it starts Python-worker tasks; an
     Arrow table is shipped to the JVM once and planned as a local relation,
     which the optimizer can even evaluate without a job."""
-    struct = StructType.fromDDL(ddl)
-    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(struct))
-    return spark.createDataFrame(table, struct)
+    table = pa.Table.from_pylist(rows, schema=arrow_schema(ddl))
+    return spark.createDataFrame(table, StructType.fromDDL(ddl))

@@ -172,13 +172,15 @@ def compact_warehouse(
 
 
 def recover_compaction(path: str) -> str:
-    """Crash recovery for a mid-swap ``compact_warehouse``.
+    """Crash recovery for a mid-swap ``compact_warehouse`` or
+    ``VardaWarehouse._overwrite_dim``.
 
     Idempotent: if the live dir exists, drop any ``__new``/``__old``
     leftovers (the swap either never started or fully finished); if only
     ``__old`` exists (crash between the two renames), rename it back.
-    Returns a short description of what was done. Callers run this at
-    warehouse open; compact_warehouse itself also clears leftovers.
+    Returns a short description of what was done. ``VardaWarehouse`` runs
+    this before it reads a dimension; compact_warehouse itself also clears
+    leftovers.
     """
     import os
     import shutil

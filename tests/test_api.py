@@ -261,3 +261,25 @@ def test_reads_dimensions_written_by_spark(spark, tmp_path):
     on_disk = spark.read.parquet(str(root / "samples"))
     assert [(r.name, r.active, r.version) for r in on_disk.collect()] == [("A", True, 1)]
     assert dict(on_disk.dtypes) == _declared_types(_SAMPLE_SCHEMA)
+
+
+def test_unknown_sample_id_is_refused(spark, tmp_path):
+    """An id that was never created raises before anything is written: no
+    fact row lands and the file's checksum is not used up."""
+    wh = VardaWarehouse(spark, str(tmp_path / "wh"))
+    vcf, bed = tmp_path / "a.vcf", tmp_path / "a.bed"
+    vcf.write_text(VCF_A)
+    bed.write_text(BED_A)
+
+    with pytest.raises(KeyError, match="12345"):
+        wh.activate_sample(12345)
+    with pytest.raises(KeyError, match="999"):
+        wh.import_variation(999, str(vcf))
+    with pytest.raises(KeyError, match="999"):
+        wh.import_coverage(999, str(bed))
+    assert wh.observations().count() == 0 and wh.regions().count() == 0
+    assert wh.samples().count() == 0
+
+    sid = wh.create_sample("A")
+    assert wh.import_variation(sid, str(vcf)) == 2
+    assert wh.import_coverage(sid, str(bed)) == 1

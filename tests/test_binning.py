@@ -38,7 +38,7 @@ def test_binned_equals_naive(spark):
         idf = spark.createDataFrame(ivs)
         binned = {
             (r.pid, r.rid)
-            for r in interval_join(pdf, idf, ival_chrom="chromosome", strategy="binned").select("pid", "rid").collect()
+            for r in interval_join(pdf, idf).select("pid", "rid").collect()
         }
         naive = {
             (r.pid, r.rid)
@@ -140,38 +140,22 @@ def test_nearest_interval_random_vs_bruteforce(spark):
         assert got[(pos, pid)] == (best[1], best[0]), (pos, pid)
 
 
-def test_auto_strategy_picks_plan_by_size(spark, tmp_path):
-    """strategy='auto' chooses by Catalyst's size estimate vs the session
-    broadcast threshold: small interval side → broadcast theta join
-    (BroadcastNestedLoopJoin), large side (threshold shrunk) → binned
-    equi-join (no BNLJ, a real equi-join on (chromosome, bin)).
+def test_left_join_keeps_every_point(spark):
+    """how="left" against a driver-local interval side keeps every point;
+    its rows with an interval are exactly the naive join's pairs, and a
+    point gets NULL rows only for bin levels without a match (at most 5)."""
+    from collections import Counter
 
-    Sides are parquet-backed: file scans carry real size statistics; a
-    local RDD reports unknown (huge) size, and auto correctly treats
-    unknown as too-big-to-broadcast (the safe default)."""
-    pts, ivs = _random_case(7)
-    spark.createDataFrame(pts).write.parquet(str(tmp_path / "pts"))
-    spark.createDataFrame(ivs).write.parquet(str(tmp_path / "ivs"))
-    pdf = spark.read.parquet(str(tmp_path / "pts"))
-    idf = spark.read.parquet(str(tmp_path / "ivs"))
+    from varda_spark.session import local_table
 
-    auto_small = interval_join(pdf, idf, ival_chrom="chromosome", strategy="auto")
-    plan_small = auto_small._jdf.queryExecution().executedPlan().toString()
-    # theta join with the broadcast side small: Spark plans a broadcast
-    # join (BroadcastHashJoin on the chromosome equi-key with the range
-    # residual, or BNLJ if no equi component) — either way no shuffle
-    assert "Broadcast" in plan_small and "SortMergeJoin" not in plan_small
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64")
-        auto_big = interval_join(pdf, idf, ival_chrom="chromosome", strategy="auto")
-        plan_big = auto_big._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" not in plan_big
-        assert "CartesianProduct" not in plan_big
-        # regime equivalence: both strategies produce identical pairs
-        small_pairs = {(r.pid, r.rid) for r in auto_small.select("pid", "rid").collect()}
-        big_pairs = {(r.pid, r.rid) for r in auto_big.select("pid", "rid").collect()}
-        assert small_pairs == big_pairs
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    pts, ivs = _random_case(4)
+    pdf = spark.createDataFrame(pts)
+    idf = local_table(
+        spark, [r.asDict() for r in ivs], "rid long, chromosome string, begin long, end long"
+    )
+    rows = interval_join(pdf, idf, how="left").select("pid", "rid").collect()
+    assert {r.pid for r in rows} == {p.pid for p in pts}
+    naive = {(r.pid, r.rid) for r in interval_join_naive(pdf, idf).select("pid", "rid").collect()}
+    matched = [(r.pid, r.rid) for r in rows if r.rid is not None]
+    assert sorted(matched) == sorted(naive)
+    assert max(Counter(r.pid for r in rows if r.rid is None).values()) <= 5

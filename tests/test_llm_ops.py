@@ -155,15 +155,17 @@ def test_connected_components_transitive(spark):
     assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 8: 8, 9: 8}
 
 
-def test_connected_components_long_chain(spark):
-    """Pointer jumping: a 200-node path converges in ~log2(200) rounds —
-    far under the default max_iter — and every node reaches component 0."""
-    from varda_spark.operators.dedup import connected_components
+def test_connected_components_long_chain(spark, monkeypatch):
+    """The distributed star rounds label a 200-node path within 12 rounds
+    (a Python replay of the algorithm needs 9), every node component 0."""
+    from varda_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "_MAX_ITER", 12)
+    monkeypatch.setattr(dedup, "_LOCAL_THRESHOLD", 0)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], ["doc_a", "doc_b"]
     )
-    got = connected_components(pairs, max_iter=12).toPandas()
+    got = dedup.connected_components(pairs).toPandas()
     assert (got["comp"] == 0).all() and len(got) == 201
 
 
@@ -308,31 +310,38 @@ def test_kmeans_centroid_persistence_bit_equals_refit(spark, tmp_path):
     assert t_refit.equals(t_loaded)
 
 
-def test_cc_stars_equals_label_propagation(spark):
-    """Large-star/small-star CC must produce the identical component table
-    as min-label propagation on random graphs and a long chain — on BOTH
-    the distributed star rounds (local_threshold=0 forces them) and the
-    driver-side union-find fast path (the default at these sizes)."""
+def _cc_both_paths(monkeypatch, pairs) -> tuple[dict, dict]:
+    """connected_components on the union-find fast path (the default at
+    test sizes) and on the distributed star rounds (threshold 0)."""
+    from varda_spark.operators import dedup
+
+    fast = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_LOCAL_THRESHOLD", 0)
+        dist = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
+    return fast, dist
+
+
+def test_cc_random_graphs_and_chain_both_paths(spark, monkeypatch):
+    """Both paths of connected_components give the component table of a
+    pure-Python union-find on random graphs, and label every node of a
+    120-edge chain with 0 within 15 rounds."""
     import random
 
-    from varda_spark.operators.dedup import cc_stars, connected_components
+    from varda_spark.operators import dedup
 
     for seed in (1, 2):
         rng = random.Random(seed)
         pairs = [(rng.randint(0, 40), rng.randint(0, 40)) for _ in range(60)]
         pairs = [(x, y) for x, y in pairs if x != y]
-        df = spark.createDataFrame(pairs, ["doc_a", "doc_b"])
-        fast = {r.id: r.comp for r in cc_stars(df).collect()}
-        stars = {r.id: r.comp for r in cc_stars(df, local_threshold=0).collect()}
-        want = {
-            r.id: r.comp
-            for r in connected_components(df, local_threshold=0).collect()
-        }
+        want = dict(dedup._union_find_local(pairs))
+        fast, dist = _cc_both_paths(monkeypatch, spark.createDataFrame(pairs, ["doc_a", "doc_b"]))
         assert fast == want
-        assert stars == want
+        assert dist == want
+    monkeypatch.setattr(dedup, "_MAX_ITER", 15)
     chain = spark.createDataFrame([(i, i + 1) for i in range(120)], ["doc_a", "doc_b"])
-    got = {r.id: r.comp for r in cc_stars(chain, max_iter=15, local_threshold=0).collect()}
-    assert all(v == 0 for v in got.values()) and len(got) == 121
+    for got in _cc_both_paths(monkeypatch, chain):
+        assert all(v == 0 for v in got.values()) and len(got) == 121
 
 
 def test_temperature_sampling_flattens_mix(spark):
@@ -473,12 +482,11 @@ def test_paragraph_dedup_kills_repeats_keeps_first(spark):
     assert "Shared boilerplate line" not in out2[2].clean_text
 
 
-def test_cc_topologies_chain_star_islands(spark):
-    """Both CC implementations (hybrid union-find/pointer-jumping and
-    large-star/small-star) agree with ground truth on adversarial
-    topologies: a 64-long chain (forces pointer jumping past the
-    neighbor rounds), a hub star, two islands, and an isolated pair."""
-    from varda_spark.operators.dedup import cc_stars, connected_components
+def test_cc_topologies_chain_star_islands(spark, monkeypatch):
+    """Both paths of connected_components (union-find fast path and the
+    large-star/small-star rounds) agree with ground truth on adversarial
+    topologies: a 64-long chain, a hub star, two islands, and an isolated
+    pair."""
 
     chain = [(i, i + 1) for i in range(100, 164)]          # one long path
     star = [(500, x) for x in range(501, 540)]              # hub
@@ -503,12 +511,7 @@ def test_cc_topologies_chain_star_islands(spark):
             want[hi] = lo
     truth = {x: find(x) for x in want}
 
-    for impl in (
-        lambda p: connected_components(p),                  # union-find path
-        lambda p: connected_components(p, local_threshold=0),  # distributed path
-        lambda p: cc_stars(p),
-    ):
-        got = {r.id: r.comp for r in impl(pairs).collect()}
+    for got in _cc_both_paths(monkeypatch, pairs):
         assert got == truth
 
 

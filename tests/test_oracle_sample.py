@@ -42,6 +42,8 @@ SAMPLE = [
     "agg_pow2_hist",     # bitlen
     "sim_hamming_topk",  # dsign_words, _OSIGN_WORDS
     "scan_dpp",          # _scratch_table
+    # the interval join, clustering and temp-view helpers
+    "join_interval", "join_nearest", "dedup_stars", "dedup_pipeline_v2", "sql_api",
 ]
 
 

@@ -11,15 +11,10 @@ with the operator.
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from varda_spark.catalog import _bt_mm_local
-from varda_spark.operators import similarity
-from varda_spark.operators.dedup import (
-    _union_find_local,
-    cc_stars,
-    connected_components,
-)
+from varda_spark.operators import dedup, similarity
+from varda_spark.operators.dedup import _union_find_local, connected_components
 from varda_spark.operators.similarity import (
     kcenter_greedy,
     kmeans_fit,
@@ -75,12 +70,12 @@ def test_union_find_local_messy_edges():
     assert got == _cc_expected()
 
 
-@pytest.mark.parametrize("fn", [connected_components, cc_stars])
-def test_cc_local_vs_distributed_identical(spark, fn):
+def test_cc_local_vs_distributed_identical(spark, monkeypatch):
     pairs = spark.createDataFrame(_MESSY_EDGES, "doc_a bigint, doc_b bigint")
-    local = sorted(map(tuple, fn(pairs).collect()))
-    # local_threshold=0 forces the pre-r14 distributed loop on the same data
-    dist = sorted(map(tuple, fn(pairs, local_threshold=0).collect()))
+    local = sorted(map(tuple, connected_components(pairs).collect()))
+    # threshold 0 forces the distributed star rounds on the same data
+    monkeypatch.setattr(dedup, "_LOCAL_THRESHOLD", 0)
+    dist = sorted(map(tuple, connected_components(pairs).collect()))
     assert local == dist == _cc_expected()
 
 

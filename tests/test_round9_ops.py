@@ -387,7 +387,7 @@ def test_interval_joins_bruteforce_at_bin_boundaries(spark):
 
     got_pt = {
         (r.position, r.p_partkey, r.sample_key)
-        for r in interval_join(pt_df, iv_df, strategy="binned").collect()
+        for r in interval_join(pt_df, iv_df).collect()
     }
     want_pt = {
         (p, pid, key)

@@ -144,6 +144,15 @@ class VardaWarehouse:
         self._overwrite_dim("samples", rows, _SAMPLE_SCHEMA)
         return sample_id
 
+    def _sample_rows(self, sample_id: int) -> list[dict]:
+        """The sample dimension's rows; raises ``KeyError`` if
+        ``sample_id`` is not among them, before the caller writes
+        anything."""
+        rows = self._rows("samples", _SAMPLE_SCHEMA)
+        if not any(r["sample_id"] == sample_id for r in rows):
+            raise KeyError(f"unknown sample id {sample_id}")
+        return rows
+
     def _check_duplicate(self, path: str, kind: str) -> str:
         # stream the digest in 1 MiB chunks — a multi-GB VCF must not be
         # slurped into driver memory for a checksum
@@ -183,12 +192,14 @@ class VardaWarehouse:
         """VCF → observations for this sample (per-ALT/per-sample decompose,
         normalization, ref==alt guard all inside read_vcf). Returns the
         number of observation rows this import added."""
+        self._sample_rows(sample_id)
         digest = self._check_duplicate(vcf_path, "vcf")
         obs = read_vcf(self.spark, vcf_path).withColumn("sample_id", F.lit(sample_id).cast("long"))
         return self._append_fact("observations", obs, digest, "vcf", sample_id)
 
     def import_coverage(self, sample_id: int, bed_path: str) -> int:
         """BED → regions; flips the sample's coverage_profile flag."""
+        self._sample_rows(sample_id)
         digest = self._check_duplicate(bed_path, "bed")
         reg = read_bed(self.spark, bed_path).withColumn("sample_id", F.lit(sample_id).cast("long"))
         n = self._append_fact("regions", reg, digest, "bed", sample_id)
@@ -200,7 +211,7 @@ class VardaWarehouse:
         self._set_sample_flag(sample_id, "active", True)
 
     def _set_sample_flag(self, sample_id: int, flag: str, value: bool) -> None:
-        rows = self._rows("samples", _SAMPLE_SCHEMA)
+        rows = self._sample_rows(sample_id)
         for r in rows:
             if r["sample_id"] == sample_id:
                 r[flag], r["version"] = value, r["version"] + 1

@@ -88,7 +88,6 @@ def frequencies(
             num,
             covering.select("sample_id", "chromosome", "begin", "end", "pool_size", *flags),
             how="left",
-            strategy="binned",  # pinned: regions scale with samples×genome
         )
         # overlapping regions of one sample count once (C3 semi-join shape)
         .dropDuplicates([*VARIANT_KEY, "sample_id"])

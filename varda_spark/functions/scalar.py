@@ -23,17 +23,6 @@ def md5_digest(col: Column | str) -> Column:
     return F.md5(c.cast("binary"))
 
 
-def iso_week_fields(ts: Column | str) -> list[Column]:
-    """ISO8601-ish date parts used by the API serialization layer."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return [
-        F.year(c).cast("bigint").alias("year"),
-        F.month(c).cast("bigint").alias("month"),
-        F.dayofmonth(c).cast("bigint").alias("day"),
-        F.hour(c).cast("bigint").alias("hour"),
-    ]
-
-
 def json_int(col: Column | str, path: str) -> Column:
     """Extract an int field from a JSON string column (events.props)."""
     c = F.col(col) if isinstance(col, str) else col

@@ -42,8 +42,3 @@ def zscore_by_group(df: DataFrame, group: str, value: str) -> DataFrame:
         return pdf
 
     return df.groupBy(group).applyInPandas(_z, schema=schema)
-
-
-def explode_tokens_udtf(df: DataFrame, text: str = "text") -> DataFrame:
-    """UDTF shape = explode over an array-returning expression (no Python)."""
-    return df.select("*", F.explode(F.split(F.col(text), r"\s+")).alias("token"))

@@ -14,11 +14,14 @@ Scale design:
 - SimHash: per-token md5 bit-vote → 64-bit fingerprint; near-dups =
   fingerprints within Hamming distance d, found by band equi-join on
   16-bit chunks (d<=3 guarantees one identical chunk of 4).
+- clustering: connected_components, one algorithm — a counted driver-side
+  union-find for graphs up to _LOCAL_THRESHOLD edges, large-star/small-star
+  edge rewriting above it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from varda_spark.operators.text import tokens
 
@@ -308,13 +311,21 @@ def ngram_jaccard(
     return out.select("doc_a", "doc_b", "n_inter", "n_union", "jaccard_pct")
 
 
+# Edge count up to which connected_components labels the graph with a
+# driver-side union-find; a hard bound on the rows collected to the driver.
+_LOCAL_THRESHOLD = 200_000
+# Star rounds before connected_components gives up; the alternation
+# converges in O(log n) rounds.
+_MAX_ITER = 20
+
+
 def _union_find_local(uv: list) -> list:
     """Driver-side union-find over an already-bounded edge list.
 
     Union by MIN so every root label IS the component minimum — the same
-    output contract as the distributed loops. Shared by the small-graph
-    fast paths of connected_components and cc_stars; callers must have
-    COUNTED the edges against a threshold before collecting."""
+    output contract as the distributed loop. The small-graph fast path of
+    connected_components; the caller must have COUNTED the edges against
+    a threshold before collecting."""
     parent: dict = {}
 
     def find(x):
@@ -334,104 +345,116 @@ def _union_find_local(uv: list) -> list:
     return [(x, find(x)) for x in verts]
 
 
-def connected_components(
-    pairs: DataFrame,
-    a: str = "doc_a",
-    b: str = "doc_b",
-    max_iter: int = 30,
-    local_threshold: int = 200_000,
-) -> DataFrame:
-    """Near-dup pairs → cluster assignment: (id, component) with component =
-    the minimum doc id reachable through the pair graph. The canonical
-    survivor of each cluster is the row with id == component; everything
-    else is a removable duplicate.
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Near-dup pairs (doc_a, doc_b) → cluster assignment: (id, comp) with
+    comp = the minimum doc id reachable through the pair graph. The
+    canonical survivor of each cluster is the row with id == comp;
+    everything else is a removable duplicate.
 
     Small-graph fast path: LSH candidate PAIRS are orders of magnitude
     sparser than the corpus (banding only emits near-certain duplicates),
     so the pair list routinely fits on the driver even when the corpus
-    does not. When the materialized edge count is ≤ local_threshold
+    does not. When the materialized edge count is ≤ _LOCAL_THRESHOLD
     (≈ a few MB), a driver-side union-find labels the graph in one pass —
     no per-round shuffle joins, no driver/executor round-trips per
     iteration. The threshold is a hard driver-memory bound, counted
     BEFORE collecting; above it (100 TB corpora can emit billions of
-    pairs) the distributed loop below runs unchanged.
+    pairs) the distributed rounds below run.
 
-    Distributed path: min-label propagation WITH pointer jumping: each
-    round every vertex takes the min of (its label, its neighbors'
-    labels, its label's label — comp[comp[id]]). The shortcut term
-    doubles label-path lengths each round, so convergence is
-    O(log diameter) instead of O(diameter): a 10⁶-long chain needs ~20
-    rounds, not 10⁶. Each round is two shuffle joins + one min-aggregate,
-    with localCheckpoint() cutting the lineage so the plan does not grow
-    per round. Raises if max_iter rounds did not reach a fixpoint — a
-    silently-partial clustering must never ship. At 100 TB the same loop
-    holds; large-star/small-star (cc_stars below) additionally bounds
-    high-degree shuffle skew.
+    Distributed path: LARGE-STAR / SMALL-STAR alternation (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond"). Every round rewrites
+    EDGES instead of labels, so a hub's fan-out shrinks geometrically
+    rather than re-shuffling through one key each round.
+    large-star: every neighbor v > u re-attaches to m(u) = min(N(u)∪{u});
+    small-star: every neighbor v < u (plus u itself) re-attaches to m(u).
+    At the fixpoint edges form disjoint stars rooted at each component's
+    minimum id. Each phase is one grouped min + one join on canonicalized
+    (u < v) distinct edges, with localCheckpoint per round to cut lineage.
+    Raises if _MAX_ITER rounds did not reach a fixpoint — a
+    silently-partial clustering must never ship.
+
+    Why stars and not min-label propagation with pointer jumping: stars
+    needs few rounds whatever the order of ids along a path. On a chain of
+    20 hubs with its minimum id at the far end, and on a sparse random
+    graph (30k edges over 40k ids), label propagation needed 23 and 25
+    rounds and took 195 s to over 240 s on local[2]; stars needed 7 and
+    took 21–23 s. On shallow graphs label propagation was 1.2–2× faster
+    (CHANGES.md). Rounds must stay few: each round's checkpoint keeps the
+    size estimate of the plan it came from and the joins multiply it, so
+    past about 16 rounds the driver's time per round doubles.
     """
-    # Materialize the PROJECTED pair stream exactly once: the candidate
-    # DAG feeding `pairs` is the expensive part (LSH + verify), and every
-    # pre-r14 consumer — the union's two scans, the threshold count, the
-    # collect — replayed it. One narrow localCheckpoint up front means
-    # every later scan (either path) reads executor-local blocks.
-    P = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst")).localCheckpoint()
-    if local_threshold:
-        # bounded decision + fetch in ONE cheap job (reads the checkpoint,
-        # never more than threshold+1 rows on the driver)
-        rows = P.limit(local_threshold + 1).collect()
-        if len(rows) <= local_threshold:
-            # raw pairs, not the distinct symmetric closure: union-find is
-            # insensitive to duplicates, orientation and self-loops, and
-            # _union_find_local derives the vertex set itself — identical
-            # (id, comp) output with zero further Spark jobs.
-            out = _union_find_local([(r.src, r.dst) for r in rows])
-            return P.sparkSession.createDataFrame(
-                out,
-                schema=P.select(
-                    F.col("src").alias("id"), F.col("src").alias("comp")
-                ).schema,
-            )
-    edges = (
-        P.union(P.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    # One materialization of the expensive candidate/verify DAG feeding
+    # `pairs` (LSH + verify): every later scan — the threshold collect,
+    # the edge canonicalization, the vertex set — reads executor-local
+    # blocks instead of replaying it.
+    P = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).localCheckpoint()
+    # bounded decision + fetch in ONE cheap job (never more than
+    # threshold+1 rows on the driver)
+    rows = P.limit(_LOCAL_THRESHOLD + 1).collect()
+    if len(rows) <= _LOCAL_THRESHOLD:
+        # raw pairs: union-find ignores duplicates/orientation, keeps
+        # self-loop-only vertices as singletons, and derives the vertex
+        # set itself — identical (id, comp) output with zero further
+        # Spark jobs.
+        out = _union_find_local([(r.u, r.v) for r in rows])
+        return P.sparkSession.createDataFrame(
+            out,
+            schema=P.select(F.col("u").alias("id"), F.col("u").alias("comp")).schema,
+        )
+    E = (
+        P.filter(F.col("u") != F.col("v"))
+        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
         .distinct()
-        # the loop joins edges every round — materialize ONCE, or each round
-        # replays the whole candidate-generation lineage (measured 3× on
-        # the minhash pipeline)
         .localCheckpoint()
     )
-    comp = edges.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
-    for it in range(max_iter):
-        cand = comp.union(
-            edges.join(comp.withColumnRenamed("id", "src"), "src").select(
-                F.col("dst").alias("id"), "comp"
-            )
+    verts = (
+        P.select(F.col("u").alias("id"))
+        .union(P.select(F.col("v").alias("id")))
+        .distinct()
+    )
+
+    def _sym(edges: DataFrame) -> DataFrame:
+        return edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+    def _mins(sym: DataFrame) -> DataFrame:
+        return sym.groupBy("u").agg(F.least(F.col("u"), F.min("v")).alias("m"))
+
+    for _ in range(_MAX_ITER):
+        sym = _sym(E)
+        # large-star: (v, m(u)) for v ∈ N(u), v > u  — result is canonical
+        # (m ≤ u < v) by construction
+        e_ls = (
+            sym.filter(F.col("v") > F.col("u"))
+            .join(_mins(sym), "u")
+            .select(F.col("m").alias("u"), F.col("v").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
         )
-        if it >= 2:
-            # near-dup graphs are almost always shallow and converge in
-            # 1–3 neighbor rounds; pay for the shortcut join only when the
-            # graph has proven deeper than that
-            jump = (
-                comp.alias("a")
-                .join(
-                    comp.select(F.col("id").alias("comp"), F.col("comp").alias("cc")).alias("b"),
-                    "comp",
-                )
-                .select(F.col("a.id").alias("id"), F.col("cc").alias("comp"))
-            )
-            cand = cand.union(jump)
-        new = cand.groupBy("id").agg(F.min("comp").alias("comp")).localCheckpoint()
-        changed = (
-            new.alias("n")
-            .join(comp.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
+        # small-star: (v, m(u)) for v ∈ N(u) with v < u, plus u itself
+        sym2 = _sym(e_ls)
+        smaller = sym2.filter(F.col("v") < F.col("u"))
+        self_rows = sym2.select("u").distinct().withColumn("v", F.col("u"))
+        e_ss = (
+            smaller.union(self_rows)
+            .join(_mins(sym2), "u")
+            .filter(F.col("v") != F.col("m"))
+            .select(F.col("m").alias("u"), F.col("v").alias("v"))
+            .distinct()
+            .localCheckpoint()
         )
-        comp = new
-        if changed == 0:
-            return comp
+        same = (
+            e_ss.count() == E.count()
+            and e_ss.exceptAll(E).limit(1).count() == 0
+        )
+        E = e_ss
+        if same:
+            star = E.select(F.col("v").alias("id"), F.col("u").alias("comp"))
+            return verts.join(star, "id", "left").select(
+                "id", F.coalesce(F.col("comp"), F.col("id")).alias("comp")
+            )
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds; "
-        f"raise max_iter (log2(diameter) rounds suffice with pointer jumping)"
+        f"connected_components did not converge in {_MAX_ITER} rounds; the "
+        f"star alternation converges in O(log n) rounds — raise _MAX_ITER"
     )
 
 
@@ -477,108 +500,3 @@ def shingle_containment(
         "doc_a", "doc_b", F.col("n_inter").cast("bigint").alias("n_inter"), "containment_pct"
     )
 
-
-def cc_stars(
-    pairs: DataFrame,
-    a: str = "doc_a",
-    b: str = "doc_b",
-    max_iter: int = 20,
-    local_threshold: int = 200_000,
-) -> DataFrame:
-    """Connected components via LARGE-STAR / SMALL-STAR alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the degree-skew-safe alternative to plain label propagation: every
-    round rewrites EDGES instead of labels, so a hub's fan-out shrinks
-    geometrically rather than re-shuffling through one key each round.
-
-    large-star: every neighbor v > u re-attaches to m(u) = min(N(u)∪{u});
-    small-star: every neighbor v < u (plus u itself) re-attaches to m(u).
-    At the fixpoint edges form disjoint stars rooted at each component's
-    minimum id. Same output contract as connected_components: (id, comp),
-    comp = min reachable id; raises on non-convergence. Each phase is one
-    grouped min + one join on canonicalized (u < v) distinct edges, with
-    localCheckpoint per round to cut lineage.
-
-    Same small-graph fast path as connected_components: verified near-dup
-    EDGES are orders of magnitude sparser than the corpus, so when the
-    materialized edge count is ≤ local_threshold (counted BEFORE any
-    collect) a driver-side union-find replaces the per-round shuffle
-    alternation — at sf0.1 the verified graph is a few hundred edges and
-    the star rounds were the pipeline's single largest cost.
-    """
-    # One materialization of the expensive candidate/verify DAG feeding
-    # `pairs`: pre-r14 this checkpointed the canonicalized edges AND then
-    # recomputed the whole pairs DAG a second time through `verts` inside
-    # the returned plan (profiled as the single largest cost of
-    # dedup_pipeline_v2's final stage at sf0.1 — ~4.7 s of replay).
-    P = pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).localCheckpoint()
-    if local_threshold:
-        rows = P.limit(local_threshold + 1).collect()
-        if len(rows) <= local_threshold:
-            # raw pairs: union-find ignores duplicates/orientation, keeps
-            # self-loop-only vertices as singletons, and derives the
-            # vertex set itself — identical (id, comp) output with zero
-            # further Spark jobs (the old path paid a count, a collect
-            # AND a verts join that replayed the pair DAG).
-            out = _union_find_local([(r.u, r.v) for r in rows])
-            return P.sparkSession.createDataFrame(
-                out,
-                schema=P.select(
-                    F.col("u").alias("id"), F.col("u").alias("comp")
-                ).schema,
-            )
-    E = (
-        P.filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    verts = (
-        P.select(F.col("u").alias("id"))
-        .union(P.select(F.col("v").alias("id")))
-        .distinct()
-    )
-
-    def _sym(edges: DataFrame) -> DataFrame:
-        return edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-    def _mins(sym: DataFrame) -> DataFrame:
-        return sym.groupBy("u").agg(F.least(F.col("u"), F.min("v")).alias("m"))
-
-    for _ in range(max_iter):
-        sym = _sym(E)
-        # large-star: (v, m(u)) for v ∈ N(u), v > u  — result is canonical
-        # (m ≤ u < v) by construction
-        e_ls = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(_mins(sym), "u")
-            .select(F.col("m").alias("u"), F.col("v").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: (v, m(u)) for v ∈ N(u) with v < u, plus u itself
-        sym2 = _sym(e_ls)
-        smaller = sym2.filter(F.col("v") < F.col("u"))
-        self_rows = sym2.select("u").distinct().withColumn("v", F.col("u"))
-        e_ss = (
-            smaller.union(self_rows)
-            .join(_mins(sym2), "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("m").alias("u"), F.col("v").alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        same = (
-            e_ss.count() == E.count()
-            and e_ss.exceptAll(E).limit(1).count() == 0
-        )
-        E = e_ss
-        if same:
-            star = E.select(F.col("v").alias("id"), F.col("u").alias("comp"))
-            return verts.join(star, "id", "left").select(
-                "id", F.coalesce(F.col("comp"), F.col("id")).alias("comp")
-            )
-    raise RuntimeError(
-        f"cc_stars did not converge in {max_iter} rounds; the alternation "
-        f"converges in O(log n) rounds — raise max_iter"
-    )

@@ -10,6 +10,12 @@ at 100 TB that's an even, prunable key space (chromosome is also the
 parquet partition key, so partition pruning kicks in for single-locus
 lookups); no nested-loop, no cross product. Point-side fan-out is exactly
 5 rows per point (the 5 bin levels), interval side is 1 row each.
+
+The binned join is the only strategy, whatever the sizes: a broadcast
+nested loop is not worth picking even for a small interval side, since its
+work is O(points × intervals) however few bytes the intervals take (at sf5
+it took join_interval_knn to 245 s, against 3.0 s binned; BASELINE.md,
+round 9).
 """
 
 from __future__ import annotations
@@ -19,98 +25,40 @@ from pyspark.sql import DataFrame, functions as F
 from varda_spark.operators.binning import point_bins, range_bins, with_bin
 
 
-# Cap for choosing the BNLJ-broadcast strategy, deliberately far below
-# autoBroadcastJoinThreshold: a broadcast NESTED-LOOP join compares every
-# point row against EVERY broadcast interval (no hash index on a range
-# predicate), so its cost is O(points × intervals) no matter how cheaply
-# the intervals ship. "Fits in the broadcast" is the wrong test — at sf5
-# Catalyst estimated a 50k-row interval side at 414 KB, and the resulting
-# nested loop read 245 s (round-9 sf5 smoke). 64 KB ≈ ~8k interval rows
-# keeps the per-point loop comparable to the binned path's per-point
-# candidate count while preserving the measured sf0.1 broadcast win
-# (0.4 s vs 1.4 s binned on a ~1k-row side).
-_BNLJ_BROADCAST_CAP = 64 * 1024
+def _rename_clashes(df: DataFrame, other: DataFrame, prefix: str):
+    """Prefix the columns of ``df`` that ``other`` also has (except the
+    shared ``_bin`` key), so the join condition and the output name each
+    column once. Returns the renamed frame and a lookup from an original
+    name of ``df`` to its column."""
+    clash = set(df.columns) & set(other.columns) - {"_bin"}
+    for c in clash:
+        df = df.withColumnRenamed(c, prefix + c)
+    return df, lambda c: F.col(prefix + c if c in clash else c)
 
 
-def _fits_broadcast(df: DataFrame) -> bool:
-    """True iff Catalyst's optimized-plan size estimate for ``df`` (the
-    whole row ships in the broadcast) is within BOTH the session's
-    autoBroadcastJoinThreshold and the BNLJ work cap above. Plan
-    statistics only — no job runs."""
-    spark = df.sparkSession
-    try:
-        thr = int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
-    except Exception:
-        thr = 10 * 1024 * 1024
-    if thr <= 0:  # broadcast disabled session-wide → honor it
-        return False
-    thr = min(thr, _BNLJ_BROADCAST_CAP)
-    size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    return 0 <= size <= thr
-
-
-def interval_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    *,
-    point_chrom: str = "chromosome",
-    point_pos: str = "position",
-    ival_chrom: str = "chromosome",
-    ival_begin: str = "begin",
-    ival_end: str = "end",
-    how: str = "inner",
-    strategy: str = "auto",
-) -> DataFrame:
-    """Join each point to every closed interval [begin,end] containing it.
-
-    strategy='binned': equi-join on (chromosome, bin) + residual range
-    predicate — the scale path; both sides shuffle on an even key.
-    strategy='broadcast': plain theta join with the interval side broadcast
-    (BroadcastNestedLoop) — measured FASTER when the interval side fits in
-    a broadcast (sf0.1: 0.4s vs 1.4s binned) because it skips the explode
-    and shuffle entirely; unusable when both sides are large.
-    strategy='auto' (default): pick broadcast iff Catalyst's own plan
-    statistics put the interval side at or under
-    spark.sql.autoBroadcastJoinThreshold — the same size estimate and
-    threshold Spark's planner uses for its broadcast decision, read off
-    the optimized plan at ZERO job cost (file-size based for scans,
-    propagated through filters/projects). This is the knob a real user
-    otherwise gets wrong: at 100 TB the interval side is usually a
-    bounded region dimension, and silently running the binned shuffle for
-    a 2 MB BED file wastes the whole win.
+def interval_join(points: DataFrame, intervals: DataFrame, how: str = "inner") -> DataFrame:
+    """Join each point (chromosome, position) to every closed interval
+    (chromosome, begin, end) containing it: an equi-join on
+    (chromosome, bin) plus the residual range predicate, so both sides
+    shuffle on an even key and no nested loop runs at any size.
 
     Interval columns keep their names; clashing names on the interval side
     get an ``i_`` prefix.
+
+    ``how="left"`` keeps every point, but per bin level, not per point:
+    each point is exploded to one row per bin level, so the output has one
+    row per matching interval plus one row with NULL interval columns for
+    each bin level where no interval contains the point. A caller that
+    needs one row per point deduplicates, as ``frequencies`` does on
+    (key, ``sample_id``).
     """
-    if strategy == "auto":
-        strategy = "broadcast" if _fits_broadcast(intervals) else "binned"
-    if strategy == "broadcast":
-        return interval_join_naive(
-            points,
-            F.broadcast(intervals),
-            point_chrom=point_chrom,
-            point_pos=point_pos,
-            ival_chrom=ival_chrom,
-            ival_begin=ival_begin,
-            ival_end=ival_end,
-        )
-    pts = points.withColumn("_bin", F.explode(point_bins(point_pos)))
-    ivs = with_bin(intervals, ival_begin, ival_end, out="_bin")
-    # disambiguate clashing column names (e.g. both sides have 'chromosome')
-    clash = set(pts.columns) & set(ivs.columns) - {"_bin"}
-    for c in clash:
-        ivs = ivs.withColumnRenamed(c, f"i_{c}")
-        if c == ival_chrom:
-            ival_chrom = f"i_{c}"
-        if c == ival_begin:
-            ival_begin = f"i_{c}"
-        if c == ival_end:
-            ival_end = f"i_{c}"
+    pts = points.withColumn("_bin", F.explode(point_bins("position")))
+    ivs, iv = _rename_clashes(with_bin(intervals, "begin", "end", out="_bin"), pts, "i_")
     cond = (
-        (F.col(point_chrom) == F.col(ival_chrom))
+        (F.col("chromosome") == iv("chromosome"))
         & (pts["_bin"] == ivs["_bin"])
-        & (F.col(point_pos) >= F.col(ival_begin))
-        & (F.col(point_pos) <= F.col(ival_end))
+        & (F.col("position") >= iv("begin"))
+        & (F.col("position") <= iv("end"))
     )
     return pts.join(ivs, cond, how).drop("_bin")
 
@@ -130,54 +78,26 @@ def range_overlap_join(
     lc, lb, le = left_keys
     rc, rb, re_ = right_keys
     lft = left.withColumn("_bin", F.explode(range_bins(lb, le)))
-    rgt = with_bin(right, rb, re_, out="_bin")
-    clash = set(lft.columns) & set(rgt.columns) - {"_bin"}
-    for c in clash:
-        rgt = rgt.withColumnRenamed(c, f"r_{c}")
-        if c == rc:
-            rc = f"r_{c}"
-        if c == rb:
-            rb = f"r_{c}"
-        if c == re_:
-            re_ = f"r_{c}"
+    rgt, r = _rename_clashes(with_bin(right, rb, re_, out="_bin"), lft, "r_")
     cond = (
-        (F.col(lc) == F.col(rc))
+        (F.col(lc) == r(rc))
         & (lft["_bin"] == rgt["_bin"])
-        & (F.col(lb) <= F.col(re_))
-        & (F.col(le) >= F.col(rb))
+        & (F.col(lb) <= r(re_))
+        & (F.col(le) >= r(rb))
     )
     return lft.join(rgt, cond, "inner").drop("_bin")
 
 
-def interval_join_naive(
-    points: DataFrame,
-    intervals: DataFrame,
-    *,
-    point_chrom: str = "chromosome",
-    point_pos: str = "position",
-    ival_chrom: str = "chromosome",
-    ival_begin: str = "begin",
-    ival_end: str = "end",
-) -> DataFrame:
-    """Reference implementation: plain theta join (BroadcastNestedLoop).
-
-    Only for property-testing the binned rewrite and for genuinely tiny
-    interval sides. Never the scale path.
+def interval_join_naive(points: DataFrame, intervals: DataFrame) -> DataFrame:
+    """Reference implementation of ``interval_join`` (inner): a plain
+    theta join, which Spark plans as a nested loop. Only for the tests
+    that check the binned rewrite against it; never an engine path.
     """
-    ivs = intervals
-    clash = set(points.columns) & set(ivs.columns)
-    for c in clash:
-        ivs = ivs.withColumnRenamed(c, f"i_{c}")
-        if c == ival_chrom:
-            ival_chrom = f"i_{c}"
-        if c == ival_begin:
-            ival_begin = f"i_{c}"
-        if c == ival_end:
-            ival_end = f"i_{c}"
+    ivs, iv = _rename_clashes(intervals, points, "i_")
     cond = (
-        (F.col(point_chrom) == F.col(ival_chrom))
-        & (F.col(point_pos) >= F.col(ival_begin))
-        & (F.col(point_pos) <= F.col(ival_end))
+        (F.col("chromosome") == iv("chromosome"))
+        & (F.col("position") >= iv("begin"))
+        & (F.col("position") <= iv("end"))
     )
     return points.join(ivs, cond, "inner")
 
@@ -256,11 +176,7 @@ def nearest_interval(
         F.when(use_left, dl).otherwise(dr).cast("bigint").alias("s_dist"),
     )
     ov = (
-        interval_join(
-            points,
-            intervals.select("chromosome", "begin", "end", interval_key),
-            strategy="binned",
-        )
+        interval_join(points, intervals.select("chromosome", "begin", "end", interval_key))
         .groupBy("chromosome", "position", point_key)
         .agg(F.min(interval_key).alias("ov_key"))
     )
@@ -377,10 +293,7 @@ def knn_intervals(
         .join(iv_r, ["chromosome", "rk"])
         .filter(F.col("begin") > F.col("position"))
     )
-    # binned FORCED (the nearest_interval precedent): the overlap pool's
-    # point side is the full point table, so the BNLJ-broadcast shortcut
-    # is never the right plan here regardless of interval-side size
-    ov = interval_join(pts, iv, strategy="binned")
+    ov = interval_join(pts, iv)
     wov = Window.partitionBy("chromosome", "position", point_key).orderBy(
         interval_key
     )

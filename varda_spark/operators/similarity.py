@@ -611,9 +611,8 @@ def kmeans_fit(
     # below runs unchanged (r14: sim_kmeans 18 jobs → 3, 1.7 → 0.8 s).
     import numpy as np
 
-    local_threshold = _LOCAL_SOLVER_THRESHOLD
-    rows = q_.limit(local_threshold + 1).collect()
-    if len(rows) <= local_threshold and rows:
+    rows = q_.limit(_LOCAL_SOLVER_THRESHOLD + 1).collect()
+    if len(rows) <= _LOCAL_SOLVER_THRESHOLD and rows:
         ids = np.array([r[key] for r in rows])
         X = np.array([r["_q"] for r in rows], dtype=np.int64)
         order = np.argsort(ids, kind="stable")
@@ -1249,12 +1248,11 @@ def kcenter_greedy(
     # numpy in ONE job. Exact same argmax/tie rules, so the output is
     # bit-identical; above the threshold the distributed scan loop below
     # runs unchanged (r14 profile: 11 jobs / 1.9-2.1 s → 2 jobs at sf0.1).
-    local_threshold = _LOCAL_SOLVER_THRESHOLD
-    rows = q_.limit(local_threshold + 1).collect()
+    rows = q_.limit(_LOCAL_SOLVER_THRESHOLD + 1).collect()
     # `and rows` mirrors kmeans_fit's empty-input guard (ADVICE r14):
     # both solvers fall through to the distributed path on empty input
     # instead of the fast path raising IndexError at ids[0].
-    if len(rows) <= local_threshold and rows:
+    if len(rows) <= _LOCAL_SOLVER_THRESHOLD and rows:
         ids = np.array([r[key] for r in rows])
         X = np.array([r["_q"] for r in rows], dtype=np.int64)
         order = np.argsort(ids, kind="stable")

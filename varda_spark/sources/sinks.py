@@ -28,17 +28,6 @@ def write_observations(df: DataFrame, path: str, mode: str = "overwrite") -> Non
     )
 
 
-def write_regions(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Region fact table: partition by chromosome, sort by (bin, begin)."""
-    (
-        df.repartition("chromosome")
-        .sortWithinPartitions("bin", "begin")
-        .write.mode(mode)
-        .partitionBy("chromosome")
-        .parquet(path)
-    )
-
-
 def format_annotated_vcf_lines(
     annotated: DataFrame,
     query_names: list[str],

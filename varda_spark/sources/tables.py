@@ -81,16 +81,6 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def read_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views for spark.sql() use."""
-    for t in TABLES:
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def register_tables(spark, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
     """Register every driver table as a temp view → full spark.sql access.
 

@@ -148,11 +148,6 @@ def session_windows_stream(ev_stream: DataFrame, gap: str = "30 minutes", waterm
     )
 
 
-def dedup_within_watermark(ev_stream: DataFrame, keys: list[str], watermark: str = "10 minutes") -> DataFrame:
-    """I5 stateful dedup: first event per key within the watermark horizon."""
-    return ev_stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-
-
 def running_user_totals_stream(ev_stream: DataFrame, timeout_minutes: int | None = None) -> DataFrame:
     """I5+ custom stateful operator via applyInPandasWithState: per-user
     running event count + value sum, emitted on every micro-batch update.

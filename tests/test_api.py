@@ -283,3 +283,49 @@ def test_unknown_sample_id_is_refused(spark, tmp_path):
     sid = wh.create_sample("A")
     assert wh.import_variation(sid, str(vcf)) == 2
     assert wh.import_coverage(sid, str(bed)) == 1
+
+
+def test_crashed_compaction_keeps_the_facts(spark, tmp_path, monkeypatch):
+    """A compaction that dies between moving ``observations/`` aside and
+    moving the compacted copy in leaves only ``observations__old``. Every
+    later access to the fact table rolls that back first: reads see the
+    rows from before the crash, and an import followed by another
+    compaction keeps every one of them."""
+    import os
+
+    from perfbench import gen
+    from varda_spark.sources.sinks import compact_warehouse
+
+    inputs = gen.generate(str(tmp_path / "in"), 1, n_samples=2, n_sites=300)
+    wh = VardaWarehouse(spark, str(tmp_path / "wh"))
+    for s in inputs.samples:
+        sid = wh.create_sample(s.name, public=s.public)
+        wh.import_variation(sid, s.vcf)
+        wh.activate_sample(sid)
+    obs_before = sorted(map(tuple, wh.observations().collect()))
+    freq_before = sorted(map(tuple, wh.frequency().collect()))
+    assert obs_before and freq_before
+
+    rename = os.rename
+
+    def crash_on_swap_in(src, dst):
+        if str(src).endswith("__new"):
+            raise OSError("simulated crash mid-compaction")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_swap_in)
+    with pytest.raises(OSError):
+        compact_warehouse(spark, wh.root + "/observations")
+    monkeypatch.undo()
+    assert not os.path.exists(tmp_path / "wh" / "observations")
+
+    assert sorted(map(tuple, wh.observations().collect())) == obs_before
+    assert sorted(map(tuple, wh.frequency().collect())) == freq_before
+
+    vcf = tmp_path / "late.vcf"
+    vcf.write_text(VCF_A)
+    late = wh.create_sample("late")
+    added = wh.import_variation(late, str(vcf))
+    assert compact_warehouse(spark, wh.root + "/observations") == len(obs_before) + added
+    after = sorted(map(tuple, wh.observations().collect()))
+    assert set(obs_before) <= set(after) and len(after) == len(obs_before) + added

@@ -28,7 +28,7 @@ def test_asof_join_semantics(spark):
     )
     out = {
         (r.k, r.ts.second): (r.rv_right, r.ts_right.second if r.ts_right else None)
-        for r in asof_join(left, right, by="k", on="ts").collect()
+        for r in asof_join(left, right, by="k").collect()
     }
     assert out[(1, 10)] == (201, 8)   # latest at-or-before
     assert out[(1, 5)] == (200, 5)    # <= semantics: equal ts matches
@@ -51,6 +51,6 @@ def test_chunk_audio_empty_payload_emits_no_rows(spark):
     d = spark.createDataFrame(
         [Row(doc_id=1, text=""), Row(doc_id=4, text="y" * 40)]
     )  # both doc_id%3==1 → audio/wav
-    out = chunk_audio(synthesize_blobs(d), chunk_bytes=32).collect()
+    out = chunk_audio(synthesize_blobs(d)).collect()
     assert {r.item_id for r in out} == {4}
     assert sorted((r.chunk_idx, r.chunk_len) for r in out) == [(0, 32), (1, 8)]

@@ -33,7 +33,7 @@ def test_mmr_rerank_random(spark, seed):
     df, Q = _emb_df(spark, seed)
     ids = np.arange(len(Q))
     got = (
-        mmr_rerank(df, n_queries=3, pool=6, k=4, scale=1000)
+        mmr_rerank(df, n_queries=3, pool=6, k=4)
         .toPandas()
         .sort_values(["query_id", "round"])
     )
@@ -69,7 +69,7 @@ def test_dual_retriever_pools_random(spark, seed):
     df, Q = _emb_df(spark, seed, n=50, dim=16)
     ids = np.arange(len(Q))
     B = (Q >= 0).astype(np.int64)
-    got = dual_retriever_pools(df, n_queries=4, pool=5, scale=1000).toPandas()
+    got = dual_retriever_pools(df, n_queries=4, pool=5).toPandas()
     for qi in range(4):
         dots = Q @ Q[qi]
         ham = np.abs(B - B[qi]).sum(axis=1)
@@ -91,7 +91,7 @@ def test_dual_retriever_pools_tiny_corpus_excludes_self(spark):
     flagged in ADVICE r7 — with <= pool non-self candidates the
     int64-sentinel self row re-entered the emitted pool)."""
     df, Q = _emb_df(spark, seed=9, n=6, dim=8)
-    got = dual_retriever_pools(df, n_queries=3, pool=10, scale=1000).toPandas()
+    got = dual_retriever_pools(df, n_queries=3, pool=10).toPandas()
     for qi in range(3):
         g = got[got.query_id == qi]
         assert qi not in set(g.vec_id), f"self row leaked for query {qi}"
@@ -109,7 +109,7 @@ def test_nprobe_sweep_full_probe_equals_adc(spark):
     ids = np.arange(len(Q))
     got = (
         ivf_pq_nprobe_sweep(
-            df, nprobes=(1, 4), ncells=4, n_queries=3, topk=3, m=4, k=4
+            df, nprobes=(1, 4), ncells=4, n_queries=3, k=4
         )
         .toPandas()
         .set_index(["nprobe", "query_id"])

@@ -32,7 +32,7 @@ def test_dedup_exact_keeps_lowest_key(spark):
 
 
 def test_minhash_finds_near_dup(spark):
-    pairs = {(r.doc_a, r.doc_b) for r in minhash_candidates(_docs(spark), 8, 4, 3).collect()}
+    pairs = {(r.doc_a, r.doc_b) for r in minhash_candidates(_docs(spark)).collect()}
     assert (1, 2) in pairs  # exact dup always collides on every band
     assert all(a < b for a, b in pairs)
 
@@ -136,7 +136,7 @@ def test_blocked_topk_matches_pure_df(spark):
     from varda_spark.operators.similarity import quantized_topk, quantized_topk_fast
 
     e = read_table(spark, SF, "embeddings")
-    fast = quantized_topk_fast(e, k=3)
+    fast = quantized_topk_fast(e)
     ref = quantized_topk(e, k=3)
     assert fast.exceptAll(ref).count() == 0
     assert ref.exceptAll(fast).count() == 0

@@ -97,7 +97,7 @@ def test_minhash_candidates_matches_python_reference(spark):
     df = spark.createDataFrame(_DOCS, "doc_id bigint, text string")
     got = {
         (r.doc_a, r.doc_b)
-        for r in minhash_candidates(df, num_hashes=8, bands=4, shingle_n=3).collect()
+        for r in minhash_candidates(df).collect()
     }
     bands = {d: set(_minhash_bands_ref(t)) for d, t in _DOCS}
     want = {
@@ -154,7 +154,7 @@ def test_kcenter_greedy_empty_input_no_fast_path_indexerror(spark):
     path itself no longer crashes at ids[0]."""
     empty = spark.createDataFrame([], "vec_id bigint, vec array<double>")
     with pytest.raises(IndexError):
-        kcenter_greedy(empty, k=3, key="vec_id", vec="vec")
+        kcenter_greedy(empty, k=3, vec="vec")
 
 
 # ------------------------------------------------- _coorder_edges Arrow build

@@ -67,11 +67,9 @@ def test_pq_fit_reduces_qerr(spark):
     from varda_spark.operators.similarity import pq_codes, pq_fit
 
     e = spark.read.parquet(f"{SF_001}/embeddings.parquet")
-    base = pq_codes(e, m=4, k=8).agg({"qerr": "sum"}).collect()[0][0]
+    base = pq_codes(e).agg({"qerr": "sum"}).collect()[0][0]
     refined = pq_fit(e, m=4, k=8, iters=2)
-    fit = (
-        pq_codes(e, m=4, k=8, codebooks=refined).agg({"qerr": "sum"}).collect()[0][0]
-    )
+    fit = pq_codes(e, codebooks=refined).agg({"qerr": "sum"}).collect()[0][0]
     assert fit < base, f"refined qerr {fit} !< init qerr {base}"
 
 

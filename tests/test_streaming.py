@@ -86,7 +86,7 @@ def test_watermark_drops_late_events(spark):
             Row(event_id=3, ts=base - dt.timedelta(hours=2), event_type="click", value=1.0),  # late
         ]
     )
-    out = watermark_tumbling_batch(ev, width="1 hour", delay_minutes=10)
+    out = watermark_tumbling_batch(ev, delay_minutes=10)
     rows = out.collect()
     assert sum(r.n_events for r in rows) == 2  # the 2h-old event was dropped
 

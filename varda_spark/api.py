@@ -49,7 +49,7 @@ from varda_spark.expressions import compile_selection
 from varda_spark.frequency import frequency
 from varda_spark.session import arrow_schema, local_table
 from varda_spark.sources.bed import read_bed
-from varda_spark.sources.sinks import recover_compaction
+from varda_spark.sources.sinks import recover_compaction, swap_in
 from varda_spark.sources.vcf import read_vcf
 
 _SAMPLE_SCHEMA = (
@@ -77,20 +77,27 @@ class VardaWarehouse:
     def _path(self, name: str) -> str:
         return f"{self.root}/{name}"
 
-    def _read(self, name: str, schema: str) -> DataFrame:
+    def _live(self, name: str) -> str:
+        """The table's path, after rolling back a directory swap (a
+        compaction or a dimension rewrite) that crashed between its two
+        renames, so no table reads as empty — or gets a fresh directory
+        appended beside it — while its only complete copy sits in
+        ``__old``."""
         path = self._path(name)
+        if os.path.exists(path) or os.path.exists(path + "__old"):
+            recover_compaction(path)
+        return path
+
+    def _read(self, name: str, schema: str) -> DataFrame:
+        path = self._live(name)
         if not os.path.exists(path):
             return local_table(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(path)
 
     def _rows(self, name: str, schema: str) -> list[dict]:
         """A driver-side table's rows, read with pyarrow in the declared
-        types. A swap that crashed between its two renames is rolled back
-        first (``recover_compaction``), so a dimension never reads as
-        empty while its only complete copy sits in ``__old``."""
-        path = self._path(name)
-        if os.path.exists(path) or os.path.exists(path + "__old"):
-            recover_compaction(path)
+        types."""
+        path = self._live(name)
         if not os.path.exists(path):
             return []
         return pq.read_table(path, schema=arrow_schema(schema)).to_pylist()
@@ -98,9 +105,8 @@ class VardaWarehouse:
     def _overwrite_dim(self, name: str, rows: list[dict], schema: str) -> None:
         """Directory-swap rewrite of a (tiny) dimension from the driver.
 
-        Write the rows as one parquet file into ``__new``, move the live
-        dir aside to ``__old``, move ``__new`` in, then drop ``__old`` — a
-        crash at any step leaves either the old or the new complete
+        Write the rows as one parquet file into ``__new``, then ``swap_in``
+        — a crash at any step leaves either the old or the new complete
         directory on disk (the renames are atomic on a local/posix
         filesystem; on object stores swap in a manifest-pointer commit
         instead). Callers read through ``_rows`` first, which rolls a
@@ -108,17 +114,13 @@ class VardaWarehouse:
         dir is whole again. Single-writer, like the rest of the
         lifecycle."""
         final = self._path(name)
-        tmp, old = final + "__new", final + "__old"
+        tmp = final + "__new"
         if os.path.exists(tmp):  # a write that crashed before its swap
             shutil.rmtree(tmp)
         os.makedirs(tmp)
         table = pa.Table.from_pylist(rows, schema=arrow_schema(schema))
         pq.write_table(table, f"{tmp}/part-00000.parquet")
-        if os.path.exists(final):
-            os.rename(final, old)
-        os.rename(tmp, final)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        swap_in(final)
 
     # ---- lifecycle (varda REST §3) --------------------------------------
     def samples(self) -> DataFrame:
@@ -184,7 +186,7 @@ class VardaWarehouse:
         rows = Observation()
         df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("append").partitionBy(
             "chromosome"
-        ).parquet(self._path(name))
+        ).parquet(self._live(name))
         self._record_import(digest, kind, sample_id)
         return rows.get["n"]
 

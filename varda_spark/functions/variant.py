@@ -59,29 +59,24 @@ def _common_prefix_len(a: str, b: str) -> str:
     )
 
 
-def normalize_variant_cols(
-    df: DataFrame,
-    position: str = "position",
-    reference: str = "reference",
-    observed: str = "observed",
-) -> DataFrame:
+def normalize_variant_cols(df: DataFrame) -> DataFrame:
     """Return df with (position, reference, observed) canonicalized.
 
     Suffix-trim first, then prefix-trim advancing position — the varda
     order. Empty alleles ('' for pure ins/del) pass through unchanged.
     """
-    s = _common_suffix_len(reference, observed)
+    s = _common_suffix_len("reference", "observed")
     df = (
         df.withColumn("_s", F.expr(s))
-        .withColumn("_r1", F.expr(f"substring({reference}, 1, length({reference}) - _s)"))
-        .withColumn("_o1", F.expr(f"substring({observed}, 1, length({observed}) - _s)"))
+        .withColumn("_r1", F.expr("substring(reference, 1, length(reference) - _s)"))
+        .withColumn("_o1", F.expr("substring(observed, 1, length(observed) - _s)"))
     )
     p = _common_prefix_len("_r1", "_o1")
     df = (
         df.withColumn("_p", F.expr(p))
-        .withColumn(position, F.col(position) + F.col("_p"))
-        .withColumn(reference, F.expr("substring(_r1, _p + 1, length(_r1) - _p)"))
-        .withColumn(observed, F.expr("substring(_o1, _p + 1, length(_o1) - _p)"))
+        .withColumn("position", F.col("position") + F.col("_p"))
+        .withColumn("reference", F.expr("substring(_r1, _p + 1, length(_r1) - _p)"))
+        .withColumn("observed", F.expr("substring(_o1, _p + 1, length(_o1) - _p)"))
         .drop("_s", "_r1", "_o1", "_p")
     )
     return df

@@ -24,32 +24,31 @@ def asof_join(
     right: DataFrame,
     *,
     by: str,
-    on: str = "ts",
     right_cols: list[str] | None = None,
-    suffix: str = "_right",
 ) -> DataFrame:
     """For each left row: columns of the latest right row with
-    right.on <= left.on and right.by == left.by (NULLs when none).
+    right.ts <= left.ts and right.by == left.by (NULLs when none), each
+    carried column suffixed ``_right``.
 
-    Ties on `on` match (<= semantics): the right row sorts before the left
-    row at equal timestamps. If the right side can hold duplicate (by, on)
+    Ties on `ts` match (<= semantics): the right row sorts before the left
+    row at equal timestamps. If the right side can hold duplicate (by, ts)
     pairs, deduplicate it first — carry-forward keeps the LAST in sort
     order, which is nondeterministic among exact duplicates.
     """
-    right_cols = right_cols or [c for c in right.columns if c not in (by, on)]
+    right_cols = right_cols or [c for c in right.columns if c not in (by, "ts")]
     lft = left.withColumn("_src", F.lit(1))
     rgt = right.select(
         F.col(by),
-        F.col(on),
+        F.col("ts"),
         F.lit(0).alias("_src"),
-        F.col(on).alias(f"{on}{suffix}"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in right_cols],
+        F.col("ts").alias("ts_right"),
+        *[F.col(c).alias(f"{c}_right") for c in right_cols],
     )
-    carried = [f"{on}{suffix}"] + [f"{c}{suffix}" for c in right_cols]
+    carried = ["ts_right"] + [f"{c}_right" for c in right_cols]
     unioned = lft.unionByName(rgt, allowMissingColumns=True)
     w = (
         Window.partitionBy(by)
-        .orderBy(F.col(on).asc(), F.col("_src").asc())
+        .orderBy(F.col("ts").asc(), F.col("_src").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     for c in carried:

@@ -26,14 +26,14 @@ from pyspark.sql import DataFrame, Window, functions as F
 from varda_spark.operators.text import tokens
 
 
-def dedup_exact(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFrame:
-    """Keep the lowest-key document per exact (md5-normalized) text.
+def dedup_exact(df: DataFrame) -> DataFrame:
+    """Keep the lowest-``doc_id`` document per exact (md5-normalized) text.
 
     Window keep-first rather than dropDuplicates so the SURVIVOR is
     deterministic (dropDuplicates keeps an arbitrary row).
     """
-    h = F.md5(F.lower(F.trim(F.col(text))).cast("binary"))
-    w = Window.partitionBy("_h").orderBy(F.col(key))
+    h = F.md5(F.lower(F.trim(F.col("text"))).cast("binary"))
+    w = Window.partitionBy("_h").orderBy(F.col("doc_id"))
     return (
         df.withColumn("_h", h)
         .withColumn("_rn", F.row_number().over(w))
@@ -42,8 +42,8 @@ def dedup_exact(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataF
     )
 
 
-def shingles(df: DataFrame, n: int = 3, text: str = "text", out: str = "shingle") -> DataFrame:
-    """Explode n-word shingles of the token stream.
+def shingles(df: DataFrame, n: int = 3, out: str = "shingle") -> DataFrame:
+    """Explode n-word shingles of the ``text`` token stream.
 
     Documents shorter than n tokens yield NO shingles (empty array, not
     a truncated one) — matching the oracle's stop-exclusive range
@@ -56,11 +56,11 @@ def shingles(df: DataFrame, n: int = 3, text: str = "text", out: str = "shingle"
     the parquet FILE-COUNT's parallelism (8 tasks at sf5 — the
     dedup_substring_spans lesson; dedup_minhash 45.6→18 s,
     text_ngram_novelty 93.6→39 s at sf5). The repartition ships only
-    the raw (key, text) bytes, two orders of magnitude less than the
+    the raw (doc_id, text) bytes, two orders of magnitude less than the
     shingle stream it unlocks parallelism for.
     """
     df = df.repartition(df.sparkSession.sparkContext.defaultParallelism * 2)
-    df = df.withColumn("_w", tokens(text))
+    df = df.withColumn("_w", tokens("text"))
     parts = ", ".join(f"element_at(_w, i + {j})" for j in range(n))
     return df.withColumn(
         out,
@@ -75,21 +75,15 @@ def shingles(df: DataFrame, n: int = 3, text: str = "text", out: str = "shingle"
     ).drop("_w")
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 8,
-    shingle_n: int = 3,
-    key: str = "doc_id",
-    text: str = "text",
-    shingle_df: DataFrame | None = None,
-) -> DataFrame:
-    """Per-doc MinHash signature: sig_i = MIN(md5(i || shingle)).
+def minhash_signatures(df: DataFrame, shingle_df: DataFrame | None = None) -> DataFrame:
+    """Per-doc MinHash signature over 3-word shingles: sig_i = MIN(md5(i
+    || shingle)).
 
     Lexicographic MIN over fixed-width lowercase hex == numeric MIN over
     the hash value, and md5 agrees across engines → oracle-exact.
-    Output: key + sig_0..sig_{n-1} (strings).
+    Output: doc_id + sig_0..sig_7 (strings).
 
-    ``shingle_df`` lets a caller that already materialized the (key,
+    ``shingle_df`` lets a caller that already materialized the (doc_id,
     shingle) stream (e.g. for an exact-Jaccard verify stage) share it:
     MIN is duplicate-insensitive, so a DISTINCT shingle set yields the
     identical signature as the raw stream.
@@ -101,29 +95,21 @@ def minhash_signatures(
     # 2.6 s at sf0.1). The explode stream never hits the wire anyway:
     # partial aggregation reduces map-side, so the shuffle carries one
     # 8-signature row per doc.
-    sh = shingle_df if shingle_df is not None else shingles(df.select(key, text), n=shingle_n)
+    sh = shingle_df if shingle_df is not None else shingles(df.select("doc_id", "text"), n=3)
     aggs = [
         F.min(F.md5(F.concat(F.lit(str(i) + "|"), F.col("shingle")).cast("binary"))).alias(f"sig_{i}")
-        for i in range(num_hashes)
+        for i in range(8)
     ]
-    return sh.groupBy(key).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_candidates(
-    df: DataFrame,
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    key: str = "doc_id",
-    text: str = "text",
-    shingle_df: DataFrame | None = None,
-) -> DataFrame:
+def minhash_candidates(df: DataFrame, shingle_df: DataFrame | None = None) -> DataFrame:
     """LSH candidate pairs: docs sharing any band of the MinHash signature.
 
-    rows-per-band = num_hashes/bands; docs agreeing on ALL rows of ≥1 band
-    become a candidate pair (a < b). Bucket equi-join per band — the scale
+    The 8 signatures form 4 bands of 2 rows; docs agreeing on ALL rows of
+    ≥1 band become a candidate pair (a < b). Bucket equi-join per band — the scale
     path: shuffle keys are (band_id, band_value), bounded fan-out.
-    ``shingle_df``: optional pre-materialized (key, shingle) stream —
+    ``shingle_df``: optional pre-materialized (doc_id, shingle) stream —
     see minhash_signatures.
 
     The signature table is localCheckpoint'ed before the bucket
@@ -136,32 +122,30 @@ def minhash_candidates(
     above the checkpoint is trivial per side. DAG-replay control inside
     the timed query, not cross-run caching.
     """
-    sigs = minhash_signatures(
-        df, num_hashes, shingle_n, key, text, shingle_df=shingle_df
-    ).localCheckpoint(eager=False)
-    rows = num_hashes // bands
+    sigs = minhash_signatures(df, shingle_df=shingle_df).localCheckpoint(eager=False)
     band_cols = [
-        F.concat_ws("|", F.lit(str(b)), *[F.col(f"sig_{b * rows + r}") for r in range(rows)]).alias(
+        F.concat_ws("|", F.lit(str(b)), *[F.col(f"sig_{b * 2 + r}") for r in range(2)]).alias(
             f"band_{b}"
         )
-        for b in range(bands)
+        for b in range(4)
     ]
-    banded = sigs.select(F.col(key), *band_cols)
+    banded = sigs.select(F.col("doc_id"), *band_cols)
     stacked = banded.select(
-        F.col(key),
-        F.explode(F.array(*[F.col(f"band_{b}") for b in range(bands)])).alias("bucket"),
+        F.col("doc_id"),
+        F.explode(F.array(*[F.col(f"band_{b}") for b in range(4)])).alias("bucket"),
     )
     a = stacked.alias("a")
     b = stacked.alias("b")
     return (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col(f"a.{key}") < F.col(f"b.{key}")))
-        .select(F.col(f"a.{key}").alias("doc_a"), F.col(f"b.{key}").alias("doc_b"))
+        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
 
 
-def simhash(df: DataFrame, key: str = "doc_id", text: str = "text", out: str = "simhash") -> DataFrame:
-    """64-bit SimHash fingerprint from per-token md5 bit votes.
+def simhash(df: DataFrame) -> DataFrame:
+    """64-bit SimHash fingerprint of ``text`` from per-token md5 bit votes:
+    (doc_id, simhash).
 
     bit_j(doc) = 1 iff more tokens hash with bit j set than unset. Pure
     Column math: per token take md5 → first 16 hex chars → bigint via
@@ -172,7 +156,7 @@ def simhash(df: DataFrame, key: str = "doc_id", text: str = "text", out: str = "
     extra exchange defeats exchange reuse in simhash_pairs' downstream
     self-join; the vote stage itself is only ~1.1 s. Left alone.)
     """
-    tok = df.select(key, F.explode(tokens(text)).alias("tok"))
+    tok = df.select("doc_id", F.explode(tokens("text")).alias("tok"))
     h = F.conv(F.substring(F.md5(F.col("tok").cast("binary")), 1, 15), 16, 10).cast("bigint")
     tok = tok.withColumn("_h", h)
     # branch-free votes: sum the raw bit per token plus one total count;
@@ -182,7 +166,7 @@ def simhash(df: DataFrame, key: str = "doc_id", text: str = "text", out: str = "
         F.sum(F.shiftright(F.col("_h"), j).bitwiseAND(F.lit(1))).alias(f"v{j}")
         for j in range(60)
     ]
-    agg = tok.groupBy(key).agg(F.count(F.lit(1)).alias("_n"), *votes)
+    agg = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_n"), *votes)
     # balanced add-tree, not a left-deep sum(): Catalyst walks a depth-60
     # Add chain per rule pass and the analysis alone cost ~0.5 s per run
     # (measured r14: 1.69 s → 1.18 s for this stage). Reassociating
@@ -198,17 +182,10 @@ def simhash(df: DataFrame, key: str = "doc_id", text: str = "text", out: str = "
             terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
             for i in range(0, len(terms), 2)
         ]
-    return agg.select(F.col(key), terms[0].alias(out))
+    return agg.select(F.col("doc_id"), terms[0].alias("simhash"))
 
 
-def simhash_pairs(
-    df: DataFrame,
-    max_hamming: int = 10,
-    key: str = "doc_id",
-    text: str = "text",
-    chunks: int = 4,
-    chunk_bits: int = 15,
-) -> DataFrame:
+def simhash_pairs(df: DataFrame, max_hamming: int = 10) -> DataFrame:
     """SimHash near-dup candidate pairs by chunk banding + exact Hamming.
 
     The 60-bit fingerprint splits into 4×15-bit chunks; by pigeonhole any
@@ -228,24 +205,24 @@ def simhash_pairs(
     blocks live until the DataFrame is GC'd (fine for a query-shaped
     call; long-lived reuse should unpersist).
     """
-    fp = simhash(df, key=key, text=text).localCheckpoint(eager=False)
-    mask = (1 << chunk_bits) - 1
+    fp = simhash(df).localCheckpoint(eager=False)
+    mask = (1 << 15) - 1
     stacked = fp.select(
-        F.col(key),
+        F.col("doc_id"),
         F.col("simhash"),
         F.explode(
             F.array(*[
                 F.concat_ws(
                     ":",
                     F.lit(str(c)),
-                    F.shiftright(F.col("simhash"), c * chunk_bits).bitwiseAND(F.lit(mask)).cast("string"),
+                    F.shiftright(F.col("simhash"), c * 15).bitwiseAND(F.lit(mask)).cast("string"),
                 )
-                for c in range(chunks)
+                for c in range(4)
             ])
         ).alias("chunk"),
     )
-    a = stacked.select(F.col(key).alias("doc_a"), F.col("simhash").alias("fp_a"), "chunk")
-    b = stacked.select(F.col(key).alias("doc_b"), F.col("simhash").alias("fp_b"), "chunk")
+    a = stacked.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("fp_a"), "chunk")
+    b = stacked.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("fp_b"), "chunk")
     return (
         a.join(b, ["chunk"])
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -255,14 +232,8 @@ def simhash_pairs(
     )
 
 
-def ngram_jaccard(
-    df: DataFrame,
-    candidate_pairs: DataFrame | None = None,
-    shingle_n: int = 3,
-    key: str = "doc_id",
-    text: str = "text",
-) -> DataFrame:
-    """Exact shingle-set Jaccard per candidate pair.
+def ngram_jaccard(df: DataFrame, candidate_pairs: DataFrame | None = None) -> DataFrame:
+    """Exact 3-word-shingle-set Jaccard per candidate pair.
 
     candidate_pairs=None → candidates are all pairs sharing ≥1 shingle
     (inverted-index self-join: fan-out bounded by shingle frequency, the
@@ -278,14 +249,14 @@ def ngram_jaccard(
     the full DAG.
     """
     sh = (
-        shingles(df.select(key, text), n=shingle_n)
+        shingles(df.select("doc_id", "text"), n=3)
         .distinct()
         .localCheckpoint(eager=False)
     )
-    sizes = sh.groupBy(key).agg(F.countDistinct("shingle").alias("n_sh"))
+    sizes = sh.groupBy("doc_id").agg(F.countDistinct("shingle").alias("n_sh"))
     if candidate_pairs is None:
-        a_ = sh.select(F.col(key).alias("doc_a"), "shingle")
-        b_ = sh.select(F.col(key).alias("doc_b"), "shingle")
+        a_ = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+        b_ = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
         inter = (
             a_.join(b_, ["shingle"])
             .filter(F.col("doc_a") < F.col("doc_b"))
@@ -293,8 +264,8 @@ def ngram_jaccard(
             .agg(F.count(F.lit(1)).alias("n_inter"))
         )
     else:
-        a = sh.withColumnRenamed(key, "doc_a").withColumnRenamed("shingle", "sh_a")
-        b = sh.withColumnRenamed(key, "doc_b").withColumnRenamed("shingle", "sh_b")
+        a = sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("shingle", "sh_a")
+        b = sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("shingle", "sh_b")
         inter = (
             candidate_pairs.join(a, "doc_a")
             .join(b, "doc_b")
@@ -303,8 +274,8 @@ def ngram_jaccard(
             .agg(F.count(F.lit(1)).alias("n_inter"))
         )
     out = (
-        inter.join(sizes.withColumnRenamed(key, "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed(key, "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
+        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
+        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
         .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
         .withColumn("jaccard_pct", F.floor(F.col("n_inter") * 100 / F.col("n_union")).cast("bigint"))
     )
@@ -458,14 +429,8 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     )
 
 
-def shingle_containment(
-    df: DataFrame,
-    threshold_pct: int = 40,
-    shingle_n: int = 3,
-    key: str = "doc_id",
-    text: str = "text",
-) -> DataFrame:
-    """Directed shingle containment |A∩B| / |A| per candidate pair — the
+def shingle_containment(df: DataFrame) -> DataFrame:
+    """Directed 3-word-shingle containment |A∩B| / |A| ≥ 40% per pair — the
     asymmetric companion to Jaccard: catches a short doc EMBEDDED in a long
     one (quote farms, boilerplate wrappers, concatenated dumps), where
     Jaccard is diluted by the long side's size and misses.
@@ -478,13 +443,13 @@ def shingle_containment(
     shingle stream feeds sizes + both join sides — materialize once.
     """
     sh = (
-        shingles(df.select(key, text), n=shingle_n)
+        shingles(df.select("doc_id", "text"), n=3)
         .distinct()
         .localCheckpoint(eager=False)
     )
-    sizes = sh.groupBy(key).agg(F.countDistinct("shingle").alias("n_sh"))
-    a_ = sh.select(F.col(key).alias("doc_a"), "shingle")
-    b_ = sh.select(F.col(key).alias("doc_b"), "shingle")
+    sizes = sh.groupBy("doc_id").agg(F.countDistinct("shingle").alias("n_sh"))
+    a_ = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b_ = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
         a_.join(b_, ["shingle"])
         .filter(F.col("doc_a") != F.col("doc_b"))
@@ -492,11 +457,11 @@ def shingle_containment(
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     out = inter.join(
-        sizes.withColumnRenamed(key, "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a"
+        sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a"
     ).withColumn(
         "containment_pct", F.floor(F.col("n_inter") * 100 / F.col("n_a")).cast("bigint")
     )
-    return out.filter(F.col("containment_pct") >= threshold_pct).select(
+    return out.filter(F.col("containment_pct") >= 40).select(
         "doc_a", "doc_b", F.col("n_inter").cast("bigint").alias("n_inter"), "containment_pct"
     )
 

@@ -102,14 +102,9 @@ def interval_join_naive(points: DataFrame, intervals: DataFrame) -> DataFrame:
     return points.join(ivs, cond, "inner")
 
 
-def nearest_interval(
-    points: DataFrame,
-    intervals: DataFrame,
-    point_key: str = "p_partkey",
-    interval_key: str = "sample_key",
-) -> DataFrame:
-    """bedtools-closest: for each point the nearest interval (distance 0 if
-    overlapping; ties broken by lowest interval key) — WITHOUT an all-pairs
+def nearest_interval(points: DataFrame, intervals: DataFrame) -> DataFrame:
+    """bedtools-closest: for each ``p_partkey`` point the nearest interval
+    (distance 0 if overlapping; ties broken by lowest ``sample_key``) — WITHOUT an all-pairs
     join, at any scale.
 
     Three bounded candidate sources, no pair blow-up anywhere:
@@ -132,10 +127,10 @@ def nearest_interval(
         "chromosome",
         F.col("begin").alias("k"),
         F.lit(0).alias("tag"),
-        F.struct(F.col("end").alias("e"), (-F.col(interval_key)).alias("nk")).alias("lcand"),
-        F.struct(F.col("begin").alias("b"), F.col(interval_key).alias("pk")).alias("rcand"),
+        F.struct(F.col("end").alias("e"), (-F.col("sample_key")).alias("nk")).alias("lcand"),
+        F.struct(F.col("begin").alias("b"), F.col("sample_key").alias("pk")).alias("rcand"),
         F.lit(None).cast("long").alias("position"),
-        F.lit(None).cast("long").alias(point_key),
+        F.lit(None).cast("long").alias("p_partkey"),
     )
     ev_pt = points.select(
         "chromosome",
@@ -144,7 +139,7 @@ def nearest_interval(
         F.lit(None).cast("struct<e:long,nk:long>").alias("lcand"),
         F.lit(None).cast("struct<b:long,pk:long>").alias("rcand"),
         "position",
-        point_key,
+        "p_partkey",
     )
     ev = ev_iv.unionByName(ev_pt)
     # ascending: intervals (tag 0) before points at equal k → begin <= pos
@@ -171,19 +166,19 @@ def nearest_interval(
     side = swept.select(
         "chromosome",
         "position",
-        point_key,
+        "p_partkey",
         F.when(use_left, kl).otherwise(kr).cast("bigint").alias("s_key"),
         F.when(use_left, dl).otherwise(dr).cast("bigint").alias("s_dist"),
     )
     ov = (
-        interval_join(points, intervals.select("chromosome", "begin", "end", interval_key))
-        .groupBy("chromosome", "position", point_key)
-        .agg(F.min(interval_key).alias("ov_key"))
+        interval_join(points, intervals.select("chromosome", "begin", "end", "sample_key"))
+        .groupBy("chromosome", "position", "p_partkey")
+        .agg(F.min("sample_key").alias("ov_key"))
     )
-    return side.join(ov, ["chromosome", "position", point_key], "left").select(
+    return side.join(ov, ["chromosome", "position", "p_partkey"], "left").select(
         "chromosome",
         "position",
-        point_key,
+        "p_partkey",
         F.coalesce(F.col("ov_key"), F.col("s_key")).cast("bigint").alias("nearest_key"),
         F.when(F.col("ov_key").isNotNull(), F.lit(0))
         .otherwise(F.col("s_dist"))
@@ -192,14 +187,8 @@ def nearest_interval(
     )
 
 
-def knn_intervals(
-    points: DataFrame,
-    intervals: DataFrame,
-    k: int = 3,
-    point_key: str = "p_partkey",
-    interval_key: str = "sample_key",
-) -> DataFrame:
-    """k nearest intervals per point by (distance, key) — WITHOUT a
+def knn_intervals(points: DataFrame, intervals: DataFrame, k: int = 3) -> DataFrame:
+    """k nearest intervals per ``p_partkey`` point by (distance, ``sample_key``) — WITHOUT a
     per-chromosome pair join, at any scale (the k>1 generalization of
     nearest_interval's sweep; replaces the plan that read 243 s at sf1,
     normalized 16.9, in the round-9 full-catalog smoke).
@@ -226,12 +215,12 @@ def knn_intervals(
     """
     from pyspark.sql.window import Window
 
-    iv = intervals.select("chromosome", "begin", "end", interval_key)
+    iv = intervals.select("chromosome", "begin", "end", "sample_key")
     iv_l = iv.withColumn(
         "rk",
         F.row_number().over(
             Window.partitionBy("chromosome").orderBy(
-                F.col("end").asc(), F.col(interval_key).desc()
+                F.col("end").asc(), F.col("sample_key").desc()
             )
         ),
     )
@@ -239,11 +228,11 @@ def knn_intervals(
         "rk",
         F.row_number().over(
             Window.partitionBy("chromosome").orderBy(
-                F.col("begin").asc(), F.col(interval_key).asc()
+                F.col("begin").asc(), F.col("sample_key").asc()
             )
         ),
     )
-    pts = points.select("chromosome", "position", point_key)
+    pts = points.select("chromosome", "position", "p_partkey")
 
     def swept_counts(iv_coord: str, iv_tag: int, pt_tag: int) -> DataFrame:
         ev_iv = iv.select(
@@ -252,7 +241,7 @@ def knn_intervals(
             F.lit(iv_tag).alias("tag"),
             F.lit(1).alias("is_iv"),
             F.lit(None).cast("long").alias("position"),
-            F.lit(None).cast("long").alias(point_key),
+            F.lit(None).cast("long").alias("p_partkey"),
         )
         ev_pt = pts.select(
             "chromosome",
@@ -260,7 +249,7 @@ def knn_intervals(
             F.lit(pt_tag).alias("tag"),
             F.lit(0).alias("is_iv"),
             "position",
-            point_key,
+            "p_partkey",
         )
         w = Window.partitionBy("chromosome").orderBy("kk", "tag").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
@@ -269,7 +258,7 @@ def knn_intervals(
             ev_iv.unionByName(ev_pt)
             .withColumn("c", F.sum("is_iv").over(w))
             .filter(F.col("is_iv") == 0)
-            .select("chromosome", "position", point_key, "c")
+            .select("chromosome", "position", "p_partkey", "c")
         )
 
     # left: points (tag 0) BEFORE interval ends (tag 1) at equal kk
@@ -281,27 +270,27 @@ def knn_intervals(
 
     offs = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("j")
     lcand = (
-        cl.select("chromosome", "position", point_key, "c", offs)
+        cl.select("chromosome", "position", "p_partkey", "c", offs)
         .withColumn("rk", F.col("c") - F.col("j"))
         .filter(F.col("rk") >= 1)
         .join(iv_l, ["chromosome", "rk"])
         .filter(F.col("end") < F.col("position"))
     )
     rcand = (
-        cr.select("chromosome", "position", point_key, "c", offs)
+        cr.select("chromosome", "position", "p_partkey", "c", offs)
         .withColumn("rk", F.col("c") + 1 + F.col("j"))
         .join(iv_r, ["chromosome", "rk"])
         .filter(F.col("begin") > F.col("position"))
     )
     ov = interval_join(pts, iv)
-    wov = Window.partitionBy("chromosome", "position", point_key).orderBy(
-        interval_key
+    wov = Window.partitionBy("chromosome", "position", "p_partkey").orderBy(
+        "sample_key"
     )
     ovc = (
         ov.withColumn("rn", F.row_number().over(wov))
         .filter(F.col("rn") <= k)
     )
-    cols = ["chromosome", "position", point_key, "begin", "end", interval_key]
+    cols = ["chromosome", "position", "p_partkey", "begin", "end", "sample_key"]
     pool = (
         lcand.select(*cols)
         .unionByName(rcand.select(*cols))
@@ -315,8 +304,8 @@ def knn_intervals(
             ),
         )
     )
-    wfin = Window.partitionBy("chromosome", "position", point_key).orderBy(
-        "distance", interval_key
+    wfin = Window.partitionBy("chromosome", "position", "p_partkey").orderBy(
+        "distance", "sample_key"
     )
     return (
         pool.withColumn("rn", F.row_number().over(wfin))
@@ -324,20 +313,15 @@ def knn_intervals(
         .select(
             "chromosome",
             "position",
-            point_key,
-            F.col(interval_key).cast("bigint").alias("nearest_key"),
+            "p_partkey",
+            F.col("sample_key").cast("bigint").alias("nearest_key"),
             F.col("distance").cast("bigint").alias("distance"),
             F.col("rn").cast("bigint").alias("k_rank"),
         )
     )
 
 
-def merge_intervals(
-    intervals: DataFrame,
-    chrom: str = "chromosome",
-    begin: str = "begin",
-    end: str = "end",
-) -> DataFrame:
+def merge_intervals(intervals: DataFrame) -> DataFrame:
     """bedtools merge: collapse overlapping/touching intervals per
     chromosome into maximal disjoint runs → (chromosome, begin, end,
     n_merged). Gaps-and-islands: sorted per chromosome, an interval opens
@@ -346,28 +330,23 @@ def merge_intervals(
     aggregate, no joins — scales to any interval count)."""
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(chrom).orderBy(begin, end)
-    prev_max = F.max(end).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    new_island = F.when(prev_max.isNull() | (F.col(begin) > prev_max), 1).otherwise(0)
+    w = Window.partitionBy("chromosome").orderBy("begin", "end")
+    prev_max = F.max("end").over(w.rowsBetween(Window.unboundedPreceding, -1))
+    new_island = F.when(prev_max.isNull() | (F.col("begin") > prev_max), 1).otherwise(0)
     island = F.sum(new_island).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (
         intervals.withColumn("_island", island)
-        .groupBy(chrom, "_island")
+        .groupBy("chromosome", "_island")
         .agg(
-            F.min(begin).alias(begin),
-            F.max(end).alias(end),
+            F.min("begin").alias("begin"),
+            F.max("end").alias("end"),
             F.count(F.lit(1)).cast("bigint").alias("n_merged"),
         )
         .drop("_island")
     )
 
 
-def complement_intervals(
-    intervals: DataFrame,
-    chrom: str = "chromosome",
-    begin: str = "begin",
-    end: str = "end",
-) -> DataFrame:
+def complement_intervals(intervals: DataFrame) -> DataFrame:
     """bedtools complement (within the covered span): the gaps BETWEEN
     merged coverage runs per chromosome → (chromosome, begin, end). The
     question varda's coverage model keeps asking inverted — "where do we
@@ -378,15 +357,15 @@ def complement_intervals(
     Two partitioned window passes, no joins — scales with interval count."""
     from pyspark.sql.window import Window
 
-    merged = merge_intervals(intervals, chrom, begin, end)
-    w = Window.partitionBy(chrom).orderBy(begin)
-    nxt = F.lead(begin).over(w)
+    merged = merge_intervals(intervals)
+    w = Window.partitionBy("chromosome").orderBy("begin")
+    nxt = F.lead("begin").over(w)
     return (
-        merged.select(chrom, F.col(begin), F.col(end), nxt.alias("_nxt"))
-        .filter(F.col("_nxt") > F.col(end) + 1)
+        merged.select("chromosome", F.col("begin"), F.col("end"), nxt.alias("_nxt"))
+        .filter(F.col("_nxt") > F.col("end") + 1)
         .select(
-            chrom,
-            (F.col(end) + 1).cast("bigint").alias(begin),
-            (F.col("_nxt") - 1).cast("bigint").alias(end),
+            "chromosome",
+            (F.col("end") + 1).cast("bigint").alias("begin"),
+            (F.col("_nxt") - 1).cast("bigint").alias("end"),
         )
     )

@@ -20,15 +20,14 @@ def merge_upsert(
     base: DataFrame,
     updates: DataFrame,
     keys: list[str],
-    order_col: str = "version",
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """Rows from `updates` replace same-key rows of `base`; highest
-    `order_col` wins. If the key may repeat WITHIN a version (dirty
+    `version` wins. If the key may repeat WITHIN a version (dirty
     input), pass `tiebreak` columns to make the survivor deterministic.
     Schema of both inputs must match."""
     merged = base.unionByName(updates)
-    order = [F.col(order_col).desc()] + [F.col(c) for c in (tiebreak or [])]
+    order = [F.col("version").desc()] + [F.col(c) for c in (tiebreak or [])]
     w = Window.partitionBy(*keys).orderBy(*order)
     return merged.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 

@@ -23,8 +23,6 @@ def pack_sequences(
     docs: DataFrame,
     max_tokens: int = 512,
     n_shards: int = 16,
-    key: str = "doc_id",
-    text: str = "text",
 ) -> DataFrame:
     """→ (shard, bin_id, doc_id, n_tokens, overflow): every input doc in
     exactly one bin; per-bin token sums ≤ max_tokens unless the single doc
@@ -33,19 +31,19 @@ def pack_sequences(
 
     # blank/NULL text splits to [''] (size 1) — count it as 0 tokens explicitly
     n_tokens = F.when(
-        F.col(text).isNull() | (F.trim(F.col(text)) == ""), F.lit(0)
-    ).otherwise(F.size(F.split(F.trim(F.col(text)), r"\s+")))
+        F.col("text").isNull() | (F.trim(F.col("text")) == ""), F.lit(0)
+    ).otherwise(F.size(F.split(F.trim(F.col("text")), r"\s+")))
     counted = docs.select(
-        F.col(key),
+        F.col("doc_id"),
         n_tokens.cast("bigint").alias("n_tokens"),
         (
-            F.conv(F.substring(F.md5(F.col(key).cast("string")), 1, 15), 16, 10).cast("bigint")
+            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10).cast("bigint")
             % n_shards
         ).alias("shard"),
     )
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(key).reset_index(drop=True)
+        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
         bins = []
         bin_id, fill = 0, 0
         for n in pdf["n_tokens"]:
@@ -55,10 +53,10 @@ def pack_sequences(
             fill += n
         pdf["bin_id"] = pd.Series(bins, dtype="int64")
         pdf["overflow"] = pdf["n_tokens"] > max_tokens
-        return pdf[["shard", "bin_id", key, "n_tokens", "overflow"]]
+        return pdf[["shard", "bin_id", "doc_id", "n_tokens", "overflow"]]
 
     # derive the key's type from the input — string ids from JSONL ingest
     # must survive, not be hammered into bigint
-    key_type = docs.schema[key].dataType.simpleString()
-    schema = f"shard bigint, bin_id bigint, {key} {key_type}, n_tokens bigint, overflow boolean"
+    key_type = docs.schema["doc_id"].dataType.simpleString()
+    schema = f"shard bigint, bin_id bigint, doc_id {key_type}, n_tokens bigint, overflow boolean"
     return counted.groupBy("shard").applyInPandas(_pack, schema)

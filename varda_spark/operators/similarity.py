@@ -70,8 +70,7 @@ def sign_word(emb: str, lo: int) -> str:
     )
 
 
-def sign_words64(df: DataFrame, id_col: str = "vec_id", emb: str = "embedding",
-                 scale: int = 10000) -> DataFrame:
+def sign_words64(df: DataFrame) -> DataFrame:
     """Encode a 64-dim embedding as two 32-bit sign words + quantized ints.
 
     (id, w1, w2, e_q): w1/w2 pack sign(x_i) into 8 bytes total — the
@@ -80,43 +79,32 @@ def sign_words64(df: DataFrame, id_col: str = "vec_id", emb: str = "embedding",
     e_q is the floor-quantized integer vector for the exact re-rank stage.
     All integer math → bit-exact across engines and batch/stream."""
     return df.select(
-        id_col,
-        F.expr(sign_word(emb, 1)).alias("w1"),
-        F.expr(sign_word(emb, 33)).alias("w2"),
-        quantized(emb, scale).alias("e_q"),
+        "vec_id",
+        F.expr(sign_word("embedding", 1)).alias("w1"),
+        F.expr(sign_word("embedding", 33)).alias("w2"),
+        quantized("embedding", 10000).alias("e_q"),
     )
 
 
-def cosine_topk(
-    emb: DataFrame,
-    k: int = 3,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    block: str | None = "label",
-) -> DataFrame:
-    """Top-k nearest neighbors per vector by cosine similarity.
-
-    block=None → brute force all-pairs (baseline, small data only);
-    block=<col> → IVF-style bucket self-join (the scale path).
+def cosine_topk(emb: DataFrame, k: int = 3) -> DataFrame:
+    """Top-k nearest neighbors per vector by cosine similarity, within
+    each ``label`` bucket: an IVF-style bucket self-join (the scale path).
     """
-    cols = [key, vec] + ([block] if block else [])
-    base = emb.select(*cols).withColumn("_norm", norm(vec))
+    base = emb.select("vec_id", "embedding", "label").withColumn("_norm", norm("embedding"))
     a = base.select([F.col(c).alias(f"a_{c}") for c in base.columns])
     b = base.select([F.col(c).alias(f"b_{c}") for c in base.columns])
-    cond = F.col(f"a_{key}") != F.col(f"b_{key}")
-    if block:
-        cond = cond & (F.col(f"a_{block}") == F.col(f"b_{block}"))
+    cond = (F.col("a_vec_id") != F.col("b_vec_id")) & (F.col("a_label") == F.col("b_label"))
     pairs = a.join(b, cond)
     pairs = pairs.withColumn(
-        "cosine", dot(f"a_{vec}", f"b_{vec}") / (F.col("a__norm") * F.col("b__norm"))
+        "cosine", dot("a_embedding", "b_embedding") / (F.col("a__norm") * F.col("b__norm"))
     )
-    w = Window.partitionBy(f"a_{key}").orderBy(F.col("cosine").desc(), F.col(f"b_{key}"))
+    w = Window.partitionBy("a_vec_id").orderBy(F.col("cosine").desc(), F.col("b_vec_id"))
     return (
         pairs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select(
-            F.col(f"a_{key}").alias("query_id"),
-            F.col(f"b_{key}").alias("neighbor_id"),
+            F.col("a_vec_id").alias("query_id"),
+            F.col("b_vec_id").alias("neighbor_id"),
             "cosine",
             F.col("rn").cast("bigint").alias("rank"),
         )
@@ -127,9 +115,7 @@ def blocked_topk_pandas(
     base: DataFrame,
     k: int = 3,
     *,
-    key: str = "vec_id",
     block: str = "label",
-    qcol: str = "_q",
     max_block: int = 8192,
 ) -> DataFrame:
     """Per-block exact top-k by integer dot product via applyInPandas.
@@ -144,7 +130,7 @@ def blocked_topk_pandas(
 
     ``max_block`` bounds the Arrow batch: a block with more than
     ``max_block`` rows is split into ceil(n/max_block) sub-blocks by a
-    hash of ``key`` (same shape as the dedup banding split), so a hot
+    hash of ``vec_id`` (same shape as the dedup banding split), so a hot
     IVF cell / label can neither straggle nor OOM an executor. RECALL
     NOTE: when the split triggers, neighbors are found within the
     sub-block only — exact for any block ≤ max_block (the salt is the
@@ -162,14 +148,14 @@ def blocked_topk_pandas(
     empty = pd.DataFrame(columns=[block, "query_id", "neighbor_id", "dot_q", "rank", "split"])
 
     def _block(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[key].to_numpy(dtype=np.int64)
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         n = len(ids)
         kk = min(k, n - 1)
         if kk <= 0:
             return empty
         was_split = bool(pdf["_bn"].iloc[0] > max_block)
         blk = pdf[block].iloc[0]
-        Q = np.vstack(pdf[qcol].to_numpy())
+        Q = np.vstack(pdf["_q"].to_numpy())
         G = Q @ Q.T  # int64, exact
         # Tie-break by neighbor id ascending, fully vectorized: permute the
         # columns into id-ascending order, then a STABLE row-wise argsort
@@ -201,40 +187,26 @@ def blocked_topk_pandas(
     )
     w = Window.partitionBy(block)
     sel = (
-        base.select(key, block, qcol)
+        base.select("vec_id", block, "_q")
         .withColumn("_bn", F.count(F.lit(1)).over(w))
         .withColumn(
             "_salt",
-            F.pmod(F.xxhash64(F.col(key)), F.greatest(F.lit(1), F.ceil(F.col("_bn") / max_block))),
+            F.pmod(F.xxhash64(F.col("vec_id")), F.greatest(F.lit(1), F.ceil(F.col("_bn") / max_block))),
         )
     )
     return sel.groupBy(block, "_salt").applyInPandas(_block, schema)
 
 
-def quantized_topk_fast(
-    emb: DataFrame,
-    k: int = 3,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    block: str = "label",
-    scale: int = 10000,
-) -> DataFrame:
+def quantized_topk_fast(emb: DataFrame) -> DataFrame:
     """quantized_topk semantics on the blocked-matmul path (bit-identical
     output, pytest-compared against the pure-DF reference)."""
-    base = emb.select(F.col(key).alias("vec_id"), block, quantized(vec, scale).alias("_q"))
-    return blocked_topk_pandas(base, k, key="vec_id", block=block).select(
+    base = emb.select("vec_id", "label", quantized("embedding", 10000).alias("_q"))
+    return blocked_topk_pandas(base).select(
         "query_id", "neighbor_id", "dot_q", "rank"
     )
 
 
-def quantized_neardup(
-    emb: DataFrame,
-    threshold_pct: int = 80,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    block: str = "label",
-    scale: int = 1000,
-) -> DataFrame:
+def quantized_neardup(emb: DataFrame, threshold_pct: int = 80) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b) within a block.
 
     cos_pct = floor(100 * dot / sqrt(|a|²·|b|²)) over integer-quantized
@@ -244,21 +216,18 @@ def quantized_neardup(
     100 TB the block key is an LSH/IVF cell, never a full cross join).
     """
     base = (
-        emb.select(key, block, quantized(vec, scale).alias("_q"))
+        emb.select("vec_id", "label", quantized("embedding", 1000).alias("_q"))
         .withColumn("_n2", qdot("_q", "_q"))
     )
     # same blocked-matmul verification as the LSH path (one gram matrix per
     # block instead of a per-pair fold) — see _blocked_cos_pairs
-    return _blocked_cos_pairs(base, threshold_pct, key=key, block=block)
+    return _blocked_cos_pairs(base, threshold_pct, block="label")
 
 
 def ivf_topk(
     emb: DataFrame,
     n_centroids: int = 8,
     k: int = 3,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 1000,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style ANN: coarse-quantize to the nearest of n_centroids seed
@@ -273,13 +242,13 @@ def ivf_topk(
     load_centroids — repeated queries then skip both the seed selection
     and any refit; n_centroids is ignored.
     """
-    q_ = emb.select(key, quantized(vec, scale).alias("_q"))
+    q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
     if centroids is not None:
         cents = centroids.select("cell_id", F.col("_ce").alias("_qc"))
     else:
         cents = (
-            q_.orderBy(key).limit(n_centroids)
-            .select(F.col(key).alias("cell_id"), F.col("_q").alias("_qc"))
+            q_.orderBy("vec_id").limit(n_centroids)
+            .select(F.col("vec_id").alias("cell_id"), F.col("_q").alias("_qc"))
         )
     # max-dot assignment as one numpy matmul per Arrow batch — O(n·nlist)
     # multiplies but never O(n·nlist) materialized ROWS (the previous
@@ -287,10 +256,8 @@ def ivf_topk(
     # reads 13 s). Ties break to the smallest cell_id: rows are sorted
     # cell_id-ascending and np.argmax takes the FIRST maximum, identical
     # to the oracle's (cd DESC, cell_id) ordering.
-    assigned = _assign_to_centroids_dot(q_, cents, key)
-    topk = blocked_topk_pandas(
-        assigned.withColumnRenamed(key, "vec_id"), k, key="vec_id", block="cell_id"
-    )
+    assigned = _assign_to_centroids_dot(q_, cents, "vec_id")
+    topk = blocked_topk_pandas(assigned, k, block="cell_id")
     return topk.select(
         "query_id",
         F.col("cell_id").cast("bigint").alias("cell_id"),
@@ -300,18 +267,11 @@ def ivf_topk(
     )
 
 
-def quantized_topk(
-    emb: DataFrame,
-    k: int = 3,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    block: str = "label",
-    scale: int = 10000,
-) -> DataFrame:
+def quantized_topk(emb: DataFrame, k: int = 3) -> DataFrame:
     """Oracle-exact variant: rank by integer quantized dot product."""
-    base = emb.select(key, block, quantized(vec, scale).alias("_q"))
-    a = base.select(F.col(key).alias("query_id"), F.col(block).alias("_bl"), F.col("_q").alias("_qa"))
-    b = base.select(F.col(key).alias("neighbor_id"), F.col(block).alias("_bl"), F.col("_q").alias("_qb"))
+    base = emb.select("vec_id", "label", quantized("embedding", 10000).alias("_q"))
+    a = base.select(F.col("vec_id").alias("query_id"), F.col("label").alias("_bl"), F.col("_q").alias("_qa"))
+    b = base.select(F.col("vec_id").alias("neighbor_id"), F.col("label").alias("_bl"), F.col("_q").alias("_qb"))
     pairs = a.join(b, ["_bl"]).filter(F.col("query_id") != F.col("neighbor_id"))
     pairs = pairs.withColumn("dot_q", qdot("_qa", "_qb"))
     w = Window.partitionBy("query_id").orderBy(F.col("dot_q").desc(), F.col("neighbor_id"))
@@ -339,32 +299,22 @@ def lsh_hyperplane_coefs(tables: int = 4, bits: int = 4, dim: int = 64) -> list[
     ]
 
 
-def lsh_neardup(
-    emb: DataFrame,
-    threshold_pct: int = 30,
-    *,
-    tables: int = 4,
-    bits: int = 6,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 1000,
-    dim: int = 64,
-) -> DataFrame:
+def lsh_neardup(emb: DataFrame) -> DataFrame:
     """Content-based ANN near-dup: multi-table hyperplane LSH buckets as
     candidate generation, exact quantized cosine as verification.
 
     Unlike the label-blocked quantized_neardup, the blocking key here is
     derived from the VECTOR itself — the true 100 TB shape when no label
-    exists: `tables` independent b-bit sign sketches, a pair collides if it
-    agrees on ALL b bits of ANY table (collision prob (1-θ/π)^b per table).
-    Bucket fan-out is bounded by 2^bits per table; candidates are verified
-    with the exact integer-math cosine before emit, so false positives cost
-    only the verification dot product. All integer/single-IEEE-op math —
-    oracle-exact.
+    exists: 4 independent 6-bit sign sketches, a pair collides if it
+    agrees on ALL 6 bits of ANY table (collision prob (1-θ/π)^6 per table).
+    Bucket fan-out is bounded by 2^6 per table; candidates are verified
+    with the exact integer-math cosine (cos_pct >= 30) before emit, so
+    false positives cost only the verification dot product. All
+    integer/single-IEEE-op math — oracle-exact.
     """
-    buckets = lsh_buckets(emb, tables=tables, bits=bits, key=key, vec=vec, scale=scale, dim=dim)
+    buckets = lsh_buckets(emb)
     # a pair may collide in several tables; emit once
-    return _blocked_cos_pairs(buckets, threshold_pct, key=key, block="_bucket").distinct()
+    return _blocked_cos_pairs(buckets, 30, block="_bucket").distinct()
 
 
 def lsh_buckets(
@@ -372,8 +322,6 @@ def lsh_buckets(
     *,
     tables: int = 4,
     bits: int = 6,
-    key: str = "vec_id",
-    vec: str = "embedding",
     scale: int = 1000,
     dim: int = 64,
 ) -> DataFrame:
@@ -383,8 +331,8 @@ def lsh_buckets(
     import numpy as np
 
     coefs = lsh_hyperplane_coefs(tables, bits, dim)
-    base = emb.select(key, quantized(vec, scale).alias("_q"))
-    key_t = base.schema[key].dataType.simpleString()
+    base = emb.select("vec_id", quantized("embedding", scale).alias("_q"))
+    key_t = base.schema["vec_id"].dataType.simpleString()
     # r14 (guide §4.2): the tables·bits sign sketches were per-row
     # zip_with/aggregate folds — higher-order lambdas run interpreted
     # outside codegen, ~6M lambda invocations at sf0.1. One int64 matmul
@@ -401,7 +349,7 @@ def lsh_buckets(
             if not len(pdf):
                 continue
             Q = np.vstack(pdf["_q"].to_numpy()).astype(np.int64)
-            ids = pdf[key].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             n = len(pdf)
             S = Q @ H.T  # (n, tables·bits), exact int64
             sbits = np.where(S >= 0, "1", "0")
@@ -415,7 +363,7 @@ def lsh_buckets(
             n2 = (Q * Q).sum(axis=1)
             yield pd.DataFrame(
                 {
-                    key: np.repeat(ids, tables),
+                    "vec_id": np.repeat(ids, tables),
                     "_q": [list(q) for q in Q for _ in range(tables)],
                     "_n2": np.repeat(n2, tables),
                     "_bucket": [b for row in bucket_strs for b in row],
@@ -423,26 +371,17 @@ def lsh_buckets(
             )
 
     return base.mapInPandas(
-        _tag, f"{key} {key_t}, _q array<bigint>, _n2 bigint, _bucket string"
+        _tag, f"vec_id {key_t}, _q array<bigint>, _n2 bigint, _bucket string"
     )
 
 
-def lsh_candidate_pairs(
-    emb: DataFrame,
-    *,
-    tables: int = 4,
-    bits: int = 6,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 1000,
-    dim: int = 64,
-) -> DataFrame:
+def lsh_candidate_pairs(emb: DataFrame) -> DataFrame:
     """Raw bucket-collision pairs (doc_a < doc_b), NO cosine verification —
     the candidate-generation surface whose recall sim_lsh_recall audits.
     Bucket equi-join, fan-out bounded by per-bucket occupancy."""
-    buckets = lsh_buckets(emb, tables=tables, bits=bits, key=key, vec=vec, scale=scale, dim=dim)
-    a = buckets.select(F.col(key).alias("doc_a"), F.col("_bucket").alias("_ba"))
-    b = buckets.select(F.col(key).alias("doc_b"), F.col("_bucket").alias("_bb"))
+    buckets = lsh_buckets(emb)
+    a = buckets.select(F.col("vec_id").alias("doc_a"), F.col("_bucket").alias("_ba"))
+    b = buckets.select(F.col("vec_id").alias("doc_b"), F.col("_bucket").alias("_bb"))
     return (
         a.join(b, (F.col("_ba") == F.col("_bb")) & (F.col("doc_a") < F.col("doc_b")))
         .select("doc_a", "doc_b")
@@ -450,9 +389,7 @@ def lsh_candidate_pairs(
     )
 
 
-def _blocked_cos_pairs(
-    blocks: DataFrame, threshold_pct: int, *, key: str, block: str
-) -> DataFrame:
+def _blocked_cos_pairs(blocks: DataFrame, threshold_pct: int, *, block: str) -> DataFrame:
     """Within-block cosine-threshold pairs via ONE int64 matmul per block
     (applyInPandas), not a per-pair zip_with fold: each candidate pair's
     dot is a cell of the block's gram matrix, and fold lambdas are not
@@ -460,7 +397,7 @@ def _blocked_cos_pairs(
     sf0.1) with bit-identical output (int64 dot; float64 sqrt/div/floor
     are single IEEE ops numpy and the JVM both round correctly).
 
-    `blocks` must carry (key, _q, _n2, block); emits (doc_a < doc_b,
+    `blocks` must carry (vec_id, _q, _n2, block); emits (doc_a < doc_b,
     cos_pct) within each block.
     """
     import numpy as np
@@ -472,8 +409,8 @@ def _blocked_cos_pairs(
         n = len(pdf)
         if n < 2:
             return pd.DataFrame({"doc_a": [], "doc_b": [], "cos_pct": []}).astype("int64")
-        pdf = pdf.sort_values(key).reset_index(drop=True)  # triu ⇒ doc_a < doc_b
-        ids = pdf[key].to_numpy(dtype=np.int64)
+        pdf = pdf.sort_values("vec_id").reset_index(drop=True)  # triu ⇒ doc_a < doc_b
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         Q = np.vstack(pdf["_q"].to_numpy())
         n2 = pdf["_n2"].to_numpy(dtype=np.int64)
         G = Q @ Q.T  # int64, exact
@@ -579,9 +516,6 @@ def kmeans_fit(
     emb: DataFrame,
     k: int = 8,
     iters: int = 3,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 1000,
 ) -> DataFrame:
     """Fit deterministic Lloyd's k-means; returns the FITTED MODEL as a
     k-row DataFrame (cell_id bigint, _ce array<bigint>) — persistable via
@@ -598,7 +532,7 @@ def kmeans_fit(
     driver-trivial. Fixed iteration count (no convergence action) keeps
     the plan static and the oracle replicable.
     """
-    q_ = emb.select(key, quantized(vec, scale).alias("_q"))
+    q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
     # Small-corpus fast path (the union-find / kcenter discipline):
     # Lloyd's loop is iters sequential rounds of centroid-collect +
     # assignment scan + (cell,dim) shuffle + checkpoint — ~6 jobs/round
@@ -613,7 +547,7 @@ def kmeans_fit(
 
     rows = q_.limit(_LOCAL_SOLVER_THRESHOLD + 1).collect()
     if len(rows) <= _LOCAL_SOLVER_THRESHOLD and rows:
-        ids = np.array([r[key] for r in rows])
+        ids = np.array([r["vec_id"] for r in rows])
         X = np.array([r["_q"] for r in rows], dtype=np.int64)
         order = np.argsort(ids, kind="stable")
         X = X[order]
@@ -635,13 +569,13 @@ def kmeans_fit(
     # over k rows, but the non-foldable constant survives Catalyst (a bare
     # literal is folded out of the partitionSpec) so WindowExec stops
     # spamming "No Partition Defined" across every log tail
-    w0 = Window.partitionBy(F.pmod(F.col(key), F.lit(1))).orderBy(key)
+    w0 = Window.partitionBy(F.pmod(F.col("vec_id"), F.lit(1))).orderBy("vec_id")
     cents = (
-        q_.orderBy(key).limit(k)
+        q_.orderBy("vec_id").limit(k)
         .select((F.row_number().over(w0) - 1).alias("cell_id"), F.col("_q").alias("_ce"))
     )
     for _ in range(iters):
-        assigned = _assign_to_centroids(q_, cents, key)
+        assigned = _assign_to_centroids(q_, cents, "vec_id")
         # centroid update stays the exploded (cell, dim) aggregate ON
         # PURPOSE: partial aggregation combines map-side down to k·dim rows
         # before the wire, and no task ever holds a whole cell — a per-cell
@@ -683,9 +617,6 @@ def kmeans_assign(
     emb: DataFrame,
     k: int = 8,
     iters: int = 3,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 1000,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Assign every vector to its k-means cell → (vec_id, cell_id): the
@@ -697,10 +628,10 @@ def kmeans_assign(
     and is a single map-side pass; k/iters are ignored. Bit-equal to the
     refit path for the same model by construction (same closure-shipped
     argmin math — proven in tests/test_llm_ops.py)."""
-    q_ = emb.select(key, quantized(vec, scale).alias("_q"))
-    cents = centroids if centroids is not None else kmeans_fit(emb, k, iters, key, vec, scale)
-    assigned = _assign_to_centroids(q_, cents, key)
-    return assigned.select(key, F.col("cell_id").cast("bigint").alias("cell_id"))
+    q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
+    cents = centroids if centroids is not None else kmeans_fit(emb, k, iters)
+    assigned = _assign_to_centroids(q_, cents, "vec_id")
+    return assigned.select("vec_id", F.col("cell_id").cast("bigint").alias("cell_id"))
 
 
 # ---------------------------------------------------------------------
@@ -714,13 +645,13 @@ def kmeans_assign(
 # ---------------------------------------------------------------------
 
 
-def _pq_codebooks(emb: DataFrame, m: int, k: int, key: str, vec: str, scale: int):
+def _pq_codebooks(emb: DataFrame, m: int, k: int, key: str = "vec_id"):
     """Deterministic PQ codebooks: the k lowest-key vectors' quantized
     subvectors, code id 0..k-1 in key order (the sim_ivf quantizer-init
     discipline — engine-portable, no RNG). Returns (subC, dsub, q_)."""
     import numpy as np
 
-    q_ = emb.select(key, quantized(vec, scale).alias("_q"))
+    q_ = emb.select(key, quantized("embedding", 1000).alias("_q"))
     rows = q_.orderBy(key).limit(k).collect()  # k rows — driver state
     C = np.array([r["_q"] for r in rows], dtype=np.int64)
     dim = C.shape[1]
@@ -736,9 +667,6 @@ def pq_fit(
     m: int = 4,
     k: int = 8,
     iters: int = 2,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 1000,
 ):
     """Lloyd-refine the PQ codebooks per subspace (the k-means step of
     Jégou et al. 2011 §II): init = the deterministic lowest-key
@@ -747,7 +675,7 @@ def pq_fit(
     codeword as the per-dimension floor-mean of its assigned
     subvectors (empty codewords keep their previous value). Returns the
     refined codebooks as a list of m (k × dsub) int64 arrays, passable
-    to pq_codes / pq_adc_topk via ``codebooks=``.
+    to pq_codes via ``codebooks=``.
 
     Scale shape: each iteration is ONE corpus pass; the mapInPandas
     kernel reduces every Arrow batch down to per-(subspace, code, dim)
@@ -760,7 +688,7 @@ def pq_fit(
     index build runs first."""
     import numpy as np
 
-    subC, dsub, q_ = _pq_codebooks(emb, m, k, key, vec, scale)
+    subC, dsub, q_ = _pq_codebooks(emb, m, k)
     for _ in range(iters):
         def _stats(batches, subC=subC, dsub=dsub, m=m, k=k):
             import pandas as pd
@@ -800,16 +728,9 @@ def pq_fit(
     return subC
 
 
-def pq_codes(
-    emb: DataFrame,
-    m: int = 4,
-    k: int = 8,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 1000,
-    codebooks=None,
-) -> DataFrame:
-    """PQ-encode every vector: (key, code_0..code_{m-1}, qerr).
+def pq_codes(emb: DataFrame, key: str = "vec_id", codebooks=None) -> DataFrame:
+    """PQ-encode every vector: (key, code_0..code_3, qerr) over 4
+    subspaces of 8 codewords each.
 
     Each subspace assigns to the argmin integer-L2 codeword (ties →
     lowest code id: np.argmin takes the first minimum over id-ascending
@@ -821,7 +742,8 @@ def pq_codes(
     lowest-key init."""
     import numpy as np
 
-    subC, dsub, q_ = _pq_codebooks(emb, m, k, key, vec, scale)
+    m = 4
+    subC, dsub, q_ = _pq_codebooks(emb, m, 8, key)
     if codebooks is not None:
         subC = codebooks
 
@@ -848,12 +770,7 @@ def pq_adc_topk(
     emb: DataFrame,
     n_queries: int = 5,
     topk: int = 3,
-    m: int = 4,
-    k: int = 8,
     key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 1000,
-    codebooks=None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: the n_queries
     lowest-key vectors probe the encoded corpus; distance(query, doc) =
@@ -866,13 +783,12 @@ def pq_adc_topk(
     keeps just the local top-k per query (np.argpartition over the
     total (adc, key) order), so the final exact window ranks
     batches·q·topk survivors, never n·q rows — the standard two-phase
-    top-k. Exact integer math; ties → lowest key. ``codebooks`` (e.g.
-    from pq_fit) overrides the deterministic lowest-key init."""
+    top-k. Exact integer math; ties → lowest key. The codebooks are
+    pq_codes' deterministic lowest-key init (4 subspaces × 8 codewords)."""
     import numpy as np
 
-    subC, dsub, q_ = _pq_codebooks(emb, m, k, key, vec, scale)
-    if codebooks is not None:
-        subC = codebooks
+    m = 4
+    subC, dsub, q_ = _pq_codebooks(emb, m, 8, key)
     qrows = q_.orderBy(key).limit(n_queries).collect()
     Qm = np.array([r["_q"] for r in qrows], dtype=np.int64)  # q × dim
     qids = np.array([r[key] for r in qrows])  # key-type-generic (ADVICE r6)
@@ -911,7 +827,7 @@ def pq_adc_topk(
             yield pd.DataFrame(out)
 
     key_t = q_.schema[key].dataType.simpleString()
-    codes_df = pq_codes(emb, m, k, key, vec, scale, codebooks=codebooks)
+    codes_df = pq_codes(emb, key)
     local = codes_df.mapInPandas(
         _scan, f"query_id {key_t}, {key} {key_t}, adc bigint"
     )
@@ -923,19 +839,12 @@ def pq_adc_topk(
     )
 
 
-def semantic_dedup(
-    emb: DataFrame,
-    threshold_pct: int = 95,
-    n_centroids: int | None = None,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 100,
-) -> DataFrame:
+def semantic_dedup(emb: DataFrame) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): embedding-space
     near-duplicate removal. Vectors cluster into √n cells (argmax
     integer dot vs the √n lowest-key seed vectors — the sim_ivf_scaled
     discipline), then only WITHIN-cell pairs are tested for cosine ≥
-    threshold; the higher id of each duplicate pair is removable.
+    95%; the higher id of each duplicate pair is removable.
     Returns per-cell stats: (cell_id, n_vecs, n_pairs, n_dup_pairs,
     n_removed).
 
@@ -952,26 +861,25 @@ def semantic_dedup(
     the oracle twins bit-exactly — no float cosine anywhere."""
     import numpy as np
 
-    q_ = emb.select(key, quantized(vec, scale).alias("_q"))
-    if n_centroids is None:
-        import math
+    import math
 
-        n_centroids = max(8, math.isqrt(q_.count()))
+    q_ = emb.select("vec_id", quantized("embedding", 100).alias("_q"))
+    n_centroids = max(8, math.isqrt(q_.count()))
     cents = (
-        q_.orderBy(key).limit(n_centroids)
-        .select(F.col(key).alias("cell_id"), F.col("_q").alias("_qc"))
+        q_.orderBy("vec_id").limit(n_centroids)
+        .select(F.col("vec_id").alias("cell_id"), F.col("_q").alias("_qc"))
     )
-    assigned = _assign_to_centroids_dot(q_, cents, key)
-    thr2 = threshold_pct * threshold_pct
+    assigned = _assign_to_centroids_dot(q_, cents, "vec_id")
+    thr2 = 95 * 95
 
     def _cell_stats(pdf):
         # thr2 bound by closure, NOT a default arg: a second parameter
         # makes applyInPandas pass (grouping_key, pdf) instead of pdf
         import pandas as pd
 
-        pdf = pdf.sort_values(key)  # a<b by id == upper triangle
+        pdf = pdf.sort_values("vec_id")  # a<b by id == upper triangle
         X = np.vstack(pdf["_q"].to_numpy())
-        ids = pdf[key].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         n = len(ids)
         cell = pdf["cell_id"].iloc[0]
         if n < 2:
@@ -998,33 +906,27 @@ def semantic_dedup(
 
 
 def exact_l2_topk(
-    emb: DataFrame,
-    n_queries: int = 5,
-    topk: int = 3,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 1000,
-    exclude_self: bool = False,
+    emb: DataFrame, n_queries: int = 5, scale: int = 1000, exclude_self: bool = False
 ) -> DataFrame:
-    """Exact integer-L2 top-k for a FIXED probe set: the ground truth an
+    """Exact integer-L2 top-3 for a FIXED probe set: the ground truth an
     ANN index (ivf_pq_topk / pq_adc_topk) is evaluated against. The
     n_queries lowest-key vectors ride the task closure (q·dim ints);
     the corpus pass is one mapInPandas with per-Arrow-batch local top-k
-    under the total (d², key) order, and the final window ranks only
-    batches·q·topk survivors — linear in n for fixed q, never n·q
+    under the total (d², vec_id) order, and the final window ranks only
+    batches·q·3 survivors — linear in n for fixed q, never n·q
     materialized rows. All-integer; ties → lowest key. With
     ``exclude_self`` the probe row itself is masked out of its own
     candidate list (for comparing against indexes that exclude self,
     e.g. sim_hamming_topk)."""
     import numpy as np
 
-    q_ = emb.select(key, quantized(vec, scale).alias("_q"))
-    key_t = q_.schema[key].dataType.simpleString()
-    qrows = q_.orderBy(key).limit(n_queries).collect()
+    q_ = emb.select("vec_id", quantized("embedding", scale).alias("_q"))
+    key_t = q_.schema["vec_id"].dataType.simpleString()
+    qrows = q_.orderBy("vec_id").limit(n_queries).collect()
     Qm = np.array([r["_q"] for r in qrows], dtype=np.int64)
-    qids = np.array([r[key] for r in qrows])
+    qids = np.array([r["vec_id"] for r in qrows])
 
-    def _scan(batches, Qm=Qm, qids=qids, topk=topk, exclude_self=exclude_self):
+    def _scan(batches, Qm=Qm, qids=qids, exclude_self=exclude_self):
         import pandas as pd
 
         for pdf in batches:
@@ -1032,59 +934,51 @@ def exact_l2_topk(
             if not n:
                 continue
             X = np.vstack(pdf["_q"].to_numpy())
-            ids = pdf[key].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             # d²[q, i] = |x_i|² − 2 q·x_i + |q|²; exact int64
             d2 = (
                 (X * X).sum(axis=1)[None, :]
                 - 2 * (Qm @ X.T)
                 + (Qm * Qm).sum(axis=1)[:, None]
             )
-            out = {"query_id": [], key: [], "d2": []}
-            kk = min(topk, n)
+            out = {"query_id": [], "vec_id": [], "d2": []}
+            kk = min(3, n)
             for qi in range(len(qids)):
                 if exclude_self:
                     d2[qi][ids == qids[qi]] = np.iinfo(np.int64).max - 1
                 order = np.lexsort((ids, d2[qi]))[:kk]
                 out["query_id"].extend([qids[qi]] * kk)
-                out[key].extend(ids[order])
+                out["vec_id"].extend(ids[order])
                 out["d2"].extend(d2[qi][order])
             yield pd.DataFrame(out)
 
-    local = q_.mapInPandas(_scan, f"query_id {key_t}, {key} {key_t}, d2 bigint")
-    w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col(key).asc())
+    local = q_.mapInPandas(_scan, f"query_id {key_t}, vec_id {key_t}, d2 bigint")
+    w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("vec_id").asc())
     return (
         local.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "rank", key, "d2")
+        .filter(F.col("rank") <= 3)
+        .select("query_id", "rank", "vec_id", "d2")
     )
 
 
-def query_sample_dot_topk(
-    emb: DataFrame,
-    n_queries: int = 50,
-    topk: int = 5,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 100,
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
-    """Exact max-dot top-k of a lowest-key query sample vs the full
+def query_sample_dot_topk(emb: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """Exact max-dot top-5 of the 50 lowest-key queries vs the full
     corpus in ONE scan — the similarity twin of exact_l2_topk: the
     q×dim integer query matrix rides the task closure, each Arrow
     batch is one int64 matmul (Xb @ Qᵀ), the kernel keeps the local
-    top-k per query under the total (dot DESC, key ASC) order with
-    SELF-matches excluded, and the final window ranks batches·q·topk
+    top-5 per query under the total (dot DESC, vec_id ASC) order with
+    SELF-matches excluded, and the final window ranks batches·q·5
     survivors — linear in n for fixed q, never n·q materialized rows.
     ``carry`` columns (e.g. a label) ride along per neighbor row."""
     import numpy as np
 
-    q_ = emb.select(key, *carry, quantized(vec, scale).alias("_q"))
-    key_t = q_.schema[key].dataType.simpleString()
-    qrows = q_.orderBy(key).limit(n_queries).collect()
+    q_ = emb.select("vec_id", *carry, quantized("embedding", 100).alias("_q"))
+    key_t = q_.schema["vec_id"].dataType.simpleString()
+    qrows = q_.orderBy("vec_id").limit(50).collect()
     Qm = np.array([r["_q"] for r in qrows], dtype=np.int64)
-    qids = np.array([r[key] for r in qrows])
+    qids = np.array([r["vec_id"] for r in qrows])
 
-    def _scan(batches, Qm=Qm, qids=qids, topk=topk, carry=carry):
+    def _scan(batches, Qm=Qm, qids=qids, carry=carry):
         import pandas as pd
 
         for pdf in batches:
@@ -1092,19 +986,19 @@ def query_sample_dot_topk(
             if not n:
                 continue
             X = np.vstack(pdf["_q"].to_numpy())
-            ids = pdf[key].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             dots = X @ Qm.T  # n × q, exact int64
-            out = {"query_id": [], key: [], "dot": []}
+            out = {"query_id": [], "vec_id": [], "dot": []}
             for c in carry:
                 out[c] = []
-            kk = min(topk, n)
+            kk = min(5, n)
             cvals = {c: pdf[c].to_numpy() for c in carry}
             for qi in range(len(qids)):
                 col = dots[:, qi].copy()
                 col[ids == qids[qi]] = np.iinfo(np.int64).min + 1  # self out
                 order = np.lexsort((ids, -col))[:kk]
                 out["query_id"].extend([qids[qi]] * kk)
-                out[key].extend(ids[order])
+                out["vec_id"].extend(ids[order])
                 out["dot"].extend(col[order])
                 for c in carry:
                     out[c].extend(cvals[c][order])
@@ -1113,58 +1007,46 @@ def query_sample_dot_topk(
     carry_t = "".join(
         f", {c} {q_.schema[c].dataType.simpleString()}" for c in carry
     )
-    local = q_.mapInPandas(_scan, f"query_id {key_t}, {key} {key_t}, dot bigint{carry_t}")
-    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col(key).asc())
+    local = q_.mapInPandas(_scan, f"query_id {key_t}, vec_id {key_t}, dot bigint{carry_t}")
+    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("vec_id").asc())
     return (
         local.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "rank", key, "dot", *carry)
+        .filter(F.col("rank") <= 5)
+        .select("query_id", "rank", "vec_id", "dot", *carry)
     )
 
 
-def ivf_pq_topk(
-    emb: DataFrame,
-    ncells: int = 8,
-    nprobe: int = 2,
-    n_queries: int = 5,
-    topk: int = 3,
-    m: int = 4,
-    k: int = 8,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 1000,
-    codebooks=None,
-) -> DataFrame:
-    """IVF-PQ: the composed production ANN index. IVF routes (each query
-    probes its nprobe best coarse cells), PQ compresses (the scan inside
-    probed cells reads codes only, distances by ADC lookup) — together
-    they bound BOTH how many rows a query touches and how many bytes
-    per row, which is the whole 100 TB ANN story.
+def ivf_pq_topk(emb: DataFrame) -> DataFrame:
+    """IVF-PQ top-3: the composed production ANN index. IVF routes (each
+    of the 5 lowest-key queries probes its 2 best of 8 coarse cells), PQ
+    compresses (the scan inside probed cells reads codes only, distances
+    by ADC lookup) — together they bound BOTH how many rows a query
+    touches and how many bytes per row, which is the whole 100 TB ANN
+    story.
 
-    One corpus pass encodes cell id (argmax integer dot vs the ncells
-    lowest-key seed vectors — the sim_ivf discipline) AND the m PQ codes
-    (argmin integer L2 per subspace). Query routing and LUT construction
-    are driver-side numpy over ncells·m·k ints (index metadata, like any
-    fitted model); the probe table (n_queries·nprobe rows carrying the
-    LUT arrays) broadcasts into an equi-join on cell_id, so the only
+    One corpus pass encodes cell id (argmax integer dot vs the 8
+    lowest-key seed vectors — the sim_ivf discipline) AND the 4 PQ codes
+    (argmin integer L2 per subspace, 8 codewords each). Query routing and
+    LUT construction are driver-side numpy over 8·4·8 ints (index
+    metadata, like any fitted model); the probe table (5·2 rows carrying
+    the LUT arrays) broadcasts into an equi-join on cell_id, so the only
     corpus-side work after encode is a broadcast-filtered scan with
     element_at lookups — whole-stage-codegen Column math, no python.
     Ties everywhere break to the lowest id; all-integer → oracle-exact.
     """
     import numpy as np
 
-    subC, dsub, q_ = _pq_codebooks(emb, m, k, key, vec, scale)
-    if codebooks is not None:  # e.g. pq_fit output; same plan shape
-        subC = codebooks
-    key_t = q_.schema[key].dataType.simpleString()
-    crows = q_.orderBy(key).limit(ncells).collect()
+    m = 4
+    subC, dsub, q_ = _pq_codebooks(emb, m, 8)
+    key_t = q_.schema["vec_id"].dataType.simpleString()
+    crows = q_.orderBy("vec_id").limit(8).collect()
     C2 = np.array([r["_q"] for r in crows], dtype=np.int64)
-    cids = np.array([r[key] for r in crows])  # key-type-generic
+    cids = np.array([r["vec_id"] for r in crows])  # key-type-generic
 
     def _enc(batches, C2=C2, cids=cids, subC=subC, dsub=dsub, m=m):
         for pdf in batches:
             Q = np.vstack(pdf["_q"].to_numpy())
-            out = pdf[[key]].copy()
+            out = pdf[["vec_id"]].copy()
             S = Q @ C2.T
             out["cell_id"] = cids[S.argmax(axis=1)]
             for j in range(m):
@@ -1174,12 +1056,12 @@ def ivf_pq_topk(
             yield out
 
     code_cols = ", ".join(f"code_{j} bigint" for j in range(m))
-    enc = q_.mapInPandas(_enc, f"{key} {key_t}, cell_id {key_t}, {code_cols}")
+    enc = q_.mapInPandas(_enc, f"vec_id {key_t}, cell_id {key_t}, {code_cols}")
 
-    qrows = q_.orderBy(key).limit(n_queries).collect()
+    qrows = q_.orderBy("vec_id").limit(5).collect()
     Qm = np.array([r["_q"] for r in qrows], dtype=np.int64)
-    qids = [r[key] for r in qrows]
-    qd = Qm @ C2.T  # n_queries × ncells coarse dots
+    qids = [r["vec_id"] for r in qrows]
+    qd = Qm @ C2.T  # queries × cells coarse dots
     probe_rows = []
     for qi, qid in enumerate(qids):
         luts = [
@@ -1188,8 +1070,8 @@ def ivf_pq_topk(
             ).sum(axis=1).tolist()
             for j in range(m)
         ]
-        # nprobe best cells by (dot DESC, cell_id ASC)
-        order = np.lexsort((cids, -qd[qi]))[:nprobe]
+        # 2 best cells by (dot DESC, cell_id ASC)
+        order = np.lexsort((cids, -qd[qi]))[:2]
         for ci in order:
             probe_rows.append((qid, cids[ci].item(), *luts))
     lut_cols = ", ".join(f"l{j} array<bigint>" for j in range(m))
@@ -1201,27 +1083,21 @@ def ivf_pq_topk(
     for jj in range(m):
         term = F.element_at(f"l{jj}", F.col(f"code_{jj}").cast("int") + 1)
         adc = term if adc is None else adc + term
-    scored = j.select("query_id", key, "cell_id", adc.cast("bigint").alias("adc"))
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col(key).asc())
+    scored = j.select("query_id", "vec_id", "cell_id", adc.cast("bigint").alias("adc"))
+    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "rank", key, "cell_id", "adc")
+        .filter(F.col("rank") <= 3)
+        .select("query_id", "rank", "vec_id", "cell_id", "adc")
     )
 
 
-def kcenter_greedy(
-    emb: DataFrame,
-    k: int = 8,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 10000,
-) -> DataFrame:
+def kcenter_greedy(emb: DataFrame, k: int = 8, vec: str = "embedding") -> DataFrame:
     """Greedy k-center / farthest-point coreset selection (Gonzalez 1985;
     Sener & Savarese ICLR 2018 use exactly this traversal to pick
     maximally-diverse training subsets): seed at the lowest key, then
     k-1 rounds each adding the point FARTHEST (exact integer L2 squared
-    on the floor(x*scale) grid, ties to the lowest key) from the set
+    on the floor(x*10000) grid, ties to the lowest key) from the set
     chosen so far.
 
     Scale: one corpus scan per round via mapInPandas — the <=k x dim
@@ -1232,14 +1108,14 @@ def kcenter_greedy(
     sim_kmeans discipline). The quantized corpus is localCheckpoint-ed
     once so the k-1 scans skip re-reading parquet and re-quantizing.
 
-    Returns k rows (step, <key>, dist2): the selection order and the
+    Returns k rows (step, vec_id, dist2): the selection order and the
     selected point's exact min-L2-squared coverage radius at selection
     time (step 1 is the seed, dist2 0).
     """
     import numpy as np
 
-    q_ = emb.select(key, quantized(vec, scale).alias("_q"))
-    key_t = q_.schema[key].dataType.simpleString()
+    q_ = emb.select("vec_id", quantized(vec, 10000).alias("_q"))
+    key_t = q_.schema["vec_id"].dataType.simpleString()
     # Small-corpus fast path (the union-find discipline from
     # operators/dedup.py): the greedy loop is inherently sequential —
     # k-1 round-trips of one job each — so when the quantized corpus is
@@ -1253,7 +1129,7 @@ def kcenter_greedy(
     # both solvers fall through to the distributed path on empty input
     # instead of the fast path raising IndexError at ids[0].
     if len(rows) <= _LOCAL_SOLVER_THRESHOLD and rows:
-        ids = np.array([r[key] for r in rows])
+        ids = np.array([r["vec_id"] for r in rows])
         X = np.array([r["_q"] for r in rows], dtype=np.int64)
         order = np.argsort(ids, kind="stable")
         ids, X = ids[order], X[order]
@@ -1264,12 +1140,12 @@ def kcenter_greedy(
             picks.append((step, ids[j].item(), int(mind2[j])))
             mind2 = np.minimum(mind2, ((X - X[j]) ** 2).sum(axis=1))
         return emb.sparkSession.createDataFrame(
-            picks, f"step bigint, {key} {key_t}, dist2 bigint"
+            picks, f"step bigint, vec_id {key_t}, dist2 bigint"
         )
     q_ = q_.localCheckpoint()
-    seed = q_.orderBy(key).limit(1).collect()[0]
+    seed = q_.orderBy("vec_id").limit(1).collect()[0]
     centers = np.array([seed["_q"]], dtype=np.int64)
-    picks = [(1, seed[key], 0)]
+    picks = [(1, seed["vec_id"], 0)]
     for step in range(2, k + 1):
 
         def _scan(batches, C=centers):
@@ -1279,20 +1155,20 @@ def kcenter_greedy(
                 if not len(pdf):
                     continue
                 X = np.vstack(pdf["_q"].to_numpy()).astype(np.int64)
-                ids = pdf[key].to_numpy()
-                # exact int64: |x-c|^2 <= dim * (2*scale)^2 ~ 2.6e10
+                ids = pdf["vec_id"].to_numpy()
+                # exact int64: |x-c|^2 <= dim * (2*10000)^2 ~ 2.6e10
                 d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).min(axis=1)
                 j = int(np.lexsort((ids, -d2))[0])
                 yield pd.DataFrame(
-                    {key: [ids[j]], "_d2": [int(d2[j])], "_q": [list(X[j])]}
+                    {"vec_id": [ids[j]], "_d2": [int(d2[j])], "_q": [list(X[j])]}
                 )
 
-        cand = q_.mapInPandas(_scan, f"{key} {key_t}, _d2 bigint, _q array<bigint>")
-        best = cand.orderBy(F.col("_d2").desc(), F.col(key).asc()).limit(1).collect()[0]
+        cand = q_.mapInPandas(_scan, f"vec_id {key_t}, _d2 bigint, _q array<bigint>")
+        best = cand.orderBy(F.col("_d2").desc(), F.col("vec_id").asc()).limit(1).collect()[0]
         centers = np.vstack([centers, np.array(best["_q"], dtype=np.int64)])
-        picks.append((step, best[key], int(best["_d2"])))
+        picks.append((step, best["vec_id"], int(best["_d2"])))
     return emb.sparkSession.createDataFrame(
-        picks, f"step bigint, {key} {key_t}, dist2 bigint"
+        picks, f"step bigint, vec_id {key_t}, dist2 bigint"
     )
 
 
@@ -1301,9 +1177,6 @@ def mmr_rerank(
     n_queries: int = 5,
     pool: int = 10,
     k: int = 5,
-    scale: int = 1000,
-    key: str = "vec_id",
-    vec: str = "embedding",
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998) of each query's dot-product top-`pool` candidates: greedily
@@ -1321,45 +1194,45 @@ def mmr_rerank(
     import numpy as np
     import pandas as pd
 
-    q_ = emb.select(key, quantized(vec, scale).alias("_q"))
-    key_t = q_.schema[key].dataType.simpleString()
+    q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
+    key_t = q_.schema["vec_id"].dataType.simpleString()
     qs = (
-        q_.orderBy(key)
+        q_.orderBy("vec_id")
         .limit(n_queries)
-        .select(F.col(key).alias("_qid"), F.col("_q").alias("_pq"))
+        .select(F.col("vec_id").alias("_qid"), F.col("_q").alias("_pq"))
     )
     cand = (
         q_.crossJoin(F.broadcast(qs))
-        .filter(F.col(key) != F.col("_qid"))
+        .filter(F.col("vec_id") != F.col("_qid"))
         .select(
             "_qid",
-            key,
+            "vec_id",
             "_q",
             F.expr(
                 "CAST(aggregate(zip_with(_q, _pq, (a, b) -> a * b),"
                 " CAST(0 AS BIGINT), (acc, v) -> acc + v) AS BIGINT)"
             ).alias("_rel"),
-            F.expr(f"pmod(hash({key}), 64)").alias("_salt"),
+            F.expr("pmod(hash(vec_id), 64)").alias("_salt"),
         )
     )
     wloc = Window.partitionBy("_qid", "_salt").orderBy(
-        F.col("_rel").desc(), F.col(key)
+        F.col("_rel").desc(), F.col("vec_id")
     )
-    wglob = Window.partitionBy("_qid").orderBy(F.col("_rel").desc(), F.col(key))
+    wglob = Window.partitionBy("_qid").orderBy(F.col("_rel").desc(), F.col("vec_id"))
     top = (
         cand.withColumn("_r", F.row_number().over(wloc))
         .filter(F.col("_r") <= pool)
         .withColumn("_rn", F.row_number().over(wglob))
         .filter(F.col("_rn") <= pool)
-        .select("_qid", key, "_q", "_rel")
+        .select("_qid", "vec_id", "_q", "_rel")
     )
 
     kk_rounds = k
 
     def _greedy(pdf: pd.DataFrame) -> pd.DataFrame:
         k = kk_rounds
-        pdf = pdf.sort_values(key).reset_index(drop=True)
-        ids = pdf[key].to_numpy()
+        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+        ids = pdf["vec_id"].to_numpy()
         rel = pdf["_rel"].to_numpy(dtype=np.int64)
         C = np.vstack(pdf["_q"].to_numpy()).astype(np.int64)
         P = C @ C.T  # pool×pool int64, exact
@@ -1385,14 +1258,14 @@ def mmr_rerank(
             {
                 "query_id": pdf["_qid"].iloc[0],
                 "round": np.array(rounds, dtype=np.int64),
-                key: out_ids,
+                "vec_id": out_ids,
                 "mmr_score": np.array(scores, dtype=np.int64),
             }
         )
 
     return top.groupBy("_qid").applyInPandas(
         _greedy,
-        f"query_id {key_t}, round bigint, {key} {key_t}, mmr_score bigint",
+        f"query_id {key_t}, round bigint, vec_id {key_t}, mmr_score bigint",
     )
 
 
@@ -1400,9 +1273,6 @@ def dual_retriever_pools(
     emb: DataFrame,
     n_queries: int = 5,
     pool: int = 10,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 1000,
 ) -> DataFrame:
     """Dense-dot AND sign-Hamming candidate pools from ONE corpus scan —
     the hybrid-retrieval feeder (sim_rrf_fusion): the q×dim integer
@@ -1414,16 +1284,16 @@ def dual_retriever_pools(
     rows) is localCheckpointed so BOTH final rank windows read it
     without re-scanning the corpus. Signs come from the quantized
     ints (floor(x·s) ≥ 0 ⟺ x ≥ 0 for s > 0, so they equal the raw
-    float sign test bit-exactly). Returns (query_id, key, ra, rb)
+    float sign test bit-exactly). Returns (query_id, vec_id, ra, rb)
     full-outer-merged pool ranks with 0 = not in that retriever's pool.
     """
     import numpy as np
 
-    q_ = emb.select(key, quantized(vec, scale).alias("_q"))
-    key_t = q_.schema[key].dataType.simpleString()
-    qrows = q_.orderBy(key).limit(n_queries).collect()
+    q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
+    key_t = q_.schema["vec_id"].dataType.simpleString()
+    qrows = q_.orderBy("vec_id").limit(n_queries).collect()
     Qm = np.array([r["_q"] for r in qrows], dtype=np.int64)
-    qids = np.array([r[key] for r in qrows])
+    qids = np.array([r["vec_id"] for r in qrows])
     QB = (Qm >= 0).astype(np.int64)
     qbsum = QB.sum(axis=1)
 
@@ -1435,11 +1305,11 @@ def dual_retriever_pools(
             if not n:
                 continue
             X = np.vstack(pdf["_q"].to_numpy())
-            ids = pdf[key].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             D = X @ Qm.T  # n × q int64, exact
             B = (X >= 0).astype(np.int64)
             H = B.sum(axis=1)[:, None] + qbsum[None, :] - 2 * (B @ QB.T)
-            out = {"query_id": [], key: [], "metric": [], "score": []}
+            out = {"query_id": [], "vec_id": [], "metric": [], "score": []}
             for qi in range(len(qids)):
                 # DROP the query's own row rather than sentinel-masking
                 # it: with <= pool non-self candidates in a batch the
@@ -1452,40 +1322,40 @@ def dual_retriever_pools(
                 d = D[keep, qi]
                 order = np.lexsort((ids_q, -d))[:kk]
                 out["query_id"].extend([qids[qi]] * kk)
-                out[key].extend(ids_q[order])
+                out["vec_id"].extend(ids_q[order])
                 out["metric"].extend(["d"] * kk)
                 out["score"].extend(d[order])
                 h = H[keep, qi]
                 order = np.lexsort((ids_q, h))[:kk]
                 out["query_id"].extend([qids[qi]] * kk)
-                out[key].extend(ids_q[order])
+                out["vec_id"].extend(ids_q[order])
                 out["metric"].extend(["b"] * kk)
                 out["score"].extend(h[order])
             yield pd.DataFrame(out)
 
     local = q_.mapInPandas(
-        _scan, f"query_id {key_t}, {key} {key_t}, metric string, score bigint"
+        _scan, f"query_id {key_t}, vec_id {key_t}, metric string, score bigint"
     )
     surv = local.localCheckpoint()  # bounded: batches * q * 2 * pool rows
     wd = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(key).asc()
+        F.col("score").desc(), F.col("vec_id").asc()
     )
     wb = Window.partitionBy("query_id").orderBy(
-        F.col("score").asc(), F.col(key).asc()
+        F.col("score").asc(), F.col("vec_id").asc()
     )
     dense = (
         surv.filter(F.col("metric") == "d")
         .withColumn("ra", F.row_number().over(wd).cast("bigint"))
         .filter(F.col("ra") <= pool)
-        .select("query_id", key, "ra")
+        .select("query_id", "vec_id", "ra")
     )
     binry = (
         surv.filter(F.col("metric") == "b")
         .withColumn("rb", F.row_number().over(wb).cast("bigint"))
         .filter(F.col("rb") <= pool)
-        .select("query_id", key, "rb")
+        .select("query_id", "vec_id", "rb")
     )
-    return dense.join(binry, ["query_id", key], "full_outer")
+    return dense.join(binry, ["query_id", "vec_id"], "full_outer")
 
 
 def ivf_pq_nprobe_sweep(
@@ -1493,12 +1363,7 @@ def ivf_pq_nprobe_sweep(
     nprobes: tuple[int, ...] = (1, 2, 4),
     ncells: int = 8,
     n_queries: int = 5,
-    topk: int = 3,
-    m: int = 4,
     k: int = 8,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    scale: int = 1000,
 ) -> DataFrame:
     """Recall-vs-nprobe sweep for the IVF-PQ index — the tuning curve an
     ANN deployment reads before fixing nprobe (the speed/recall dial):
@@ -1506,21 +1371,23 @@ def ivf_pq_nprobe_sweep(
     probe join carrying each probed cell's rank, then every requested
     nprobe is a filter over that shared scored table (a 3-row broadcast
     spine — never a re-encode, never a rescan per configuration), each
-    ranked top-k and scored against the exact integer-L2 ground truth.
-    Returns (nprobe, query_id, n_exact, n_hits, recall_ppm)."""
+    ranked top-3 over 4 PQ subspaces and scored against the exact
+    integer-L2 ground truth. Returns (nprobe, query_id, n_exact, n_hits,
+    recall_ppm)."""
     import numpy as np
 
-    subC, dsub, q_ = _pq_codebooks(emb, m, k, key, vec, scale)
-    key_t = q_.schema[key].dataType.simpleString()
-    crows = q_.orderBy(key).limit(ncells).collect()
+    m = 4
+    subC, dsub, q_ = _pq_codebooks(emb, m, k)
+    key_t = q_.schema["vec_id"].dataType.simpleString()
+    crows = q_.orderBy("vec_id").limit(ncells).collect()
     C2 = np.array([r["_q"] for r in crows], dtype=np.int64)
-    cids = np.array([r[key] for r in crows])
+    cids = np.array([r["vec_id"] for r in crows])
     maxp = max(nprobes)
 
     def _enc(batches, C2=C2, cids=cids, subC=subC, dsub=dsub, m=m):
         for pdf in batches:
             Q = np.vstack(pdf["_q"].to_numpy())
-            out = pdf[[key]].copy()
+            out = pdf[["vec_id"]].copy()
             S = Q @ C2.T
             out["cell_id"] = cids[S.argmax(axis=1)]
             for j in range(m):
@@ -1530,11 +1397,11 @@ def ivf_pq_nprobe_sweep(
             yield out
 
     code_cols = ", ".join(f"code_{j} bigint" for j in range(m))
-    enc = q_.mapInPandas(_enc, f"{key} {key_t}, cell_id {key_t}, {code_cols}")
+    enc = q_.mapInPandas(_enc, f"vec_id {key_t}, cell_id {key_t}, {code_cols}")
 
-    qrows = q_.orderBy(key).limit(n_queries).collect()
+    qrows = q_.orderBy("vec_id").limit(n_queries).collect()
     Qm = np.array([r["_q"] for r in qrows], dtype=np.int64)
-    qids = [r[key] for r in qrows]
+    qids = [r["vec_id"] for r in qrows]
     qd = Qm @ C2.T
     probe_rows = []
     for qi, qid in enumerate(qids):
@@ -1557,7 +1424,7 @@ def ivf_pq_nprobe_sweep(
         term = F.element_at(f"l{jj}", F.col(f"code_{jj}").cast("int") + 1)
         adc = term if adc is None else adc + term
     scored = j.select(
-        "query_id", key, "pr", adc.cast("bigint").alias("adc")
+        "query_id", "vec_id", "pr", adc.cast("bigint").alias("adc")
     )
     spine = emb.sparkSession.range(1).select(
         F.explode(
@@ -1570,24 +1437,22 @@ def ivf_pq_nprobe_sweep(
     )
     cand = scored.crossJoin(F.broadcast(spine)).filter(F.col("pr") <= F.col("nprobe"))
     w = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("adc").asc(), F.col(key).asc()
+        F.col("adc").asc(), F.col("vec_id").asc()
     )
     approx = (
         cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("nprobe", "query_id", F.col(key).alias("a_vec"))
+        .filter(F.col("rank") <= 3)
+        .select("nprobe", "query_id", F.col("vec_id").alias("a_vec"))
     )
-    ex = exact_l2_topk(
-        emb, n_queries=n_queries, topk=topk, key=key, vec=vec, scale=scale
-    ).select("query_id", key)
+    ex = exact_l2_topk(emb, n_queries=n_queries).select("query_id", "vec_id")
     exn = ex.crossJoin(F.broadcast(spine))
     jj2 = exn.join(
         approx,
         (exn.query_id == approx.query_id)
         & (exn.nprobe == approx.nprobe)
-        & (exn[key] == approx.a_vec),
+        & (exn.vec_id == approx.a_vec),
         "left",
-    ).select(exn.nprobe, exn.query_id, exn[key], approx.a_vec)
+    ).select(exn.nprobe, exn.query_id, exn.vec_id, approx.a_vec)
     return jj2.groupBy("nprobe", "query_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_exact"),
         F.expr(

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def fan_out(df: DataFrame, factor: int = 2) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Spread a compute-heavy chain (hash fan-out, explode, vectorized
     mapInPandas) across the cluster when the upstream scan cannot.
 
@@ -26,64 +26,54 @@ def fan_out(df: DataFrame, factor: int = 2) -> DataFrame:
     and everything codegen fuses into it — on one task no matter what the
     split math says (the r14 profile: agg_bootstrap's 3.6M-md5 stage ran
     on 1 effective task of a local[32] session). Round-robin repartition
-    to factor×defaultParallelism unlocks the cores; callers apply it
+    to 2×defaultParallelism unlocks the cores; callers apply it
     AFTER projecting down to the narrow columns the chain needs, so the
     shuffle ships keys+metadata, not payloads (guide §2.3).
 
-    Scale-adaptive: when the input already has ≥ factor×parallelism
+    Scale-adaptive: when the input already has ≥ 2×parallelism
     partitions (any real multi-file table at 100 TB), this is a no-op —
     the repartition only fires for inputs too small to split, where the
     shuffled bytes are by construction tiny.
     """
     sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
+    target = sc.defaultParallelism * 2
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
 
 
-def with_salt(df: DataFrame, key: str, n_salts: int = 16, out: str = "_salted_key") -> DataFrame:
+def with_salt(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
     """Deterministic salt from a content hash (reproducible across runs,
-    unlike rand()): salt = xxhash64(whole row key + monotonic id) % n."""
+    unlike rand()): salt = xxhash64(whole row key + monotonic id) % n, as
+    ``_salted_key``."""
     salt = F.pmod(F.xxhash64(F.col(key), F.monotonically_increasing_id()), F.lit(n_salts))
-    return df.withColumn(out, F.concat_ws("#", F.col(key).cast("string"), salt.cast("string")))
+    return df.withColumn("_salted_key", F.concat_ws("#", F.col(key).cast("string"), salt.cast("string")))
 
 
-def explode_dim(dim: DataFrame, key: str, n_salts: int = 16, out: str = "_salted_key") -> DataFrame:
-    """Replicate each dimension row once per salt value."""
+def explode_dim(dim: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
+    """Replicate each dimension row once per salt value (``_salted_key``)."""
     return dim.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))).withColumn(
-        out, F.concat_ws("#", F.col(key).cast("string"), F.col("_salt").cast("string"))
+        "_salted_key", F.concat_ws("#", F.col(key).cast("string"), F.col("_salt").cast("string"))
     ).drop("_salt")
 
 
-def salted_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
+def salted_join(facts: DataFrame, dim: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
     """facts ⋈ dim on `key`, with the fact-side shuffle spread n_salts ways.
 
-    Result equals facts.join(dim, key, how) (property-tested); use when a
+    Result equals facts.join(dim, key) (property-tested); use when a
     handful of keys dominate and AQE skew splitting isn't available for
     the stage. The dim side must tolerate n_salts× replication.
     """
     f = with_salt(facts, key, n_salts)
     d = explode_dim(dim.withColumnRenamed(key, f"_dim_{key}"), f"_dim_{key}", n_salts)
-    out = f.join(d, f["_salted_key"] == d["_salted_key"], how)
+    out = f.join(d, f["_salted_key"] == d["_salted_key"], "inner")
     return out.drop("_salted_key", f"_dim_{key}")
 
 
-def salted_agg(
-    df: DataFrame,
-    group_cols: list[str],
-    agg_col: str,
-    n_salts: int = 16,
-) -> DataFrame:
+def salted_agg(df: DataFrame, group_cols: list[str], agg_col: str) -> DataFrame:
     """Two-stage aggregation for skewed group keys: stage 1 sums within
-    (key, salt) — spreading a hot key over n_salts reducers — stage 2 sums
-    the ≤ n_salts partials per key. Result equals the plain groupBy sum
+    (key, salt) — spreading a hot key over 16 reducers — stage 2 sums
+    the ≤ 16 partials per key. Result equals the plain groupBy sum
     exactly (integer/decimal sums are associative); use when one group
     holds a disproportionate share of rows and map-side partial
     aggregation alone can't absorb it (e.g. high-cardinality payload
@@ -91,7 +81,7 @@ def salted_agg(
     # any per-row spreading value works — the final result is salt-
     # independent because the sum is associative
     salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salts))
+        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(16))
     )
     stage1 = salted.groupBy(*group_cols, "_salt").agg(F.sum(agg_col).alias("_partial"))
     return stage1.groupBy(*group_cols).agg(F.sum("_partial").alias(f"sum_{agg_col}"))

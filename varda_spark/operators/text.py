@@ -30,23 +30,23 @@ def tokens(text: Column | str) -> Column:
     return F.split(F.trim(c), TOKEN_SPLIT)
 
 
-def with_token_stats(df: DataFrame, text: str = "text") -> DataFrame:
+def with_token_stats(df: DataFrame) -> DataFrame:
     """n_tokens, n_chars, avg token length, distinct-token ratio."""
-    t = tokens(text)
+    t = tokens("text")
     return (
         df.withColumn("n_tokens", F.size(t).cast("bigint"))
-        .withColumn("n_chars_m", F.length(F.col(text)).cast("bigint"))
+        .withColumn("n_chars_m", F.length(F.col("text")).cast("bigint"))
         .withColumn("n_distinct_tokens", F.size(F.array_distinct(t)).cast("bigint"))
     )
 
 
-def quality_score(df: DataFrame, text: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic quality scoring: length, repetition, all-caps/punct ratios.
 
     The score is a deterministic integer 0..100 so oracle hashing is exact:
     start at 100, subtract penalties.
     """
-    t = tokens(text)
+    t = tokens("text")
     n = F.size(t)
     # floor, not cast: double→bigint cast truncates in Spark but rounds in
     # DuckDB — floor() agrees everywhere
@@ -58,7 +58,7 @@ def quality_score(df: DataFrame, text: str = "text") -> DataFrame:
     ).withColumn("distinct_ratio_pct", distinct_ratio_pct)
 
 
-def ngrams(df: DataFrame, n: int = 2, text: str = "text", out: str = "ngram") -> DataFrame:
+def ngrams(df: DataFrame, n: int = 2, out: str = "ngram") -> DataFrame:
     """Explode word n-grams (1-indexed element_at; codegen-friendly).
 
     Docs with fewer than n words yield ZERO grams (row drops at the
@@ -67,7 +67,7 @@ def ngrams(df: DataFrame, n: int = 2, text: str = "text", out: str = "ngram") ->
     DESCENDING sequence ending at <= 0 and element_at(_w, 0) raises
     unconditionally in Spark — a short doc would crash one engine and
     not the other (ADVICE r12)."""
-    df = df.withColumn("_w", tokens(text))
+    df = df.withColumn("_w", tokens("text"))
     parts = ", ".join(f"element_at(_w, i + {j})" for j in range(n))
     df = df.withColumn(
         out,
@@ -82,13 +82,13 @@ def ngrams(df: DataFrame, n: int = 2, text: str = "text", out: str = "ngram") ->
     return df.drop("_w")
 
 
-def language_id(df: DataFrame, text: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Marker-token language heuristic → lang_pred + marker hit count.
 
     Scores each candidate language by how many of its marker tokens occur;
     ties break by fixed language order. Pure Column expr (no UDF).
     """
-    t = tokens(text)
+    t = tokens("text")
     scores = []
     for lang, markers in LANG_MARKERS.items():
         score = sum(
@@ -104,14 +104,14 @@ def language_id(df: DataFrame, text: str = "text") -> DataFrame:
     return df.withColumn("lang_pred", best).withColumn("lang_score", gsc.cast("bigint"))
 
 
-def fingerprint(df: DataFrame, text: str = "text", out: str = "fp") -> DataFrame:
-    """Document fingerprint: md5 of the normalized token stream.
+def fingerprint(df: DataFrame) -> DataFrame:
+    """Document fingerprint ``fp``: md5 of the normalized token stream.
 
     (Rolling/winnowed hashes are in dedup.py's shingle machinery; this is
     the whole-document content address, reference A7 checksum shape.)
     """
-    norm = F.concat_ws(" ", tokens(text))
-    return df.withColumn(out, F.md5(F.lower(norm).cast("binary")))
+    norm = F.concat_ws(" ", tokens("text"))
+    return df.withColumn("fp", F.md5(F.lower(norm).cast("binary")))
 
 
 BPE_ISH_PATTERN = r"[a-z0-9]+|[^a-z0-9\s]"
@@ -128,16 +128,16 @@ def bpe_ish_tokens(text: Column | str) -> Column:
     return F.expr(f"regexp_extract_all(lower({c._jc.toString()}), '{pat}', 0)")
 
 
-def countmin_cells(df: DataFrame, text: str = "text", rows: int = 4, width: int = 64) -> DataFrame:
-    """Count-Min sketch increments for a batch of documents: one
-    (row, col) cell hit per (token occurrence, hash row). md5-derived
-    column index — deterministic across engines, runs, partitionings, so
+def countmin_cells(df: DataFrame) -> DataFrame:
+    """Count-Min sketch increments (4 rows × 64 columns) for a batch of
+    documents: one (row, col) cell hit per (token occurrence, hash row).
+    md5-derived column index — deterministic across engines, runs, partitionings, so
     sketches built anywhere merge consistently (the merge is a plain
     groupBy-sum over (row, col); see catalog.agg_countmin for the batch
     aggregate and streaming tests for the foreachBatch-merged twin)."""
-    tok = df.select(F.explode(F.split(F.trim(F.col(text)), " ")).alias("tok"))
+    tok = df.select(F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok"))
     return tok.select(
-        F.explode(F.array(*[F.lit(r) for r in range(rows)])).alias("row"), "tok"
+        F.explode(F.array(*[F.lit(r) for r in range(4)])).alias("row"), "tok"
     ).select(
         "row",
         (
@@ -152,7 +152,7 @@ def countmin_cells(df: DataFrame, text: str = "text", rows: int = 4, width: int 
                 16,
                 10,
             ).cast("int")
-            % width
+            % 64
         ).alias("col"),
     )
 

@@ -108,14 +108,14 @@ def fetch_region(
     return raw.replace(b"\n", b"").replace(b"\r", b"").decode().upper()
 
 
-def validate_reference_indexed(df: DataFrame, path: str, fai=None) -> DataFrame:
+def validate_reference_indexed(df: DataFrame, path: str) -> DataFrame:
     """Windowed twin of validate_reference: broadcast the .fai INDEX (a few
     KB) instead of the genome; each executor lazily opens the local FASTA
     once and seek-reads only the alleles' slices. Arrow-batched pandas UDF —
     one file handle per worker, O(bytes actually compared) I/O.
     """
     spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(fai if fai is not None else build_fai(path))
+    bc = spark.sparkContext.broadcast(build_fai(path))
     handles: dict[str, object] = {}
 
     @F.pandas_udf("boolean")

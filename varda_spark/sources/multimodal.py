@@ -53,17 +53,18 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def synthesize_blobs(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
-    """Deterministic fake payloads: utf-8 bytes of text as 'image' content.
+def synthesize_blobs(df: DataFrame) -> DataFrame:
+    """Deterministic fake payloads: utf-8 bytes of text as 'image' content,
+    keyed by doc_id.
 
     Stands in for spark.read.format('binaryFile') at demo scale; the
     downstream pipeline is identical for real bytes.
     """
-    content = F.col(text).cast("binary")
+    content = F.col("text").cast("binary")
     return df.select(
-        F.col(key).alias("item_id"),
-        F.when(F.col(key) % 3 == 0, F.lit("image/png"))
-        .when(F.col(key) % 3 == 1, F.lit("audio/wav"))
+        F.col("doc_id").alias("item_id"),
+        F.when(F.col("doc_id") % 3 == 0, F.lit("image/png"))
+        .when(F.col("doc_id") % 3 == 1, F.lit("audio/wav"))
         .otherwise(F.lit("video/mp4"))
         .alias("mime"),
         content.alias("content"),
@@ -72,10 +73,10 @@ def synthesize_blobs(df: DataFrame, key: str = "doc_id", text: str = "text") -> 
     )
 
 
-def decode_image_features(mm: DataFrame, *, fake: bool = False, dims: int = 8) -> DataFrame:
+def decode_image_features(mm: DataFrame, *, fake: bool = False) -> DataFrame:
     """mapInPandas decode/feature-extract stage (STUB — see module doc).
 
-    fake=True: features = normalized byte histogram over ``dims`` buckets
+    fake=True: features = normalized byte histogram over 8 buckets
     (deterministic, library-free). fake=False raises NotImplementedError —
     plug in PIL/torchvision here in a real deployment.
     """
@@ -90,7 +91,7 @@ def decode_image_features(mm: DataFrame, *, fake: bool = False, dims: int = 8) -
             feats = []
             for blob in pdf["content"]:
                 arr = np.frombuffer(blob, dtype=np.uint8) if blob is not None else np.array([0], np.uint8)
-                hist, _ = np.histogram(arr, bins=dims, range=(0, 256))
+                hist, _ = np.histogram(arr, bins=8, range=(0, 256))
                 total = max(int(hist.sum()), 1)
                 feats.append([round(float(h) / total, 6) for h in hist])
             yield pd.DataFrame(
@@ -129,13 +130,14 @@ def resize_images(mm: DataFrame, *, width: int = 64, height: int = 64, fake: boo
     return mm.mapInPandas(_batches, schema=mm.schema)
 
 
-def frame_sample(mm: DataFrame, every_n_bytes: int = 64, max_frames: int = 4) -> DataFrame:
-    """'Frame sampling' plumbing: slice the blob at fixed strides (pure
-    Column exprs — at scale this is the shape of keyframe extraction,
-    with the slicing swapped for a codec call inside mapInPandas)."""
+def frame_sample(mm: DataFrame) -> DataFrame:
+    """'Frame sampling' plumbing: slice the blob at 64-byte strides, at most
+    4 frames (pure Column exprs — at scale this is the shape of keyframe
+    extraction, with the slicing swapped for a codec call inside
+    mapInPandas)."""
     frames = F.expr(
-        f"transform(sequence(0, least(int(n_bytes / {every_n_bytes}), {max_frames - 1})), "
-        f"i -> substring(content, i * {every_n_bytes} + 1, {every_n_bytes}))"
+        "transform(sequence(0, least(int(n_bytes / 64), 3)), "
+        "i -> substring(content, i * 64 + 1, 64))"
     )
     return mm.select(
         "item_id",
@@ -144,8 +146,8 @@ def frame_sample(mm: DataFrame, every_n_bytes: int = 64, max_frames: int = 4) ->
     ).withColumn("frame_md5", F.md5("frame_bytes"))
 
 
-def chunk_audio(mm: DataFrame, chunk_bytes: int = 32) -> DataFrame:
-    """K5 audio path: split each audio payload into fixed-size chunks —
+def chunk_audio(mm: DataFrame) -> DataFrame:
+    """K5 audio path: split each audio payload into 32-byte chunks —
     the segmentation step before any acoustic feature extraction (which
     would slot in as a mapInPandas stage like decode_image_features).
     Pure Column math: chunk count from n_bytes, posexplode of the index
@@ -158,18 +160,18 @@ def chunk_audio(mm: DataFrame, chunk_bytes: int = 32) -> DataFrame:
     none."""
     audio = mm.filter((F.col("mime") == "audio/wav") & (F.col("n_bytes") > 0))
     idx = F.explode(
-        F.sequence(F.lit(0), F.ceil(F.col("n_bytes") / chunk_bytes).cast("bigint") - 1)
+        F.sequence(F.lit(0), F.ceil(F.col("n_bytes") / 32).cast("bigint") - 1)
     ).alias("chunk_idx")
     out = audio.select("item_id", "n_bytes", "content", idx)
     return out.select(
         "item_id",
         F.col("chunk_idx").cast("bigint").alias("chunk_idx"),
-        (F.col("chunk_idx") * chunk_bytes).cast("bigint").alias("offset"),
+        (F.col("chunk_idx") * 32).cast("bigint").alias("offset"),
         F.least(
-            F.lit(chunk_bytes).cast("bigint"),
-            F.col("n_bytes") - F.col("chunk_idx") * chunk_bytes,
+            F.lit(32).cast("bigint"),
+            F.col("n_bytes") - F.col("chunk_idx") * 32,
         ).alias("chunk_len"),
-        F.expr(f"substring(content, chunk_idx * {chunk_bytes} + 1, {chunk_bytes})")
+        F.expr("substring(content, chunk_idx * 32 + 1, 32)")
         .cast("string")
         .alias("chunk_text"),
     )

@@ -8,12 +8,15 @@ row-group min/max skipping replaces the position B-tree.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, functions as F
 
 from varda_spark.session import local_table
 
 
-def write_observations(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_observations(df: DataFrame, path: str) -> None:
     """Observation fact table: partition by chromosome, sort by position.
 
     sortWithinPartitions before write → every parquet file has tight
@@ -22,21 +25,13 @@ def write_observations(df: DataFrame, path: str, mode: str = "overwrite") -> Non
     (
         df.repartition("chromosome")
         .sortWithinPartitions("position")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("chromosome")
         .parquet(path)
     )
 
 
-def format_annotated_vcf_lines(
-    annotated: DataFrame,
-    query_names: list[str],
-    *,
-    chrom: str = "chromosome",
-    pos: str = "position",
-    ref: str = "reference",
-    obs: str = "observed",
-) -> DataFrame:
+def format_annotated_vcf_lines(annotated: DataFrame, query_names: list[str]) -> DataFrame:
     """A6: render per-variant frequency results as VCF body lines.
 
     For each query name Q the DF must carry columns ``{Q}_vn`` and
@@ -58,16 +53,16 @@ def format_annotated_vcf_lines(
     )
     line = F.concat_ws(
         "\t",
-        F.col(chrom),
-        F.col(pos).cast("string"),
+        F.col("chromosome"),
+        F.col("position").cast("string"),
         F.lit("."),
-        F.when(F.length(ref) > 0, F.col(ref)).otherwise(F.lit(".")),
-        F.when(F.length(obs) > 0, F.col(obs)).otherwise(F.lit(".")),
+        F.when(F.length("reference") > 0, F.col("reference")).otherwise(F.lit(".")),
+        F.when(F.length("observed") > 0, F.col("observed")).otherwise(F.lit(".")),
         F.lit("."),
         F.lit("."),
         info,
     )
-    return annotated.select(line.alias("value")).orderBy(F.col(chrom), F.col(pos))
+    return annotated.select(line.alias("value")).orderBy(F.col("chromosome"), F.col("position"))
 
 
 def write_annotated_vcf(lines: DataFrame, path: str, header_queries: list[str]) -> None:
@@ -92,7 +87,6 @@ def write_bucketed(
     table: str,
     bucket_key: str,
     n_buckets: int = 32,
-    sort_key: str | None = None,
     path: str | None = None,
 ) -> None:
     """Bucketed warehouse table: co-locates joins/aggs on bucket_key.
@@ -104,76 +98,72 @@ def write_bucketed(
     in the catalog, not the parquet files).
     """
     w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, bucket_key)
-    if sort_key:
-        w = w.sortBy(sort_key)
     if path:
         w = w.option("path", path)
     w.saveAsTable(table)
 
 
-def compact_warehouse(
-    spark,
-    path: str,
-    partition_col: str = "chromosome",
-    files_per_bucket: int = 32,
-) -> int:
-    """A5 maintenance: small-file compaction of a partitioned warehouse.
+def compact_warehouse(spark, path: str, files_per_bucket: int = 32) -> int:
+    """A5 maintenance: small-file compaction of a chromosome-partitioned
+    warehouse.
 
     Streaming/incremental ingest leaves many small parquet files per
     partition directory; tiny files dominate task-scheduling and footer
-    overhead at scale. Rewrite: hash-repartition on the partition column
-    (so each partition value's rows land in few tasks → few output files),
-    write to a sibling ``__new`` dir, then swap with the same rename
-    discipline as ``VardaWarehouse._overwrite_dim`` (api.py): move the
-    live dir aside to ``__old``, rename ``__new`` in, drop ``__old``.
-    A crash at any step leaves a complete directory on disk — either the
-    live path still exists (crash before the second rename) or the new
-    one is in place; the ``__old``/``__new`` leftovers are droppable
-    (``recover_compaction`` below does exactly that). The renames are
-    atomic on a posix filesystem; on an object store do this as a
-    metadata commit in a table format (Iceberg/Delta rewrite-files
-    action) — the data motion, which is the expensive part, is exactly
-    this plan. Returns the row count (verified equal before swap).
+    overhead at scale. Rewrite: hash-repartition on ``chromosome`` (so
+    each partition value's rows land in few tasks → few output files),
+    write to a sibling ``__new`` dir, then ``swap_in`` it. A swap that
+    crashed earlier is rolled back first (``recover_compaction``), so a
+    crashed run's ``__old`` — possibly the only complete copy — is never
+    deleted. The renames are atomic on a posix filesystem; on an object
+    store do this as a metadata commit in a table format (Iceberg/Delta
+    rewrite-files action) — the data motion, which is the expensive part,
+    is exactly this plan. Returns the row count (verified equal before
+    swap).
     """
-    import os
-    import shutil
-
+    recover_compaction(path)
     df = spark.read.parquet(path)
     n_before = df.count()
-    tmp, old = path + "__new", path + "__old"
-    for leftover in (tmp, old):  # from a previous crashed run
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
+    tmp = path + "__new"
     (
-        df.repartition(files_per_bucket, F.col(partition_col))
+        df.repartition(files_per_bucket, F.col("chromosome"))
         .write.mode("overwrite")
-        .partitionBy(partition_col)
+        .partitionBy("chromosome")
         .parquet(tmp)
     )
     n_after = spark.read.parquet(tmp).count()
     if n_after != n_before:  # paranoia before destroying anything
         shutil.rmtree(tmp)
         raise RuntimeError(f"compaction row mismatch: {n_before} -> {n_after}")
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_in(path)
     return n_after
 
 
+def swap_in(path: str) -> None:
+    """Replace the directory ``path`` with the complete ``path__new``: move
+    the live dir (if any) aside to ``__old``, rename ``__new`` in, drop
+    ``__old``. A crash at any step leaves a complete directory on disk —
+    the live one (crash before the first rename), ``__old`` alone (crash
+    between the renames) or the new one — and ``recover_compaction``
+    restores the live path from it."""
+    old = path + "__old"
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(path + "__new", path)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
 def recover_compaction(path: str) -> str:
-    """Crash recovery for a mid-swap ``compact_warehouse`` or
-    ``VardaWarehouse._overwrite_dim``.
+    """Crash recovery for a ``swap_in`` that died midway (a compaction or a
+    ``VardaWarehouse`` dimension rewrite).
 
     Idempotent: if the live dir exists, drop any ``__new``/``__old``
     leftovers (the swap either never started or fully finished); if only
     ``__old`` exists (crash between the two renames), rename it back.
     Returns a short description of what was done. ``VardaWarehouse`` runs
-    this before it reads a dimension; compact_warehouse itself also clears
-    leftovers.
+    this before every access to a table; compact_warehouse runs it before
+    it reads.
     """
-    import os
-    import shutil
-
     tmp, old = path + "__new", path + "__old"
     if os.path.exists(path):
         for leftover in (tmp, old):

@@ -40,12 +40,12 @@ def read_documents_jsonl(spark: SparkSession, path: str) -> tuple[DataFrame, Dat
     return good, bad
 
 
-def read_documents_csv(spark: SparkSession, path: str, sep: str = ",") -> DataFrame:
+def read_documents_csv(spark: SparkSession, path: str) -> DataFrame:
     """Header CSV with quoted fields; explicit schema, no inference pass."""
     return (
         spark.read.schema(DOC_SCHEMA)
         .option("header", True)
-        .option("sep", sep)
+        .option("sep", ",")
         .option("quote", '"')
         .option("escape", '"')
         .csv(path)

@@ -42,7 +42,7 @@ def read_vcf_header(path: str) -> list[str]:
     return []
 
 
-def read_vcf(spark: SparkSession, path: str, *, pooled_support_info: str = "SF_SUPPORT") -> DataFrame:
+def read_vcf(spark: SparkSession, path: str) -> DataFrame:
     """VCF → observations (sample_name, chromosome, position, reference,
     observed, zygosity, support), normalized.
 
@@ -51,7 +51,7 @@ def read_vcf(spark: SparkSession, path: str, *, pooled_support_info: str = "SF_S
       observation; zygosity = homozygous iff all GT alleles == i, else
       heterozygous; support = 1.
     - without samples (pooled/site-only VCF): one observation per ALT with
-      sample_name = NULL; support = INFO[pooled_support_info] for that ALT
+      sample_name = NULL; support = INFO[SF_SUPPORT] for that ALT
       (comma-separated per-ALT) else 1; zygosity NULL.
     """
     samples = read_vcf_header(path)
@@ -105,7 +105,7 @@ def read_vcf(spark: SparkSession, path: str, *, pooled_support_info: str = "SF_S
         )
     else:
         extracted = F.nullif(
-            F.regexp_extract("info", rf"(?:^|;){pooled_support_info}=([^;]+)", 1), F.lit("")
+            F.regexp_extract("info", r"(?:^|;)SF_SUPPORT=([^;]+)", 1), F.lit("")
         )
         support = F.coalesce(
             F.try_element_at(F.split(extracted, ","), F.col("alt_i")).try_cast("int"),

@@ -19,10 +19,10 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
-def tumbling_counts(ev: DataFrame, width: str = "1 hour") -> DataFrame:
-    """I1 tumbling window per event_type: count + exact value sum."""
+def tumbling_counts(ev: DataFrame) -> DataFrame:
+    """I1 1-hour tumbling window per event_type: count + exact value sum."""
     return (
-        ev.groupBy(F.window("ts", width).alias("win"), "event_type")
+        ev.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
@@ -36,10 +36,11 @@ def tumbling_counts(ev: DataFrame, width: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_counts(ev: DataFrame, width: str = "1 hour", slide: str = "15 minutes") -> DataFrame:
-    """I2 sliding window per event_type (each event in width/slide windows)."""
+def sliding_counts(ev: DataFrame) -> DataFrame:
+    """I2 1-hour window sliding by 15 minutes per event_type (each event in
+    4 windows)."""
     return (
-        ev.groupBy(F.window("ts", width, slide).alias("win"), "event_type")
+        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"), "event_type")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
         .select(
             F.unix_timestamp(F.col("win.start")).cast("bigint").alias("win_start"),
@@ -49,15 +50,15 @@ def sliding_counts(ev: DataFrame, width: str = "1 hour", slide: str = "15 minute
     )
 
 
-def session_windows_batch(ev: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def session_windows_batch(ev: DataFrame) -> DataFrame:
     """I3 session windows, batch core: gaps-and-islands per user.
 
     A new session starts when the gap to the previous event exceeds
-    ``gap_minutes``. Output one row per session: start/end epoch-micros,
+    30 minutes. Output one row per session: start/end epoch-micros,
     event count, exact value sum.
     """
     w = Window.partitionBy("user_id").orderBy("ts")
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = 30 * 60 * 1_000_000
     marked = (
         ev.withColumn("_t", F.unix_micros("ts"))
         .withColumn("_prev", F.lag("_t").over(w))
@@ -85,7 +86,7 @@ def session_windows_batch(ev: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def watermark_tumbling_batch(ev: DataFrame, width: str = "1 hour", delay_minutes: int = 10) -> DataFrame:
+def watermark_tumbling_batch(ev: DataFrame, delay_minutes: int = 10) -> DataFrame:
     """I4 batch core of watermarked tumbling agg: events older than
     (global max event time - delay) are "late" and dropped, mirroring the
     final state of the streaming query once the watermark has advanced to
@@ -96,7 +97,7 @@ def watermark_tumbling_batch(ev: DataFrame, width: str = "1 hour", delay_minutes
         .crossJoin(F.broadcast(horizon))
         .filter(F.col("_t") >= F.col("_mx") - delay_minutes * 60 * 1_000_000)
     )
-    return tumbling_counts(kept.drop("_t", "_mx"), width)
+    return tumbling_counts(kept.drop("_t", "_mx"))
 
 
 # ---------------------------------------------------------------------
@@ -112,11 +113,12 @@ def read_events_stream(spark, path: str, schema) -> DataFrame:
     )
 
 
-def tumbling_counts_stream(ev_stream: DataFrame, width: str = "1 hour", watermark: str = "10 minutes") -> DataFrame:
-    """I1+I4: the same tumbling core under a watermark (late data bounded)."""
+def tumbling_counts_stream(ev_stream: DataFrame) -> DataFrame:
+    """I1+I4: the same tumbling core under a 10-minute watermark (late data
+    bounded)."""
     return (
-        ev_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("win"), "event_type")
+        ev_stream.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
@@ -130,11 +132,12 @@ def tumbling_counts_stream(ev_stream: DataFrame, width: str = "1 hour", watermar
     )
 
 
-def session_windows_stream(ev_stream: DataFrame, gap: str = "30 minutes", watermark: str = "10 minutes") -> DataFrame:
-    """I3 streaming path: native session_window (state-store backed)."""
+def session_windows_stream(ev_stream: DataFrame) -> DataFrame:
+    """I3 streaming path: native 30-minute session_window (state-store
+    backed) under a 10-minute watermark."""
     return (
-        ev_stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
+        ev_stream.withWatermark("ts", "10 minutes")
+        .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
@@ -187,12 +190,12 @@ def running_user_totals_stream(ev_stream: DataFrame, timeout_minutes: int | None
     )
 
 
-def ewma_stream(ev_stream: DataFrame, depth: int = 8) -> DataFrame:
+def ewma_stream(ev_stream: DataFrame) -> DataFrame:
     """I5+ second custom stateful operator via applyInPandasWithState:
     per-user streaming EWMA matching the batch win_ewma key exactly
     (α = ½, depth 8, integer taps).
 
-    The state store holds the last ``depth−1`` quantized values per user
+    The state store holds the last 7 quantized values per user
     — O(active users · depth) regardless of stream length, the bounded
     state a 100 TB stream requires. Quantization to 1e-4 BIGINT happens
     in a Column BEFORE the stateful map (identical expression to the
@@ -213,12 +216,12 @@ def ewma_stream(ev_stream: DataFrame, depth: int = 8) -> DataFrame:
         pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
         out = {"event_id": [], "user_id": [], "num": [], "den": [], "ewma": []}
         for ev_id, xq in zip(pdf["event_id"], pdf["xq"]):
-            window = vals[-(depth - 1):] + [int(xq)]
+            window = vals[-7:] + [int(xq)]
             num = 0
             den = 0
             # newest gets weight 2^(depth-1), each step back halves
             for age, v in enumerate(reversed(window)):
-                w = 1 << (depth - 1 - age)
+                w = 1 << (7 - age)
                 num += int(v) * w
                 den += w
             out["event_id"].append(int(ev_id))
@@ -227,7 +230,7 @@ def ewma_stream(ev_stream: DataFrame, depth: int = 8) -> DataFrame:
             out["den"].append(den)
             out["ewma"].append(num / den / 10000.0)
             vals = window
-        state.update((vals[-(depth - 1):],))
+        state.update((vals[-7:],))
         yield pd.DataFrame(out)
 
     quantized = ev_stream.select(
@@ -322,9 +325,9 @@ def type_counts_stream_tws(ev_stream: DataFrame) -> DataFrame:
     )
 
 
-def purchase_view_join_batch(ev: DataFrame, horizon_minutes: int = 60) -> DataFrame:
+def purchase_view_join_batch(ev: DataFrame) -> DataFrame:
     """I5 stream-stream join, batch core: each purchase joined to every
-    view by the same user within the preceding ``horizon_minutes``.
+    view by the same user within the preceding 60 minutes.
 
     The streaming twin (purchase_view_join_stream) is the same join under
     watermarks; the time bound is what lets Spark expire join state —
@@ -339,7 +342,7 @@ def purchase_view_join_batch(ev: DataFrame, horizon_minutes: int = 60) -> DataFr
     cond = (
         (F.col("user_id") == F.col("v_user"))
         & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {horizon_minutes} MINUTES"))
+        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 60 MINUTES"))
     )
     return p.join(v, cond).select(
         "user_id",
@@ -350,47 +353,44 @@ def purchase_view_join_batch(ev: DataFrame, horizon_minutes: int = 60) -> DataFr
     )
 
 
-def purchase_view_join_stream(
-    purchases: DataFrame, views: DataFrame, horizon_minutes: int = 60, watermark: str = "10 minutes"
-) -> DataFrame:
-    """I5 streaming twin: watermarked stream-stream interval join."""
-    p = purchases.withWatermark("ts", watermark).select(
+def purchase_view_join_stream(purchases: DataFrame, views: DataFrame) -> DataFrame:
+    """I5 streaming twin: stream-stream interval join under 10-minute
+    watermarks."""
+    p = purchases.withWatermark("ts", "10 minutes").select(
         "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts")
     )
-    v = views.withWatermark("ts", watermark).select(
+    v = views.withWatermark("ts", "10 minutes").select(
         F.col("user_id").alias("v_user"), F.col("event_id").alias("view_id"), F.col("ts").alias("v_ts")
     )
     cond = (
         (F.col("user_id") == F.col("v_user"))
         & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {horizon_minutes} MINUTES"))
+        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 60 MINUTES"))
     )
     return p.join(v, cond).select("user_id", "purchase_id", "p_ts", "view_id", "v_ts")
 
 
-def enrich_counts(ev: DataFrame, dim: DataFrame, dim_key: str = "c_custkey",
-                  dim_val: str = "c_mktsegment") -> DataFrame:
+def enrich_counts(ev: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static enrichment (I+): join events against a broadcast
-    dimension and count per (dimension value, event_type). The SAME code
+    customer dimension and count per (c_mktsegment, event_type). The SAME code
     serves batch and streaming — Structured Streaming supports inner
     stream-static joins natively; the static side is re-broadcast per
     micro-batch, so dimension updates between batches are picked up. At
     100 TB of stream the join is map-side (no shuffle on the stream);
     the only shuffle is the final aggregate."""
-    joined = ev.join(F.broadcast(dim), ev["user_id"] == dim[dim_key])
-    return joined.groupBy(dim_val, "event_type").agg(
+    joined = ev.join(F.broadcast(dim), ev["user_id"] == dim["c_custkey"])
+    return joined.groupBy("c_mktsegment", "event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events")
     )
 
 
-def cascade_radius_stream(query_stream: DataFrame, corpus: DataFrame,
-                          radius: int = 26) -> DataFrame:
+def cascade_radius_stream(query_stream: DataFrame, corpus: DataFrame) -> DataFrame:
     """I5+/K3 streaming retrieval cascade (twin of catalog stream_cascade).
 
     ``query_stream`` is a stream of sign-encoded queries (vec_id, w1, w2,
     e_q — operators/similarity.py::sign_words64); ``corpus`` is the STATIC
     encoded table. Stage 1 is a stream-static non-equi inner join on the
-    Hamming RADIUS predicate (a radius test is stateless and therefore
+    Hamming radius-26 predicate (a radius test is stateless and therefore
     streaming-legal where a per-query top-k window is not); stage 2 scores
     radius survivors with the exact quantized dot; the reduction is a plain
     streaming aggregation (COUNT + MAX over the (dot, −vec, hamming)
@@ -409,7 +409,7 @@ def cascade_radius_stream(query_stream: DataFrame, corpus: DataFrame,
             (F.col("vec_id") != F.col("query_id"))
             & (
                 F.expr("bit_count(w1 ^ q1) + bit_count(w2 ^ q2)")
-                <= F.lit(radius)
+                <= F.lit(26)
             ),
         )
         .withColumn(

@@ -19,6 +19,20 @@ def spark():
 SF_SMALL = "/root/testdata/sf0.001"
 
 
+def jobs_of(sc, label: str, call):
+    """Run ``call()`` under its own job group; returns (result, jobs)."""
+    import uuid
+
+    group = f"{label}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, label)
+    try:
+        out = call()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 @pytest.fixture(scope="session")
 def tiny_warehouse(spark, tmp_path_factory):
     """A seeded two-sample warehouse (one sample with BED coverage and

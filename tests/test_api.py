@@ -5,6 +5,7 @@ REST, as library calls (SURVEY §3)."""
 
 import pytest
 
+from tests.conftest import jobs_of
 from varda_spark.api import DuplicateImportError, VardaWarehouse
 
 VCF_A = """##fileformat=VCFv4.2
@@ -147,20 +148,6 @@ def test_local_table_plans_in_the_jvm(spark):
     assert empty.collect() == [] and [tuple(r) for r in one.collect()] == [("c", "vcf", 7)]
 
 
-def _jobs_of(sc, label: str, call):
-    """Run ``call()`` under its own job group; returns (result, jobs)."""
-    import uuid
-
-    group = f"{label}-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, label)
-    try:
-        out = call()
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
 def test_lifecycle_job_budget(spark, tmp_path):
     """create → import → activate for two seeded samples: the sample
     dimension and the manifest are read and written on the driver, so
@@ -175,16 +162,16 @@ def test_lifecycle_job_budget(spark, tmp_path):
     sc = spark.sparkContext
     counts, jobs = [], 0
     for s in inputs.samples:
-        sid, n = _jobs_of(sc, "create", lambda: wh.create_sample(s.name, public=s.public))
+        sid, n = jobs_of(sc, "create", lambda: wh.create_sample(s.name, public=s.public))
         assert n == 0, ("create_sample", n)
-        rows, n = _jobs_of(sc, "import_variation", lambda: wh.import_variation(sid, s.vcf))
+        rows, n = jobs_of(sc, "import_variation", lambda: wh.import_variation(sid, s.vcf))
         counts.append((rows, read_vcf, s.vcf))
         jobs += n
         if s.bed:
-            rows, n = _jobs_of(sc, "import_coverage", lambda: wh.import_coverage(sid, s.bed))
+            rows, n = jobs_of(sc, "import_coverage", lambda: wh.import_coverage(sid, s.bed))
             counts.append((rows, read_bed, s.bed))
             jobs += n
-        _, n = _jobs_of(sc, "activate", lambda: wh.activate_sample(sid))
+        _, n = jobs_of(sc, "activate", lambda: wh.activate_sample(sid))
         assert n == 0, ("activate_sample", n)
     assert any(s.bed for s in inputs.samples)
     assert jobs <= 3, jobs

@@ -14,8 +14,10 @@ import pytest
 
 from varda_spark.operators.similarity import (
     dual_retriever_pools,
+    exact_l2_topk,
     ivf_pq_nprobe_sweep,
     mmr_rerank,
+    query_sample_dot_topk,
 )
 
 
@@ -85,20 +87,31 @@ def test_dual_retriever_pools_random(spark, seed):
         assert got_rb == rb
 
 
-def test_dual_retriever_pools_tiny_corpus_excludes_self(spark):
-    """Corpus smaller than the pool: every non-self row fits, and the
-    query's own row must NOT pad the pool (the old sentinel-masking bug
-    flagged in ADVICE r7 — with <= pool non-self candidates the
-    int64-sentinel self row re-entered the emitted pool)."""
-    df, Q = _emb_df(spark, seed=9, n=6, dim=8)
-    got = dual_retriever_pools(df, n_queries=3, pool=10).toPandas()
+_SELF_EXCLUDING = {
+    # kernel: (call on the corpus, rank columns of its result)
+    "dual_retriever_pools": (lambda df: dual_retriever_pools(df, n_queries=3, pool=10), ("ra", "rb")),
+    "exact_l2_topk": (lambda df: exact_l2_topk(df, n_queries=3, exclude_self=True), ("rank",)),
+    "query_sample_dot_topk": (query_sample_dot_topk, ("rank",)),
+    "mmr_rerank": (lambda df: mmr_rerank(df, n_queries=3, pool=10, k=5), ("round",)),
+}
+
+
+@pytest.mark.parametrize("kernel", list(_SELF_EXCLUDING))
+def test_tiny_corpus_excludes_self(spark, kernel):
+    """Corpus smaller than the result size: every non-self row fits, and
+    the query's own row must NOT pad the list. A self row masked with an
+    int64 sentinel score re-entered any list with fewer non-self
+    candidates than k; the oracles use WHERE vec_id != query_id."""
+    df, _ = _emb_df(spark, seed=9, n=3, dim=8)
+    call, ranks = _SELF_EXCLUDING[kernel]
+    got = call(df).toPandas()
     for qi in range(3):
         g = got[got.query_id == qi]
         assert qi not in set(g.vec_id), f"self row leaked for query {qi}"
-        # all 5 non-self rows present in both pools, ranks a permutation
-        assert sorted(g.vec_id) == [v for v in range(6) if v != qi]
-        assert sorted(int(r) for r in g.ra.dropna()) == [1, 2, 3, 4, 5]
-        assert sorted(int(r) for r in g.rb.dropna()) == [1, 2, 3, 4, 5]
+        # both non-self rows present, each rank column a permutation
+        assert sorted(g.vec_id) == [v for v in range(3) if v != qi]
+        for r in ranks:
+            assert sorted(int(x) for x in g[r].dropna()) == [1, 2]
 
 
 def test_nprobe_sweep_full_probe_equals_adc(spark):

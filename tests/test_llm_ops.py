@@ -1,7 +1,10 @@
 """LLM-pipeline operator tests: dedup, similarity, simhash, jaccard."""
 
+import functools
+
 from pyspark.sql import Row, functions as F
 
+from tests.conftest import jobs_of
 from varda_spark.operators.dedup import (
     dedup_exact,
     minhash_candidates,
@@ -567,3 +570,19 @@ def test_dup_factor_floor_is_unity(spark):
     for r in rows:
         assert r.n_distinct <= r.n_total
         assert r.dup_factor_ppm >= 1000000  # at least 1.0x by definition
+
+
+def test_probe_builders_collect_once(spark):
+    """Building a fixed-probe DataFrame (no action) costs one driver
+    collect: PQ codewords, IVF cells and probes are all slices of one
+    lowest-key prefix, and the sweep's exact-L2 side reuses it."""
+    from varda_spark.operators import similarity as S
+
+    e = read_table(spark, SF, "embeddings")
+    sc = spark.sparkContext
+    for build in (
+        S.pq_codes, S.pq_adc_topk, S.ivf_pq_topk, S.ivf_pq_nprobe_sweep,
+        S.exact_l2_topk, S.query_sample_dot_topk, S.dual_retriever_pools, S.mmr_rerank,
+    ):
+        _, n = jobs_of(sc, build.__name__, functools.partial(build, e))
+        assert n == 1, (build.__name__, n)

@@ -5,8 +5,8 @@ DuckDB twin at sf0.001 through tools/check_oracle.py's own ``duck_con`` and
 The full sweep (``python tools/check_oracle.py``, every key at sf0.01) is
 too slow for every change; this sample is chosen to catch drift from a
 mechanical edit: one key per catalog family (SURVEY.md §2, A–K), the
-benchmark's catalog keys, and at least one key per shared SQL-text helper
-at the top of catalog.py.
+benchmark's catalog keys, at least one key per shared SQL-text helper at
+the top of catalog.py, and one key per shared operator helper.
 """
 
 import sys
@@ -44,6 +44,11 @@ SAMPLE = [
     "scan_dpp",          # _scratch_table
     # the interval join, clustering and temp-view helpers
     "join_interval", "join_nearest", "dedup_stars", "dedup_pipeline_v2", "sql_api",
+    # the fixed-probe similarity helpers: PQ encoder + ADC scan, IVF-PQ
+    # scoring + exact-L2 scan, dot scan with a carry, two-metric scan,
+    # scan carrying vectors into a grouped stage
+    "sim_pq_adc_topk", "sim_nprobe_sweep", "emb_knn_classify", "sim_rrf_fusion",
+    "sim_mmr_rerank",
 ]
 
 

@@ -398,13 +398,8 @@ BNLJ_OK = {
     "graph_conductance", # 1-row 2m edge-count scalar (same as modularity)
     "sim_hamming_recall",  # the sim_hamming_topk 5-row probe broadcast
                          # inside the approx side (same whitelist reason)
-    "sim_rrf_fusion",    # the same 5-row query broadcast feeding BOTH
-                         # retrievers (salted two-phase top-k bounds
-                         # every task, as in sim_hamming_topk)
     "emb_hard_negatives",  # 5-row anchor broadcast fan-out (salted
                          # two-phase top-1 per label side)
-    "sim_mmr_rerank",    # 5-row query broadcast; greedy groups are
-                         # pool-sized (10 rows) regardless of corpus
     "text_kn_bigram",    # 1-row |bigram types| scalar (the T in the
                          # continuation probability)
     "graph_rich_club",   # 5-row threshold spine range-joined against

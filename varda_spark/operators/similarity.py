@@ -9,9 +9,33 @@ Dot products use ``zip_with`` + ``aggregate`` — JVM-side, sequential fold,
 deterministic. For oracle-checkable ranking the catalog uses the quantized
 integer dot (associative → order-independent → exact across engines);
 ``cosine_topk`` below is the real float API.
+
+Fixed-probe search. The PQ, IVF-PQ, exact-L2, dot, hybrid-pool and MMR
+kernels rank the corpus against a FIXED probe set: the n lowest-key
+quantized vectors, which also seed the PQ codebooks and the IVF cells.
+Three helpers carry that contract:
+
+- ``_probe_rows``: one bounded driver collect of the longest lowest-key
+  prefix a builder needs, as (ids, int64 matrix).
+- ``_pq_quantizer``: per-subspace squared distances to the codewords,
+  which are a probe's ADC lookup tables, and their argmin, which is the
+  PQ encoding (``_pq_code_frame`` is the one encode pass,
+  ``_ivf_pq_scored`` the one IVF-PQ probe join).
+- ``_probe_topk``: the two-phase top-k scan — per Arrow batch a score
+  matrix against the closure-shipped probes, a local top-k under the total
+  (score, key) order, then one row_number window per metric.
+
+A probe that excludes itself drops its own row, so on a corpus smaller
+than k a result has fewer rows, never a padded one. All scores are exact
+int64; ties go to the lowest key; keys keep their input type. What runs
+on executors (score functions, the encoder) is a nested function, which
+ships by value: Python workers never import this package.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
@@ -635,31 +659,157 @@ def kmeans_assign(
 
 
 # ---------------------------------------------------------------------
-# Product quantization (PQ): the memory-bound ANN path. IVF bounds which
-# vectors a query scans; PQ bounds the BYTES per scanned vector — m
-# codes (one byte each at k<=256) replace the full float vector, and
-# search runs against per-query lookup tables (ADC, Jégou et al. 2011,
-# "Product Quantization for Nearest Neighbor Search"). At 100 TB the
-# corpus holds codes only; full vectors stay in cold storage for
-# optional re-ranking.
+# Fixed-probe search: every kernel from here on ranks the corpus against
+# the n lowest-key quantized vectors (the probes), through three helpers
+# (see the module docstring). Product quantization (PQ) is the
+# memory-bound ANN path. IVF bounds which vectors a query scans; PQ bounds
+# the BYTES per scanned vector — m codes (one byte each at k<=256) replace
+# the full float vector, and search runs against per-query lookup tables
+# (ADC, Jégou et al. 2011, "Product Quantization for Nearest Neighbor
+# Search"). At 100 TB the corpus holds codes only; full vectors stay in
+# cold storage for optional re-ranking.
 # ---------------------------------------------------------------------
 
 
-def _pq_codebooks(emb: DataFrame, m: int, k: int, key: str = "vec_id"):
-    """Deterministic PQ codebooks: the k lowest-key vectors' quantized
-    subvectors, code id 0..k-1 in key order (the sim_ivf quantizer-init
-    discipline — engine-portable, no RNG). Returns (subC, dsub, q_)."""
+def _probe_rows(q_: DataFrame, key: str, n: int):
+    """The n lowest-key rows of a quantized (key, _q) frame as (ids,
+    n × dim int64 matrix): one bounded driver collect. A builder calls it
+    once, for the longest prefix it needs (codewords, coarse cells,
+    probes), and slices that."""
     import numpy as np
 
-    q_ = emb.select(key, quantized("embedding", 1000).alias("_q"))
-    rows = q_.orderBy(key).limit(k).collect()  # k rows — driver state
-    C = np.array([r["_q"] for r in rows], dtype=np.int64)
-    dim = C.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    dsub = dim // m
-    subC = [C[:, j * dsub:(j + 1) * dsub] for j in range(m)]
-    return subC, dsub, q_
+    rows = q_.select(key, "_q").orderBy(key).limit(n).collect()
+    return (
+        np.array([r[key] for r in rows]),
+        np.array([r["_q"] for r in rows], dtype=np.int64),
+    )
+
+
+def _pq_split(C, m: int):
+    """Deterministic PQ codebooks from k codeword rows (the sim_ivf
+    quantizer-init discipline, no RNG): an m × k × dsub int64 array, code
+    id 0..k-1 in row order."""
+    import numpy as np
+
+    if C.ndim != 2:
+        raise ValueError("PQ codebooks need at least one vector")
+    if C.shape[1] % m:
+        raise ValueError(f"dim {C.shape[1]} not divisible by m={m} subspaces")
+    return np.stack(np.split(C, m, axis=1))
+
+
+def _pq_quantizer(cb):
+    """The PQ lookup-table builder and encoder for codebooks ``cb``
+    (m × k × dsub), as closures that ship to executors by value.
+
+    ``tables(X)``: squared L2 from each row's m subvectors to its
+    subspace's k codewords, an n × m × k int64 array — for a probe, its
+    ADC lookup tables. ``encode(X)``: (codes n × m, squared quantization
+    error n), the per-subspace argmin of those tables; ties → lowest code
+    id (np.argmin takes the first minimum — the oracle's (distance,
+    code_id) order)."""
+    import numpy as np
+
+    m, _, dsub = cb.shape
+
+    def tables(X):
+        sub = X.reshape(len(X), m, dsub)
+        return np.stack(
+            [((sub[:, j, None, :] - cb[j][None]) ** 2).sum(axis=2) for j in range(m)],
+            axis=1,
+        )
+
+    def encode(X):
+        T = tables(X)
+        codes = T.argmin(axis=2)
+        return codes, np.take_along_axis(T, codes[:, :, None], axis=2).sum(axis=(1, 2))
+
+    return tables, encode
+
+
+def _pq_code_frame(q_: DataFrame, key: str, cb, cells) -> DataFrame:
+    """The one PQ encode pass over a quantized (key, _q) frame: a
+    mapInPandas → (key, [cell_id,] code_0..code_{m-1}, qerr), codebooks
+    closure-shipped (m·k·dsub ints). ``cells`` is None or (cell ids, cell
+    matrix); then every row also gets its coarse IVF cell, the argmax
+    integer dot (first maximum → lowest cell)."""
+    import numpy as np
+
+    m = len(cb)
+    _, encode = _pq_quantizer(cb)
+
+    def _enc(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            Q = np.vstack(pdf["_q"].to_numpy())
+            out = pdf[[key]].copy()
+            if cells is not None:
+                out["cell_id"] = cells[0][(Q @ cells[1].T).argmax(axis=1)]
+            codes, qerr = encode(Q)
+            for j in range(m):
+                out[f"code_{j}"] = codes[:, j]
+            out["qerr"] = qerr
+            yield out
+
+    key_t = q_.schema[key].dataType.simpleString()
+    cell = f", cell_id {key_t}" if cells is not None else ""
+    codes = "".join(f", code_{j} bigint" for j in range(m))
+    return q_.mapInPandas(_enc, f"{key} {key_t}{cell}{codes}, qerr bigint")
+
+
+def _probe_topk(corpus, key, qids, score, metrics, k, exclude_self, carry):
+    """Two-phase exact top-k of a fixed probe set in ONE corpus scan (the
+    REPOSE shape: a local top-k per partition, then one global merge).
+
+    Per Arrow batch ``score(pdf)`` returns one probes × rows int64 matrix
+    per ``metrics`` entry (score column, rank column, descending); the
+    probes ride its closure. With ``exclude_self`` a probe's own row is
+    DROPPED from its candidates, never masked with a sentinel, so it can
+    never pad a short list (the oracles' vec_id != query_id). Each batch
+    keeps, per probe, the union of every metric's k best rows under the
+    total (score, key) order (np.lexsort), so at most batches·probes·k
+    rows per metric leave the scan, never corpus × probes; one row_number
+    window per metric ranks them (ties → lowest key), and a row survives
+    when any of its ranks is <= k. Returns (query_id, key, scores...,
+    carry..., ranks...) with query_id, key and carry in their input types.
+    """
+    import numpy as np
+
+    def _scan(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf[key].to_numpy()
+            S = score(pdf)
+            picks = []
+            for qi, qid in enumerate(qids):
+                cand = np.flatnonzero(ids != qid) if exclude_self else np.arange(len(ids))
+                picks.append(np.unique(np.concatenate([
+                    cand[np.lexsort((ids[cand], -s[qi, cand] if desc else s[qi, cand]))[:k]]
+                    for s, (_, _, desc) in zip(S, metrics)
+                ])))
+            qi = np.repeat(np.arange(len(qids)), [len(p) for p in picks])
+            ix = np.concatenate([np.empty(0, np.int64), *picks])
+            out = {"query_id": qids[qi], key: ids[ix]}
+            out.update({name: s[qi, ix] for s, (name, _, _) in zip(S, metrics)})
+            out.update({c: pdf[c].to_numpy()[ix] for c in carry})
+            yield pd.DataFrame(out)
+
+    types = dict(corpus.dtypes)
+    ddl = ", ".join(
+        [f"query_id {types[key]}", f"{key} {types[key]}"]
+        + [f"{name} bigint" for name, _, _ in metrics]
+        + [f"{c} {types[c]}" for c in carry]
+    )
+    ranked = corpus.mapInPandas(_scan, ddl)
+    for name, rank, desc in metrics:
+        order = F.col(name).desc() if desc else F.col(name).asc()
+        w = Window.partitionBy("query_id").orderBy(order, F.col(key).asc())
+        ranked = ranked.withColumn(rank, F.row_number().over(w))
+    return ranked.filter(reduce(operator.or_, [F.col(r) <= k for _, r, _ in metrics]))
 
 
 def pq_fit(
@@ -669,13 +819,13 @@ def pq_fit(
     iters: int = 2,
 ):
     """Lloyd-refine the PQ codebooks per subspace (the k-means step of
-    Jégou et al. 2011 §II): init = the deterministic lowest-key
-    subvectors (_pq_codebooks), then each iteration (a) assigns every
-    subvector to its argmin integer-L2 codeword and (b) recomputes each
-    codeword as the per-dimension floor-mean of its assigned
-    subvectors (empty codewords keep their previous value). Returns the
-    refined codebooks as a list of m (k × dsub) int64 arrays, passable
-    to pq_codes via ``codebooks=``.
+    Jégou et al. 2011 §II): init = the k lowest-key subvectors
+    (_probe_rows, _pq_split), then each iteration (a) assigns every
+    subvector to its argmin integer-L2 codeword (_pq_quantizer) and (b)
+    recomputes each codeword as the per-dimension floor-mean of its
+    assigned subvectors (empty codewords keep their previous value).
+    Returns the refined codebooks as a list of m (k × dsub) int64 arrays,
+    passable to pq_codes via ``codebooks=``.
 
     Scale shape: each iteration is ONE corpus pass; the mapInPandas
     kernel reduces every Arrow batch down to per-(subspace, code, dim)
@@ -688,33 +838,27 @@ def pq_fit(
     index build runs first."""
     import numpy as np
 
-    subC, dsub, q_ = _pq_codebooks(emb, m, k)
+    q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
+    cb = _pq_split(_probe_rows(q_, "vec_id", k)[1], m)
     for _ in range(iters):
-        def _stats(batches, subC=subC, dsub=dsub, m=m, k=k):
+        _, encode = _pq_quantizer(cb)
+
+        def _stats(batches, encode=encode):
             import pandas as pd
 
             for pdf in batches:
                 if not len(pdf):
                     continue
                 Q = np.vstack(pdf["_q"].to_numpy())
-                rows = {"j": [], "c": [], "d": [], "s": [], "n": []}
+                codes, _ = encode(Q)
+                sub = Q.reshape(len(Q), m, -1)
+                rows = []
                 for j in range(m):
-                    Sj = Q[:, j * dsub:(j + 1) * dsub]
-                    d2 = ((Sj[:, None, :] - subC[j][None, :, :]) ** 2).sum(axis=2)
-                    code = d2.argmin(axis=1)
-                    for c in range(k):
-                        mask = code == c
-                        n = int(mask.sum())
-                        if not n:
-                            continue
-                        s = Sj[mask].sum(axis=0)
-                        for d in range(dsub):
-                            rows["j"].append(j)
-                            rows["c"].append(c)
-                            rows["d"].append(d)
-                            rows["s"].append(int(s[d]))
-                            rows["n"].append(n)
-                yield pd.DataFrame(rows)
+                    for c in np.unique(codes[:, j]):
+                        mask = codes[:, j] == c
+                        n = mask.sum()
+                        rows += [(j, c, d, s, n) for d, s in enumerate(sub[mask, j].sum(axis=0))]
+                yield pd.DataFrame(rows, columns=["j", "c", "d", "s", "n"])
 
         stats = (
             q_.mapInPandas(_stats, "j int, c int, d int, s bigint, n bigint")
@@ -722,48 +866,27 @@ def pq_fit(
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
             .collect()  # ≤ m·k·dsub rows — fitted-model state
         )
-        subC = [sc.copy() for sc in subC]
+        cb = cb.copy()
         for r in stats:
-            subC[r["j"]][r["c"], r["d"]] = r["s"] // r["n"]
-    return subC
+            cb[r["j"], r["c"], r["d"]] = r["s"] // r["n"]
+    return list(cb)
 
 
 def pq_codes(emb: DataFrame, key: str = "vec_id", codebooks=None) -> DataFrame:
     """PQ-encode every vector: (key, code_0..code_3, qerr) over 4
-    subspaces of 8 codewords each.
-
-    Each subspace assigns to the argmin integer-L2 codeword (ties →
-    lowest code id: np.argmin takes the first minimum over id-ascending
-    rows — the oracle's (distance, code_id) ordering); qerr is the total
-    squared quantization error, the compression-quality number a
-    recall-vs-memory decision reads. One mapInPandas pass, codebooks
-    closure-shipped (m·k·dsub ints); exact integer math throughout.
-    ``codebooks`` (e.g. from pq_fit) overrides the deterministic
-    lowest-key init."""
+    subspaces of 8 codewords each, in one encode pass (_pq_code_frame).
+    qerr is the total squared quantization error, the compression-quality
+    number a recall-vs-memory decision reads. ``codebooks`` (e.g. from
+    pq_fit) overrides the deterministic init, the 8 lowest-key vectors'
+    subvectors; exact integer math throughout."""
     import numpy as np
 
-    m = 4
-    subC, dsub, q_ = _pq_codebooks(emb, m, 8, key)
-    if codebooks is not None:
-        subC = codebooks
-
-    def _enc(batches, subC=subC, dsub=dsub, m=m):
-        for pdf in batches:
-            Q = np.vstack(pdf["_q"].to_numpy())
-            out = pdf[[key]].copy()
-            qerr = np.zeros(len(pdf), dtype=np.int64)
-            for j in range(m):
-                Sj = Q[:, j * dsub:(j + 1) * dsub]
-                d2 = ((Sj[:, None, :] - subC[j][None, :, :]) ** 2).sum(axis=2)
-                code = d2.argmin(axis=1)
-                out[f"code_{j}"] = code.astype(np.int64)
-                qerr += d2[np.arange(len(pdf)), code]
-            out["qerr"] = qerr
-            yield out
-
-    key_t = q_.schema[key].dataType.simpleString()
-    codes = ", ".join(f"code_{j} bigint" for j in range(m))
-    return q_.mapInPandas(_enc, f"{key} {key_t}, {codes}, qerr bigint")
+    q_ = emb.select(key, quantized("embedding", 1000).alias("_q"))
+    if codebooks is None:
+        cb = _pq_split(_probe_rows(q_, key, 8)[1], 4)
+    else:
+        cb = np.asarray(codebooks, dtype=np.int64)
+    return _pq_code_frame(q_, key, cb, None)
 
 
 def pq_adc_topk(
@@ -773,70 +896,34 @@ def pq_adc_topk(
     key: str = "vec_id",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: the n_queries
-    lowest-key vectors probe the encoded corpus; distance(query, doc) =
-    Σ_j LUT_j[code_j] where LUT_j[c] = ‖query_sub_j − codeword_c‖² —
-    the query is never quantized, only the corpus is.
+    lowest-key vectors probe the encoded corpus (pq_codes' deterministic
+    codebooks); distance(query, doc) = Σ_j LUT_j[code_j] where LUT_j[c] =
+    ‖query_sub_j − codeword_c‖² — the query is never quantized, only the
+    corpus is. One collect serves codebooks and probes.
 
     Scale shape: the corpus-side pass reads CODES ONLY (m bigints per
     row here; m bytes in a packed layout) and computes distances by
-    table lookup — no per-pair vector math. Per-Arrow-batch the kernel
-    keeps just the local top-k per query (np.argpartition over the
-    total (adc, key) order), so the final exact window ranks
-    batches·q·topk survivors, never n·q rows — the standard two-phase
-    top-k. Exact integer math; ties → lowest key. The codebooks are
-    pq_codes' deterministic lowest-key init (4 subspaces × 8 codewords)."""
+    table lookup — no per-pair vector math — inside the two-phase top-k
+    scan (_probe_topk). Exact integer math; ties → lowest key; the probe
+    may rank itself."""
     import numpy as np
 
-    m = 4
-    subC, dsub, q_ = _pq_codebooks(emb, m, 8, key)
-    qrows = q_.orderBy(key).limit(n_queries).collect()
-    Qm = np.array([r["_q"] for r in qrows], dtype=np.int64)  # q × dim
-    qids = np.array([r[key] for r in qrows])  # key-type-generic (ADVICE r6)
-    # per-query per-subspace lookup tables: q × m × k
-    lut = np.stack(
-        [
-            ((Qm[:, j * dsub:(j + 1) * dsub][:, None, :] - subC[j][None, :, :]) ** 2).sum(axis=2)
-            for j in range(m)
-        ],
-        axis=1,
-    )
+    q_ = emb.select(key, quantized("embedding", 1000).alias("_q"))
+    ids, P = _probe_rows(q_, key, max(8, n_queries))
+    cb = _pq_split(P[:8], 4)
+    tables, _ = _pq_quantizer(cb)
+    lut = tables(P[:n_queries])  # queries × m × k
+    cols = [f"code_{j}" for j in range(len(cb))]
 
-    def _scan(batches, lut=lut, qids=qids, m=m, topk=topk):
-        import pandas as pd
+    def _adc(pdf):
+        codes = pdf[cols].to_numpy(dtype=np.int64)  # n × m
+        return (lut[:, np.arange(len(cols)), codes].sum(axis=2),)
 
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            codes = np.stack(
-                [pdf[f"code_{j}"].to_numpy(dtype=np.int64) for j in range(m)], axis=1
-            )  # n × m
-            ids = pdf[key].to_numpy()  # native key dtype; lexsort orders it
-            # adc[q, i] = Σ_j lut[q, j, codes[i, j]]
-            adc = np.zeros((len(qids), n), dtype=np.int64)
-            for j in range(m):
-                adc += lut[:, j, :][:, codes[:, j]]
-            out = {"query_id": [], key: [], "adc": []}
-            kk = min(topk, n)
-            for qi in range(len(qids)):
-                # total order (adc, id): lexsort then take first kk
-                order = np.lexsort((ids, adc[qi]))[:kk]
-                out["query_id"].extend([qids[qi]] * kk)
-                out[key].extend(ids[order])
-                out["adc"].extend(adc[qi][order])
-            yield pd.DataFrame(out)
-
-    key_t = q_.schema[key].dataType.simpleString()
-    codes_df = pq_codes(emb, key)
-    local = codes_df.mapInPandas(
-        _scan, f"query_id {key_t}, {key} {key_t}, adc bigint"
+    top = _probe_topk(
+        pq_codes(emb, key, cb), key, ids[:n_queries], _adc,
+        (("adc", "rank", False),), topk, False, (),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col(key).asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "rank", key, "adc")
-    )
+    return top.select("query_id", "rank", key, "adc")
 
 
 def semantic_dedup(emb: DataFrame) -> DataFrame:
@@ -909,110 +996,87 @@ def exact_l2_topk(
     emb: DataFrame, n_queries: int = 5, scale: int = 1000, exclude_self: bool = False
 ) -> DataFrame:
     """Exact integer-L2 top-3 for a FIXED probe set: the ground truth an
-    ANN index (ivf_pq_topk / pq_adc_topk) is evaluated against. The
-    n_queries lowest-key vectors ride the task closure (q·dim ints);
-    the corpus pass is one mapInPandas with per-Arrow-batch local top-k
-    under the total (d², vec_id) order, and the final window ranks only
-    batches·q·3 survivors — linear in n for fixed q, never n·q
-    materialized rows. All-integer; ties → lowest key. With
-    ``exclude_self`` the probe row itself is masked out of its own
-    candidate list (for comparing against indexes that exclude self,
-    e.g. sim_hamming_topk)."""
+    ANN index (ivf_pq_topk / pq_adc_topk) is evaluated against — the
+    n_queries lowest-key vectors in one two-phase scan (_probe_topk),
+    linear in n for fixed q. All-integer; ties → lowest key. With
+    ``exclude_self`` a probe's own row is not a candidate (for comparing
+    against indexes that exclude self, e.g. sim_hamming_topk)."""
+    q_ = emb.select("vec_id", quantized("embedding", scale).alias("_q"))
+    return _exact_l2(q_, *_probe_rows(q_, "vec_id", n_queries), exclude_self)
+
+
+def _exact_l2(q_: DataFrame, qids, Qm, exclude_self: bool) -> DataFrame:
+    """exact_l2_topk over probes already on the driver."""
     import numpy as np
 
-    q_ = emb.select("vec_id", quantized("embedding", scale).alias("_q"))
-    key_t = q_.schema["vec_id"].dataType.simpleString()
-    qrows = q_.orderBy("vec_id").limit(n_queries).collect()
-    Qm = np.array([r["_q"] for r in qrows], dtype=np.int64)
-    qids = np.array([r["vec_id"] for r in qrows])
+    def _d2(pdf):
+        # d²[q, i] = |x_i|² − 2 q·x_i + |q|²; exact int64
+        X = np.vstack(pdf["_q"].to_numpy())
+        return (
+            (X * X).sum(axis=1)[None, :] - 2 * (Qm @ X.T) + (Qm * Qm).sum(axis=1)[:, None],
+        )
 
-    def _scan(batches, Qm=Qm, qids=qids, exclude_self=exclude_self):
-        import pandas as pd
-
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            X = np.vstack(pdf["_q"].to_numpy())
-            ids = pdf["vec_id"].to_numpy()
-            # d²[q, i] = |x_i|² − 2 q·x_i + |q|²; exact int64
-            d2 = (
-                (X * X).sum(axis=1)[None, :]
-                - 2 * (Qm @ X.T)
-                + (Qm * Qm).sum(axis=1)[:, None]
-            )
-            out = {"query_id": [], "vec_id": [], "d2": []}
-            kk = min(3, n)
-            for qi in range(len(qids)):
-                if exclude_self:
-                    d2[qi][ids == qids[qi]] = np.iinfo(np.int64).max - 1
-                order = np.lexsort((ids, d2[qi]))[:kk]
-                out["query_id"].extend([qids[qi]] * kk)
-                out["vec_id"].extend(ids[order])
-                out["d2"].extend(d2[qi][order])
-            yield pd.DataFrame(out)
-
-    local = q_.mapInPandas(_scan, f"query_id {key_t}, vec_id {key_t}, d2 bigint")
-    w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "rank", "vec_id", "d2")
-    )
+    top = _probe_topk(q_, "vec_id", qids, _d2, (("d2", "rank", False),), 3, exclude_self, ())
+    return top.select("query_id", F.col("rank").cast("bigint").alias("rank"), "vec_id", "d2")
 
 
 def query_sample_dot_topk(emb: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """Exact max-dot top-5 of the 50 lowest-key queries vs the full
-    corpus in ONE scan — the similarity twin of exact_l2_topk: the
-    q×dim integer query matrix rides the task closure, each Arrow
-    batch is one int64 matmul (Xb @ Qᵀ), the kernel keeps the local
-    top-5 per query under the total (dot DESC, vec_id ASC) order with
-    SELF-matches excluded, and the final window ranks batches·q·5
-    survivors — linear in n for fixed q, never n·q materialized rows.
-    ``carry`` columns (e.g. a label) ride along per neighbor row."""
+    corpus in ONE two-phase scan (_probe_topk) — the similarity twin of
+    exact_l2_topk, self excluded, ties → lowest vec_id. ``carry`` columns
+    (e.g. a label) ride along per neighbor row."""
     import numpy as np
 
     q_ = emb.select("vec_id", *carry, quantized("embedding", 100).alias("_q"))
-    key_t = q_.schema["vec_id"].dataType.simpleString()
-    qrows = q_.orderBy("vec_id").limit(50).collect()
-    Qm = np.array([r["_q"] for r in qrows], dtype=np.int64)
-    qids = np.array([r["vec_id"] for r in qrows])
-
-    def _scan(batches, Qm=Qm, qids=qids, carry=carry):
-        import pandas as pd
-
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            X = np.vstack(pdf["_q"].to_numpy())
-            ids = pdf["vec_id"].to_numpy()
-            dots = X @ Qm.T  # n × q, exact int64
-            out = {"query_id": [], "vec_id": [], "dot": []}
-            for c in carry:
-                out[c] = []
-            kk = min(5, n)
-            cvals = {c: pdf[c].to_numpy() for c in carry}
-            for qi in range(len(qids)):
-                col = dots[:, qi].copy()
-                col[ids == qids[qi]] = np.iinfo(np.int64).min + 1  # self out
-                order = np.lexsort((ids, -col))[:kk]
-                out["query_id"].extend([qids[qi]] * kk)
-                out["vec_id"].extend(ids[order])
-                out["dot"].extend(col[order])
-                for c in carry:
-                    out[c].extend(cvals[c][order])
-            yield pd.DataFrame(out)
-
-    carry_t = "".join(
-        f", {c} {q_.schema[c].dataType.simpleString()}" for c in carry
+    qids, Qm = _probe_rows(q_, "vec_id", 50)
+    top = _probe_topk(
+        q_, "vec_id", qids, lambda pdf: (Qm @ np.vstack(pdf["_q"].to_numpy()).T,),
+        (("dot", "rank", True),), 5, True, carry,
     )
-    local = q_.mapInPandas(_scan, f"query_id {key_t}, vec_id {key_t}, dot bigint{carry_t}")
-    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "rank", "vec_id", "dot", *carry)
+    return top.select(
+        "query_id", F.col("rank").cast("bigint").alias("rank"), "vec_id", "dot", *carry
+    )
+
+
+def _ivf_pq_scored(q_: DataFrame, ids, P, ncells: int, k: int, n_queries: int, nprobe: int):
+    """The IVF-PQ scoring both IVF-PQ kernels share, from the probe prefix
+    (ids, P) of the quantized corpus q_: cells = the ncells lowest-key
+    vectors, PQ codebooks = 4 subspaces of the k lowest-key subvectors,
+    probes = the n_queries lowest-key vectors. One encode pass
+    (_pq_code_frame with cells) gives every row its cell and codes; each
+    probe's nprobe best cells by (dot DESC, cell_id ASC) become rows of a
+    driver-built probe table (query_id, cell_id, pr = the cell's probe
+    rank, l0..l3 = the probe's lookup tables; a LocalTableScan), which
+    broadcasts into an equi-join on cell_id; adc is a sum of element_at
+    lookups — whole-stage-codegen Column math, no python after encode.
+    Returns (query_id, vec_id, cell_id, pr, adc)."""
+    import numpy as np
+
+    from varda_spark.session import local_table
+
+    cb = _pq_split(P[:k], 4)
+    cids, C = ids[:ncells], P[:ncells]
+    enc = _pq_code_frame(q_, "vec_id", cb, (cids, C))
+    tables, _ = _pq_quantizer(cb)
+    luts = tables(P[:n_queries])
+    cells = cids.tolist()
+    probe_rows = [
+        {"query_id": qid, "cell_id": cells[ci], "pr": pr}
+        | {f"l{j}": luts[qi, j].tolist() for j in range(len(cb))}
+        for qi, qid in enumerate(ids[:n_queries].tolist())
+        for pr, ci in enumerate(np.lexsort((cids, -(C @ P[qi])))[:nprobe], start=1)
+    ]
+    key_t = q_.schema["vec_id"].dataType.simpleString()
+    lut_cols = "".join(f", l{j} array<bigint>" for j in range(len(cb)))
+    probes = local_table(
+        q_.sparkSession, probe_rows, f"query_id {key_t}, cell_id {key_t}, pr bigint{lut_cols}"
+    )
+    adc = reduce(
+        operator.add,
+        [F.element_at(f"l{j}", F.col(f"code_{j}").cast("int") + 1) for j in range(len(cb))],
+    )
+    return enc.join(F.broadcast(probes), "cell_id").select(
+        "query_id", "vec_id", "cell_id", "pr", adc.cast("bigint").alias("adc")
     )
 
 
@@ -1022,68 +1086,12 @@ def ivf_pq_topk(emb: DataFrame) -> DataFrame:
     compresses (the scan inside probed cells reads codes only, distances
     by ADC lookup) — together they bound BOTH how many rows a query
     touches and how many bytes per row, which is the whole 100 TB ANN
-    story.
-
-    One corpus pass encodes cell id (argmax integer dot vs the 8
-    lowest-key seed vectors — the sim_ivf discipline) AND the 4 PQ codes
-    (argmin integer L2 per subspace, 8 codewords each). Query routing and
-    LUT construction are driver-side numpy over 8·4·8 ints (index
-    metadata, like any fitted model); the probe table (5·2 rows carrying
-    the LUT arrays) broadcasts into an equi-join on cell_id, so the only
-    corpus-side work after encode is a broadcast-filtered scan with
-    element_at lookups — whole-stage-codegen Column math, no python.
-    Ties everywhere break to the lowest id; all-integer → oracle-exact.
+    story. The 2-probe case of _ivf_pq_scored, from one 8-row probe
+    collect; ties everywhere break to the lowest id; all-integer →
+    oracle-exact.
     """
-    import numpy as np
-
-    m = 4
-    subC, dsub, q_ = _pq_codebooks(emb, m, 8)
-    key_t = q_.schema["vec_id"].dataType.simpleString()
-    crows = q_.orderBy("vec_id").limit(8).collect()
-    C2 = np.array([r["_q"] for r in crows], dtype=np.int64)
-    cids = np.array([r["vec_id"] for r in crows])  # key-type-generic
-
-    def _enc(batches, C2=C2, cids=cids, subC=subC, dsub=dsub, m=m):
-        for pdf in batches:
-            Q = np.vstack(pdf["_q"].to_numpy())
-            out = pdf[["vec_id"]].copy()
-            S = Q @ C2.T
-            out["cell_id"] = cids[S.argmax(axis=1)]
-            for j in range(m):
-                Sj = Q[:, j * dsub:(j + 1) * dsub]
-                d2 = ((Sj[:, None, :] - subC[j][None, :, :]) ** 2).sum(axis=2)
-                out[f"code_{j}"] = d2.argmin(axis=1).astype(np.int64)
-            yield out
-
-    code_cols = ", ".join(f"code_{j} bigint" for j in range(m))
-    enc = q_.mapInPandas(_enc, f"vec_id {key_t}, cell_id {key_t}, {code_cols}")
-
-    qrows = q_.orderBy("vec_id").limit(5).collect()
-    Qm = np.array([r["_q"] for r in qrows], dtype=np.int64)
-    qids = [r["vec_id"] for r in qrows]
-    qd = Qm @ C2.T  # queries × cells coarse dots
-    probe_rows = []
-    for qi, qid in enumerate(qids):
-        luts = [
-            (
-                (Qm[qi, j * dsub:(j + 1) * dsub][None, :] - subC[j]) ** 2
-            ).sum(axis=1).tolist()
-            for j in range(m)
-        ]
-        # 2 best cells by (dot DESC, cell_id ASC)
-        order = np.lexsort((cids, -qd[qi]))[:2]
-        for ci in order:
-            probe_rows.append((qid, cids[ci].item(), *luts))
-    lut_cols = ", ".join(f"l{j} array<bigint>" for j in range(m))
-    probes = emb.sparkSession.createDataFrame(
-        probe_rows, f"query_id {key_t}, cell_id {key_t}, {lut_cols}"
-    )
-    j = enc.join(F.broadcast(probes), "cell_id")
-    adc = None
-    for jj in range(m):
-        term = F.element_at(f"l{jj}", F.col(f"code_{jj}").cast("int") + 1)
-        adc = term if adc is None else adc + term
-    scored = j.select("query_id", "vec_id", "cell_id", adc.cast("bigint").alias("adc"))
+    q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
+    scored = _ivf_pq_scored(q_, *_probe_rows(q_, "vec_id", 8), 8, 8, 5, 2)
     w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
@@ -1184,48 +1192,24 @@ def mmr_rerank(
     anything already selected (λ = 1/2, so the argmax reduces to
     rel − max_sim — exact integer arithmetic throughout).
 
-    Plan shape: candidate pools come from the broadcast-query scan with
-    the salted two-phase top-k (no task holds a full candidate list);
-    the greedy loop then runs per query in ONE applyInPandas group of
-    `pool` rows — pairwise dots are a pool×pool int64 matmul, driver
-    never sees a vector. Deterministic: ties break on ascending id
-    (np.lexsort, same as the oracle's (score DESC, id) ordering).
+    Plan shape: the candidate pools are the exact dot top-`pool` of the
+    n_queries lowest-key probes, self excluded, from one two-phase scan
+    (_probe_topk) that carries each candidate's vector; the greedy loop
+    then runs per query in ONE applyInPandas group of `pool` rows —
+    pairwise dots are a pool×pool int64 matmul, driver never sees a
+    corpus vector. Deterministic: ties break on ascending id (np.lexsort,
+    same as the oracle's (score DESC, id) ordering).
     """
     import numpy as np
     import pandas as pd
 
     q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
     key_t = q_.schema["vec_id"].dataType.simpleString()
-    qs = (
-        q_.orderBy("vec_id")
-        .limit(n_queries)
-        .select(F.col("vec_id").alias("_qid"), F.col("_q").alias("_pq"))
-    )
-    cand = (
-        q_.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("_qid"))
-        .select(
-            "_qid",
-            "vec_id",
-            "_q",
-            F.expr(
-                "CAST(aggregate(zip_with(_q, _pq, (a, b) -> a * b),"
-                " CAST(0 AS BIGINT), (acc, v) -> acc + v) AS BIGINT)"
-            ).alias("_rel"),
-            F.expr("pmod(hash(vec_id), 64)").alias("_salt"),
-        )
-    )
-    wloc = Window.partitionBy("_qid", "_salt").orderBy(
-        F.col("_rel").desc(), F.col("vec_id")
-    )
-    wglob = Window.partitionBy("_qid").orderBy(F.col("_rel").desc(), F.col("vec_id"))
-    top = (
-        cand.withColumn("_r", F.row_number().over(wloc))
-        .filter(F.col("_r") <= pool)
-        .withColumn("_rn", F.row_number().over(wglob))
-        .filter(F.col("_rn") <= pool)
-        .select("_qid", "vec_id", "_q", "_rel")
-    )
+    qids, Qm = _probe_rows(q_, "vec_id", n_queries)
+    top = _probe_topk(
+        q_, "vec_id", qids, lambda pdf: (Qm @ np.vstack(pdf["_q"].to_numpy()).T,),
+        (("_rel", "_rn", True),), pool, True, ("_q",),
+    ).select("query_id", "vec_id", "_q", "_rel")
 
     kk_rounds = k
 
@@ -1234,7 +1218,7 @@ def mmr_rerank(
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         ids = pdf["vec_id"].to_numpy()
         rel = pdf["_rel"].to_numpy(dtype=np.int64)
-        C = np.vstack(pdf["_q"].to_numpy()).astype(np.int64)
+        C = np.vstack(pdf["_q"].to_numpy())
         P = C @ C.T  # pool×pool int64, exact
         n = len(pdf)
         chosen: list[int] = []
@@ -1247,7 +1231,7 @@ def mmr_rerank(
                 s = rel.copy()
             s_mask = s.copy()
             # min+1, not min: lexsort keys on -s_mask and -int64.min
-            # overflows back to the minimum (the Gs mask lesson above)
+            # overflows back to the minimum
             s_mask[chosen] = np.iinfo(np.int64).min + 1
             j = int(np.lexsort((ids, -s_mask))[0])
             chosen.append(j)
@@ -1256,14 +1240,14 @@ def mmr_rerank(
             scores.append(int(s[j]))
         return pd.DataFrame(
             {
-                "query_id": pdf["_qid"].iloc[0],
+                "query_id": pdf["query_id"].iloc[0],
                 "round": np.array(rounds, dtype=np.int64),
                 "vec_id": out_ids,
                 "mmr_score": np.array(scores, dtype=np.int64),
             }
         )
 
-    return top.groupBy("_qid").applyInPandas(
+    return top.groupBy("query_id").applyInPandas(
         _greedy,
         f"query_id {key_t}, round bigint, vec_id {key_t}, mmr_score bigint",
     )
@@ -1275,87 +1259,37 @@ def dual_retriever_pools(
     pool: int = 10,
 ) -> DataFrame:
     """Dense-dot AND sign-Hamming candidate pools from ONE corpus scan —
-    the hybrid-retrieval feeder (sim_rrf_fusion): the q×dim integer
-    query matrix plus its sign bits ride the task closure; each Arrow
-    batch does one int64 matmul for the dots and one for the Hamming
-    counts (h = |b| + |q| − 2·B@Qᵀ on the sign matrices — exactly
-    bit_count(xor) of packed words), keeps the local top-`pool` per
-    query per metric, and the tiny survivor table (batches·q·2·pool
-    rows) is localCheckpointed so BOTH final rank windows read it
-    without re-scanning the corpus. Signs come from the quantized
-    ints (floor(x·s) ≥ 0 ⟺ x ≥ 0 for s > 0, so they equal the raw
-    float sign test bit-exactly). Returns (query_id, vec_id, ra, rb)
-    full-outer-merged pool ranks with 0 = not in that retriever's pool.
+    the hybrid-retrieval feeder (sim_rrf_fusion): one two-phase scan
+    (_probe_topk) scores both metrics per Arrow batch, one int64 matmul
+    for the dots and one for the Hamming counts (h = |b| + |q| − 2·B@Qᵀ
+    on the sign matrices — exactly bit_count(xor) of packed words), self
+    excluded; a survivor row carries both scores, so the two rank windows
+    read the same survivors and the corpus is scanned once. Signs come
+    from the quantized ints (floor(x·s) ≥ 0 ⟺ x ≥ 0 for s > 0, so they
+    equal the raw float sign test bit-exactly). Returns (query_id,
+    vec_id, ra, rb): each row's rank in the dense and the binary pool,
+    NULL where it is not in that retriever's top-`pool`.
     """
     import numpy as np
 
     q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
-    key_t = q_.schema["vec_id"].dataType.simpleString()
-    qrows = q_.orderBy("vec_id").limit(n_queries).collect()
-    Qm = np.array([r["_q"] for r in qrows], dtype=np.int64)
-    qids = np.array([r["vec_id"] for r in qrows])
+    qids, Qm = _probe_rows(q_, "vec_id", n_queries)
     QB = (Qm >= 0).astype(np.int64)
-    qbsum = QB.sum(axis=1)
 
-    def _scan(batches, Qm=Qm, qids=qids, QB=QB, qbsum=qbsum, pool=pool):
-        import pandas as pd
+    def _dot_hamming(pdf):
+        X = np.vstack(pdf["_q"].to_numpy())
+        B = (X >= 0).astype(np.int64)
+        return Qm @ X.T, QB.sum(axis=1)[:, None] + B.sum(axis=1)[None, :] - 2 * (QB @ B.T)
 
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            X = np.vstack(pdf["_q"].to_numpy())
-            ids = pdf["vec_id"].to_numpy()
-            D = X @ Qm.T  # n × q int64, exact
-            B = (X >= 0).astype(np.int64)
-            H = B.sum(axis=1)[:, None] + qbsum[None, :] - 2 * (B @ QB.T)
-            out = {"query_id": [], "vec_id": [], "metric": [], "score": []}
-            for qi in range(len(qids)):
-                # DROP the query's own row rather than sentinel-masking
-                # it: with <= pool non-self candidates in a batch the
-                # sentinel row would re-enter the emitted pool and
-                # diverge from the oracle's WHERE vec_id != query_id
-                # (ADVICE r7).
-                keep = ids != qids[qi]
-                ids_q = ids[keep]
-                kk = min(pool, len(ids_q))
-                d = D[keep, qi]
-                order = np.lexsort((ids_q, -d))[:kk]
-                out["query_id"].extend([qids[qi]] * kk)
-                out["vec_id"].extend(ids_q[order])
-                out["metric"].extend(["d"] * kk)
-                out["score"].extend(d[order])
-                h = H[keep, qi]
-                order = np.lexsort((ids_q, h))[:kk]
-                out["query_id"].extend([qids[qi]] * kk)
-                out["vec_id"].extend(ids_q[order])
-                out["metric"].extend(["b"] * kk)
-                out["score"].extend(h[order])
-            yield pd.DataFrame(out)
-
-    local = q_.mapInPandas(
-        _scan, f"query_id {key_t}, vec_id {key_t}, metric string, score bigint"
+    top = _probe_topk(
+        q_, "vec_id", qids, _dot_hamming,
+        (("_dot", "ra", True), ("_ham", "rb", False)), pool, True, (),
     )
-    surv = local.localCheckpoint()  # bounded: batches * q * 2 * pool rows
-    wd = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
+    return top.select(
+        "query_id",
+        "vec_id",
+        *(F.when(F.col(r) <= pool, F.col(r).cast("bigint")).alias(r) for r in ("ra", "rb")),
     )
-    wb = Window.partitionBy("query_id").orderBy(
-        F.col("score").asc(), F.col("vec_id").asc()
-    )
-    dense = (
-        surv.filter(F.col("metric") == "d")
-        .withColumn("ra", F.row_number().over(wd).cast("bigint"))
-        .filter(F.col("ra") <= pool)
-        .select("query_id", "vec_id", "ra")
-    )
-    binry = (
-        surv.filter(F.col("metric") == "b")
-        .withColumn("rb", F.row_number().over(wb).cast("bigint"))
-        .filter(F.col("rb") <= pool)
-        .select("query_id", "vec_id", "rb")
-    )
-    return dense.join(binry, ["query_id", "vec_id"], "full_outer")
 
 
 def ivf_pq_nprobe_sweep(
@@ -1367,65 +1301,16 @@ def ivf_pq_nprobe_sweep(
 ) -> DataFrame:
     """Recall-vs-nprobe sweep for the IVF-PQ index — the tuning curve an
     ANN deployment reads before fixing nprobe (the speed/recall dial):
-    ONE corpus encode (cells + PQ codes, the ivf_pq_topk kernel), ONE
-    probe join carrying each probed cell's rank, then every requested
-    nprobe is a filter over that shared scored table (a 3-row broadcast
+    ONE probe collect, ONE IVF-PQ scoring (_ivf_pq_scored, probing the
+    max(nprobes) best cells), then every requested nprobe is a filter on
+    the probed cell's rank over that shared scored table (a broadcast
     spine — never a re-encode, never a rescan per configuration), each
-    ranked top-3 over 4 PQ subspaces and scored against the exact
-    integer-L2 ground truth. Returns (nprobe, query_id, n_exact, n_hits,
+    ranked top-3 and scored against the exact integer-L2 ground truth
+    for the same probe rows. Returns (nprobe, query_id, n_exact, n_hits,
     recall_ppm)."""
-    import numpy as np
-
-    m = 4
-    subC, dsub, q_ = _pq_codebooks(emb, m, k)
-    key_t = q_.schema["vec_id"].dataType.simpleString()
-    crows = q_.orderBy("vec_id").limit(ncells).collect()
-    C2 = np.array([r["_q"] for r in crows], dtype=np.int64)
-    cids = np.array([r["vec_id"] for r in crows])
-    maxp = max(nprobes)
-
-    def _enc(batches, C2=C2, cids=cids, subC=subC, dsub=dsub, m=m):
-        for pdf in batches:
-            Q = np.vstack(pdf["_q"].to_numpy())
-            out = pdf[["vec_id"]].copy()
-            S = Q @ C2.T
-            out["cell_id"] = cids[S.argmax(axis=1)]
-            for j in range(m):
-                Sj = Q[:, j * dsub:(j + 1) * dsub]
-                d2 = ((Sj[:, None, :] - subC[j][None, :, :]) ** 2).sum(axis=2)
-                out[f"code_{j}"] = d2.argmin(axis=1).astype(np.int64)
-            yield out
-
-    code_cols = ", ".join(f"code_{j} bigint" for j in range(m))
-    enc = q_.mapInPandas(_enc, f"vec_id {key_t}, cell_id {key_t}, {code_cols}")
-
-    qrows = q_.orderBy("vec_id").limit(n_queries).collect()
-    Qm = np.array([r["_q"] for r in qrows], dtype=np.int64)
-    qids = [r["vec_id"] for r in qrows]
-    qd = Qm @ C2.T
-    probe_rows = []
-    for qi, qid in enumerate(qids):
-        luts = [
-            ((Qm[qi, j * dsub:(j + 1) * dsub][None, :] - subC[j]) ** 2)
-            .sum(axis=1)
-            .tolist()
-            for j in range(m)
-        ]
-        order = np.lexsort((cids, -qd[qi]))[:maxp]
-        for pr, ci in enumerate(order, start=1):
-            probe_rows.append((qid, cids[ci].item(), pr, *luts))
-    lut_cols = ", ".join(f"l{j} array<bigint>" for j in range(m))
-    probes = emb.sparkSession.createDataFrame(
-        probe_rows, f"query_id {key_t}, cell_id {key_t}, pr bigint, {lut_cols}"
-    )
-    j = enc.join(F.broadcast(probes), "cell_id")
-    adc = None
-    for jj in range(m):
-        term = F.element_at(f"l{jj}", F.col(f"code_{jj}").cast("int") + 1)
-        adc = term if adc is None else adc + term
-    scored = j.select(
-        "query_id", "vec_id", "pr", adc.cast("bigint").alias("adc")
-    )
+    q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
+    ids, P = _probe_rows(q_, "vec_id", max(ncells, k, n_queries))
+    scored = _ivf_pq_scored(q_, ids, P, ncells, k, n_queries, max(nprobes))
     spine = emb.sparkSession.range(1).select(
         F.explode(
             F.expr(
@@ -1444,7 +1329,7 @@ def ivf_pq_nprobe_sweep(
         .filter(F.col("rank") <= 3)
         .select("nprobe", "query_id", F.col("vec_id").alias("a_vec"))
     )
-    ex = exact_l2_topk(emb, n_queries=n_queries).select("query_id", "vec_id")
+    ex = _exact_l2(q_, ids[:n_queries], P[:n_queries], False).select("query_id", "vec_id")
     exn = ex.crossJoin(F.broadcast(spine))
     jj2 = exn.join(
         approx,

@@ -179,6 +179,23 @@ def test_lifecycle_job_budget(spark, tmp_path):
         assert n == reader(spark, path).count() > 0
 
 
+def test_read_half_job_budget(spark, tiny_warehouse):
+    """frequency()/annotate() on the seeded two-sample warehouse: the sample
+    dimension resolves on the driver into id sets and a literal pool, so
+    building either launches no job, and running it launches no job for
+    the dimension or the unconditional pool."""
+    wh, inputs = tiny_warehouse
+    sc = spark.sparkContext
+    for label, build, budget in (
+        ("frequency", wh.frequency, 4),
+        ("annotate", lambda: wh.annotate(inputs.query_vcf, {"ALL": "*", "PUB": "public"}), 5),
+    ):
+        df, n = jobs_of(sc, label, build)
+        assert n == 0, (label, n)
+        _, n = jobs_of(sc, label, lambda: df.write.format("noop").mode("overwrite").save())
+        assert n <= budget, (label, n)
+
+
 def test_crash_mid_swap_keeps_the_dimension(spark, tmp_path, monkeypatch):
     """A process that dies between moving ``samples/`` aside and moving the
     new copy in leaves only ``samples__old``. The next read must roll it

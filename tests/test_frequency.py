@@ -103,6 +103,71 @@ def test_frequency_zygosity_split(spark, fixture_dfs):
     assert r.vc_het == 1 and r.vc_hom == 0
 
 
+# Degenerate dimensions (aim 3): (selection, change to the fixture's
+# samples, expected {(chromosome, position): (VN, VC, VF)}). Every key keeps
+# its row; a NULL pool_size counts 0, as SQL SUM does.
+DEGENERATE = {
+    "no_active_sample": ("*", lambda s: s.withColumn("active", F.lit(False)),
+                         {("1", 160): (0, 0, 0.0), ("1", 400): (0, 0, 0.0), ("1", 999): (0, 0, 0.0)}),
+    "selection_matches_nobody": ("sample:NOPE", lambda s: s,
+                                 {("1", 160): (0, 0, 0.0), ("1", 400): (0, 0, 0.0), ("1", 999): (0, 0, 0.0)}),
+    # no selected sample has a coverage profile: the covered table is empty
+    "no_covered_sample": ("*", lambda s: s.withColumn("coverage_profile", F.lit(False)),
+                          {("1", 160): (13, 4, round(4 / 13, 9)), ("1", 400): (13, 1, round(1 / 13, 9)),
+                           ("1", 999): (13, 0, 0.0)}),
+    "null_pool_unconditional": ("*", lambda s: s.withColumn(
+        "pool_size", F.when(F.col("sample_id") != 3, F.col("pool_size"))),
+        {("1", 160): (11, 4, round(4 / 11, 9)), ("1", 400): (0, 1, 0.0), ("1", 999): (0, 0, 0.0)}),
+    "null_pool_covered": ("*", lambda s: s.withColumn(
+        "pool_size", F.when(F.col("sample_id") != 2, F.col("pool_size"))),
+        {("1", 160): (2, 4, 2.0), ("1", 400): (1, 1, 1.0), ("1", 999): (1, 0, 0.0)}),
+}
+
+
+@pytest.mark.parametrize("case", list(DEGENERATE))
+def test_frequency_degenerate_dimension(spark, fixture_dfs, case):
+    samples, regions, observations, keys = fixture_dfs
+    text, change, want = DEGENERATE[case]
+    out = frequency(keys, observations, regions, change(samples), compile_selection(text))
+    assert _freq_map(out) == want
+
+
+def test_dimension_size_adds_no_py4j_commands(spark, fixture_dfs, monkeypatch):
+    """Each selection's id set reaches the JVM in one command, so building
+    over a 10,000-sample dimension sends no more Py4J commands than over a
+    10-sample one (``Column.isin`` would send one per id). Memory commands
+    are not counted: they free the Java side of Python objects that died,
+    whenever Python's garbage collector happens to run."""
+    from varda_spark.frequency import frequencies
+    from varda_spark.session import local_table
+
+    _, regions, observations, keys = fixture_dfs
+    ddl = "sample_id bigint, name string, pool_size int, coverage_profile boolean, public boolean, active boolean"
+    dims = {
+        n: local_table(spark, [
+            {"sample_id": i, "name": f"s{i}", "pool_size": 1, "coverage_profile": i % 2 == 0,
+             "public": i % 3 == 0, "active": True}
+            for i in range(1, n + 1)
+        ], ddl)
+        for n in (10, 10_000)
+    }
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    counts = []
+    for n in (10, 10_000, 10):  # the first build warms up; compare the others
+        sent.clear()
+        frequencies(keys, observations, regions, dims[n], {"all": F.lit(True), "pub": F.col("public")})
+        counts.append(len(sent))
+    assert counts[1] <= counts[2] + 2, counts
+
+
 def test_trio_mendel_rule_matches_transmission_enumeration(spark):
     """The interval rule (child dosage in [#hom parents, #parents with an
     alt]) must equal the exhaustive transmission model for all 27

@@ -19,8 +19,9 @@ def plan_of(spark, name: str) -> str:
 
 def test_freq_variant_broadcasts_dims(spark):
     plan = plan_of(spark, "freq_variant")
-    assert "BroadcastHashJoin" in plan          # sample dim arrives broadcast
+    assert "BroadcastHashJoin" in plan          # covered pool sizes arrive broadcast
     assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan  # the pool is a literal
 
 
 def test_paginate_seek_is_take_ordered(spark):

@@ -303,11 +303,6 @@ BNLJ_OK = {
                          # 1-row totals x 3-row depth spine roll-up
     "dedup_bloom_prefilter",  # 1-row bloom fill-factor scalar broadcast
                          # onto the 20-row per-source audit table
-    "freq_variant",      # 1-row unconditional-pool scalar
-    "freq_zygosity",     # same 1-row scalar as freq_variant
-    "freq_selected",     # same 1-row scalar as freq_variant
-    "freq_keys",         # same 1-row scalar as freq_variant
-    "freq_annotate",     # one fused plan: one 1-row scalar, a column per query
     "join_range",        # small range dim (demo of non-equi)
     "stream_watermark",  # 1-row max-ts horizon
     "tpch_q15",          # 1-row scalar max

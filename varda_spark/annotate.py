@@ -5,8 +5,8 @@ and one or more named sample-selection queries, emit the same VCF with
 ``{QUERY}_VN`` / ``{QUERY}_VF`` INFO fields per variant. The reference
 runs a correlated per-record subquery loop against PostgreSQL; here the
 whole annotation is ONE Spark plan for all queries (frequency.frequencies):
-every query is a flag on the broadcast sample dimension and a conditional
-sum, so the input's keys and the sample dimension are read once (C5
+every query is an id set resolved on the driver from the sample dimension
+and a conditional sum, so the input's keys and the facts are read once (C5
 completeness — every input variant gets a row, zero-observation variants
 get VN/VF of the covered pool and 0.0).
 """

@@ -65,6 +65,13 @@ def get_spark(app_name: str = "varda_spark", *, shuffle_partitions: int | None =
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # No call-site capture: with it on, every PySpark function call walks
+        # the Python stack, tries to import ipykernel and makes 4-6 more Py4J
+        # round trips. The frame it keeps (depth 1: the innermost one outside
+        # PySpark) is a line of varda_spark for every engine call, never the
+        # caller's code; errors keep their class, message and SQLSTATE. A
+        # static conf, so it belongs here, not in RUNTIME_CONFS.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in RUNTIME_CONFS.items():

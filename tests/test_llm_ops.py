@@ -2,6 +2,8 @@
 
 import functools
 
+import numpy as np
+import pytest
 from pyspark.sql import Row, functions as F
 
 from tests.conftest import jobs_of
@@ -586,3 +588,76 @@ def test_probe_builders_collect_once(spark):
     ):
         _, n = jobs_of(sc, build.__name__, functools.partial(build, e))
         assert n == 1, (build.__name__, n)
+
+
+def _rand_emb(spark, n, dim=4, seed=3):
+    rng = np.random.RandomState(seed)
+    rows = [(i, [float(x) for x in rng.uniform(-1, 1, dim)]) for i in range(n)]
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+
+
+@pytest.mark.parametrize("fit", ["kmeans_fit", "kmeans_assign", "pq_fit"])
+def test_centroid_fit_on_empty_corpus_raises(spark, fit):
+    from varda_spark.operators import similarity
+
+    with pytest.raises(ValueError):
+        getattr(similarity, fit)(_rand_emb(spark, 0))
+
+
+def test_centroid_fit_with_k_above_n_has_n_cells(spark):
+    from varda_spark.operators.similarity import kmeans_assign, kmeans_fit, pq_fit
+
+    e = _rand_emb(spark, 3)
+    assert sorted(r.cell_id for r in kmeans_fit(e, k=8).collect()) == [0, 1, 2]
+    assert sorted({r.cell_id for r in kmeans_assign(e, k=8).collect()}) == [0, 1, 2]
+    assert [c.shape for c in pq_fit(e, m=2, k=8)] == [(3, 2), (3, 2)]
+
+
+def test_ivf_and_semantic_dedup_on_empty_corpus_return_no_rows(spark):
+    from varda_spark.operators.similarity import ivf_topk, semantic_dedup
+
+    e = _rand_emb(spark, 0)
+    assert ivf_topk(e).count() == 0
+    assert semantic_dedup(e).count() == 0
+
+
+def test_caller_model_over_the_row_bound_raises(spark, monkeypatch):
+    """A caller-supplied model is driver state, bounded by
+    _MAX_CENTROID_ROWS (inclusive) in both of its consumers."""
+    from varda_spark.operators import similarity
+
+    e = read_table(spark, SF, "embeddings").limit(50)
+    four, two = similarity.kmeans_fit(e, k=4, iters=1), similarity.kmeans_fit(e, k=2, iters=1)
+    monkeypatch.setattr(similarity, "_MAX_CENTROID_ROWS", 2)
+    for consume in (similarity.kmeans_assign, similarity.ivf_topk):
+        with pytest.raises(ValueError, match="exceeds 2 rows"):
+            consume(e, centroids=four)
+        assert consume(e, centroids=two).count() > 0
+
+
+def test_pq_fit_local_vs_distributed_bit_equal(spark, monkeypatch):
+    from varda_spark.operators import similarity
+
+    emb = _rand_emb(spark, 40, dim=6, seed=7)
+    local = similarity.pq_fit(emb, m=3, k=4, iters=3)
+    monkeypatch.setattr(similarity, "_LOCAL_SOLVER_THRESHOLD", 0)
+    dist = similarity.pq_fit(emb, m=3, k=4, iters=3)
+    assert [c.tolist() for c in local] == [c.tolist() for c in dist]
+    assert [c.shape for c in local] == [(4, 2)] * 3
+
+
+def test_centroid_builders_collect_once(spark):
+    """Building a centroid-model DataFrame (no action) costs one driver
+    collect: the model's init and, on a small corpus, every Lloyd round
+    come from one probe collect and the model never leaves the driver;
+    semantic_dedup adds its √n count (two jobs under AQE)."""
+    from varda_spark.operators import similarity as S
+
+    e = read_table(spark, SF, "embeddings")
+    sc = spark.sparkContext
+    for build, want in (
+        (S.kmeans_assign, 1), (S.kmeans_fit, 1), (S.pq_fit, 1), (S.ivf_topk, 1),
+        (S.kcenter_greedy, 1), (S.semantic_dedup, 3),
+    ):
+        _, n = jobs_of(sc, build.__name__, functools.partial(build, e))
+        assert n == want, (build.__name__, n)

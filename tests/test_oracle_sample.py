@@ -49,6 +49,8 @@ SAMPLE = [
     # scan carrying vectors into a grouped stage
     "sim_pq_adc_topk", "sim_nprobe_sweep", "emb_knn_classify", "sim_rrf_fusion",
     "sim_mmr_rerank",
+    # the centroid models: _lloyd and L2 _assign_cells
+    "sim_kmeans",
     # frequencies: the keys branch with two selections, and hom/het
     "freq_annotate", "freq_zygosity",
 ]

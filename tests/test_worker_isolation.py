@@ -1,0 +1,58 @@
+"""Executor code ships by value: Spark's Python workers never import
+``varda_spark``.
+
+A Python worker imports only what its environment provides. Started from
+the repository root it finds the package in its working directory, so a
+kernel whose executor function is a module-level helper (cloudpickle ships
+those by reference) passes there and fails anywhere else with
+``ModuleNotFoundError: No module named 'varda_spark'``. This test
+materializes one key per executor-code family in a subprocess whose
+working directory is outside the checkout and whose ``PYTHONPATH`` does
+not name it: only the driver puts the package on its ``sys.path``.
+"""
+
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+from tests.conftest import SF_SMALL
+
+ROOT = Path(__file__).resolve().parents[1]
+
+KEYS = [
+    "sim_kmeans",           # similarity: _lloyd, _assign_cells (L2)
+    "emb_semantic_dedup",   # similarity: _assign_cells (dot), cell stats
+    "sim_pq_adc_topk",      # similarity: PQ encoder, _probe_topk score
+    "dedup_minhash",        # dedup: MinHash banding
+    "graph_jaccard",        # graph pair generation
+    "text_compress_ratio",  # text UDF: zlib in a mapInPandas
+]
+
+SCRIPT = """
+import sys
+sys.path.insert(0, {root!r})
+from varda_spark.catalog import REGISTRY
+from varda_spark.session import get_spark
+
+spark = get_spark("worker-isolation", shuffle_partitions=4)
+for key in {keys!r}:
+    REGISTRY[key].fn(spark, {sf!r}).write.format("noop").mode("overwrite").save()
+    print("ran", key, flush=True)
+spark.stop()
+"""
+
+
+def test_keys_run_with_the_package_on_the_driver_only(tmp_path):
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and Path(p).resolve() != ROOT
+    )
+    script = SCRIPT.format(root=str(ROOT), keys=KEYS, sf=SF_SMALL)
+    r = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=900,
+    )
+    ran = [line.split()[1] for line in r.stdout.splitlines() if line.startswith("ran ")]
+    assert r.returncode == 0 and ran == KEYS, (ran, r.stderr[-4000:])

@@ -59,7 +59,7 @@ GLOBAL_ONE_TASK_OK = {
                          # (type-count-bounded — the text_zipf argument);
                          # the per-occurrence explode never enters it
     "sim_pq_distortion",  # row_number over the 8-row codebook init only
-                         # (the sim_kmeans centroid-init argument); the
+                         # (model-sized by construction); the
                          # per-(vec, subspace) argmin window IS partitioned
     "agg_bradley_terry",  # final rank over the m=8-row model strength
                          # table (model-count bounded, documented)
@@ -70,8 +70,6 @@ GLOBAL_ONE_TASK_OK = {
                          # $1000 price-BUCKET grid (~550 rows at any sf
                          # — value-domain bounded by construction)
     "paginate_window",   # offset-compat paging; scale path is paginate_seek
-    "sim_kmeans",        # row_number over the k-row centroid init only
-    "sim_ivf_kmeans",    # same k-row centroid init window
     "agg_abc_class",     # global cumulative rank over the PART dimension
                          # (one row per part after the fact rollup) —
                          # dimension-sized by construction, documented
@@ -282,7 +280,7 @@ BNLJ_OK = {
     "dedup_ccnet_sharding",  # 1-row corpus-total scalar broadcast onto the
                          # 16-row shard table for the load_ppm quotient
     "emb_centroid_confusion",  # L-row (10) centroid table broadcast onto
-                         # the corpus (the sim_ivf coarse-quantizer shape)
+                         # the corpus (a model-sized build side)
     "agg_krippendorff_alpha",  # 1-row marginal-totals and unit-count
                          # scalars broadcast onto the 1-row disagree agg
     "qa_length_drift",   # bounded bucket-grid dim broadcast across the
@@ -297,7 +295,7 @@ BNLJ_OK = {
                          # for the exact ranking pass (the multiprobe
                          # truth-pass argument)
     "sim_pq_distortion",  # 8-row codebook broadcast onto the corpus
-                         # (the sim_ivf coarse-quantizer shape)
+                         # (a model-sized build side)
     "sim_lsh_multiprobe",  # 64-row fixed panel broadcast onto the corpus
                          # for the exact-cosine truth pass, plus the
                          # 1-row totals x 3-row depth spine roll-up
@@ -307,9 +305,6 @@ BNLJ_OK = {
     "stream_watermark",  # 1-row max-ts horizon
     "tpch_q15",          # 1-row scalar max
     "agg_ratio",         # 1-row total
-    "sim_ivf",           # n_centroids-row coarse quantizer (broadcast by design)
-    "sim_kmeans",        # k-row centroid broadcast per Lloyd round (by design)
-    "sim_ivf_kmeans",    # same k-means subplan feeding blocked top-k
     "join_cross",        # bounded dims-only cross join (25x5, documented)
     "tpch_q22",          # 1-row scalar avg-balance subquery
     "text_domain_mix",   # 1-row corpus-total scalar

@@ -27,9 +27,25 @@ Three helpers carry that contract:
 
 A probe that excludes itself drops its own row, so on a corpus smaller
 than k a result has fewer rows, never a padded one. All scores are exact
-int64; ties go to the lowest key; keys keep their input type. What runs
-on executors (score functions, the encoder) is a nested function, which
-ships by value: Python workers never import this package.
+int64; ties go to the lowest key; keys keep their input type.
+
+Centroid models. Every k-row model — seeded IVF cells, k-means centroids,
+PQ codebooks — is an int64 matrix on the driver: seeded cells are a
+``_probe_rows`` prefix, a caller's (cell_id, _ce) table comes through
+``_model_rows`` (bounded by ``_MAX_CENTROID_ROWS``), and a returned model
+is a ``session.local_table``. Two helpers use them:
+
+- ``_assign_cells``: the one nearest-cell kernel, a mapInPandas taking
+  argmax(s·(Q@Cᵀ) − b) per Arrow batch — dot (s = 1, b = 0) or L2 (s = 2,
+  b = |c|², the same order and ties as argmin |x − c|²).
+- ``_lloyd``: the one Lloyd loop, per subspace (PQ) or over the whole
+  vector (k-means, m = 1); rounds run on the driver for a corpus under
+  ``_LOCAL_SOLVER_THRESHOLD``, else as one corpus pass each, through the
+  same numpy ``sums``.
+
+What runs on executors (score functions, the encoder, the assigner, the
+Lloyd partial sums) is a nested function, which ships by value: Python
+workers never import this package.
 """
 
 from __future__ import annotations
@@ -40,12 +56,15 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-# Bound for the driver-side solver fast paths (kmeans_fit, kcenter_greedy):
-# when the quantized corpus limit-collects under this many rows the
-# inherently-sequential solver loop runs as identical integer math on the
-# driver (one job) instead of one-job-per-round scheduling. Module-level so
-# tests can force the distributed path on small data and assert bit-equality
-# of the two paths (tests/test_round14_opt.py).
+from varda_spark.session import local_table
+
+# Bound for the driver-side solver paths (_lloyd for kmeans_fit/pq_fit,
+# kcenter_greedy): each solver's first collect brings at most this many
+# rows + 1 to the driver, and a corpus that fits runs every round there as
+# identical integer math (no further job) instead of one corpus pass per
+# round. Module-level so tests can force the distributed path on small data
+# and assert bit-equality of the two paths (tests/test_round14_opt.py,
+# tests/test_llm_ops.py).
 _LOCAL_SOLVER_THRESHOLD = 65536
 
 
@@ -257,30 +276,23 @@ def ivf_topk(
     """IVF-style ANN: coarse-quantize to the nearest of n_centroids seed
     vectors (argmax integer dot), then exact top-k within each cell.
 
-    The scale path for K3: centroid table is tiny → broadcast, assignment
-    is map-side (no shuffle), and the self-join shuffles on cell id only.
-    Centroids are the n_centroids lowest-key vectors (deterministic; a
-    production system plugs in k-means output — same plan shape).
+    The scale path for K3: the cells are a k-row driver-side model shipped
+    in the assignment's task closure (_assign_cells: map-side, no shuffle,
+    never an n·nlist row set), and the self-join shuffles on cell id only.
+    Centroids are the n_centroids lowest-key vectors (_probe_rows;
+    deterministic — a production system plugs in k-means output, same plan
+    shape).
 
     ``centroids``: a persisted (cell_id, _ce) table from kmeans_fit /
     load_centroids — repeated queries then skip both the seed selection
     and any refit; n_centroids is ignored.
     """
     q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
-    if centroids is not None:
-        cents = centroids.select("cell_id", F.col("_ce").alias("_qc"))
+    if centroids is None:
+        cells = _probe_rows(q_, "vec_id", n_centroids)
     else:
-        cents = (
-            q_.orderBy("vec_id").limit(n_centroids)
-            .select(F.col("vec_id").alias("cell_id"), F.col("_q").alias("_qc"))
-        )
-    # max-dot assignment as one numpy matmul per Arrow batch — O(n·nlist)
-    # multiplies but never O(n·nlist) materialized ROWS (the previous
-    # crossJoin+rank-window shape cost 294 s at sf5 with nlist=316; this
-    # reads 13 s). Ties break to the smallest cell_id: rows are sorted
-    # cell_id-ascending and np.argmax takes the FIRST maximum, identical
-    # to the oracle's (cd DESC, cell_id) ordering.
-    assigned = _assign_to_centroids_dot(q_, cents, "vec_id")
+        cells = _model_rows(centroids)
+    assigned = _assign_cells(q_, "vec_id", *cells, False)
     topk = blocked_topk_pandas(assigned, k, block="cell_id")
     return topk.select(
         "query_id",
@@ -454,51 +466,47 @@ def _blocked_cos_pairs(blocks: DataFrame, threshold_pct: int, *, block: str) -> 
     )
 
 
-# Guard on the quantizer collect in the assigners below: the centroid
-# table is driver state (like any fitted model), but it is also the
-# kmeans_fit/load_centroids entry point, so a user COULD hand it a
-# million-row "centroid" table and silently OOM the driver. √n-sized
-# tables at any realistic corpus stay far under this (√(10^9) ≈ 32k).
+# Bound on a caller-supplied model (kmeans_fit / load_centroids output):
+# the model is driver state like any fitted quantizer, so a million-row
+# "centroid" table handed to ivf_topk or kmeans_assign would silently OOM
+# the driver. √n-sized models at any realistic corpus stay far under this
+# (√(10^9) ≈ 32k).
 _MAX_CENTROID_ROWS = 262144
 
 
-def _collect_centroids(cents: DataFrame, col: str):
-    """Collect the k-row quantizer, bounded and cell_id-sorted."""
-    import numpy as np
-
-    crows = cents.limit(_MAX_CENTROID_ROWS + 1).collect()
-    if len(crows) > _MAX_CENTROID_ROWS:
+def _model_rows(model: DataFrame):
+    """A caller's (cell_id, _ce) model as (cell ids, k × dim int64 matrix),
+    cell_id-ascending: one collect, bounded by _MAX_CENTROID_ROWS."""
+    cids, C = _probe_rows(
+        model.select("cell_id", F.col("_ce").alias("_q")), "cell_id", _MAX_CENTROID_ROWS + 1
+    )
+    if len(C) > _MAX_CENTROID_ROWS:
         raise ValueError(
             f"centroid table exceeds {_MAX_CENTROID_ROWS} rows; a quantizer "
             "this large is no longer driver state — reduce n_centroids "
             "(√n is the intended scale) or use a distributed join"
         )
-    crows.sort(key=lambda r: r["cell_id"])
-    C = np.array([r[col] for r in crows], dtype=np.int64)
-    cid = np.array([r["cell_id"] for r in crows], dtype=np.int64)
-    return C, cid
+    return cids, C
 
 
-def _assign_to_centroids_dot(q_: DataFrame, cents: DataFrame, key: str) -> DataFrame:
-    """Map-side argMAX-dot assignment of quantized vectors to a
-    (cell_id, _qc) centroid table -> (key, cell_id, _q).
-
-    Same closure-shipped k-row quantizer pattern as the L2 assigner
-    below, but ranking by inner product (the sim_ivf family's metric).
-    Exact & deterministic: integer dots, np.argmax takes the FIRST
-    maximum over cell_id-ascending rows. The key column keeps its input
-    type (string doc ids work, not just bigint vec ids); the collect is
-    bounded by _MAX_CENTROID_ROWS."""
+def _assign_cells(q_: DataFrame, key: str, cids, C, l2: bool) -> DataFrame:
+    """Map-side nearest-cell assignment of a quantized (key, _q) frame to
+    the k-row model (cell ids ``cids``, matrix ``C``) → (key, cell_id, _q):
+    one mapInPandas, the model in the task closure, one int64 matmul per
+    Arrow batch. The cell is argmax(s·(Q@Cᵀ) − b): the largest dot (s = 1,
+    b = 0) or, with ``l2``, s = 2 and b = |c|², which orders cells as the
+    smallest |x − c|² does. Exact; the first maximum over the model's
+    ascending rows → the lowest cell on ties, the oracles' order. The key
+    keeps its input type (string doc ids work)."""
     import numpy as np
 
-    C, cid = _collect_centroids(cents, "_qc")
+    s, b = (2, (C * C).sum(axis=1)) if l2 else (1, 0)
 
-    def _assign(batches, C=C, cid=cid):
+    def _assign(batches):
         for pdf in batches:
             Q = np.vstack(pdf["_q"].to_numpy())
-            S = Q @ C.T  # int64, exact
             out = pdf[[key]].copy()
-            out["cell_id"] = cid[S.argmax(axis=1)]
+            out["cell_id"] = cids[(s * (Q @ C.T) - b).argmax(axis=1)]
             out["_q"] = pdf["_q"]
             yield out
 
@@ -506,34 +514,57 @@ def _assign_to_centroids_dot(q_: DataFrame, cents: DataFrame, key: str) -> DataF
     return q_.mapInPandas(_assign, f"{key} {key_t}, cell_id bigint, _q array<bigint>")
 
 
-def _assign_to_centroids(q_: DataFrame, cents: DataFrame, key: str) -> DataFrame:
-    """Map-side argmin-L2 assignment of quantized vectors to a (cell_id,
-    _ce) centroid table → (key, cell_id, _q).
+def _lloyd(q_: DataFrame, m: int, k: int, iters: int):
+    """Lloyd's k-means in each of m subspaces of a quantized (vec_id, _q)
+    frame → m × k × dsub int64 codebooks; k-means is m = 1. Init = the k
+    lowest-key vectors' subvectors (cell/code id = key order); each round
+    gives every subvector its nearest codeword (largest 2x·c − |c|², i.e.
+    smallest |x − c|², ties → lowest id) and moves each codeword to the
+    per-dimension floor-mean of its subvectors; a codeword no subvector
+    chose keeps its value. A fixed round count keeps the plan static and
+    the oracle replicable.
 
-    The k-row quantizer is collected (k·dim ints — the same driver state
-    any fitted model holds) and closure-shipped; assignment is then one
-    numpy matmul per Arrow batch on the executors. Facts never leave
-    executors; an 8×64 int table rides the task binary. Exact &
-    deterministic: integer scores |c|²−2x·c, np.argmin takes the FIRST
-    minimum and rows are cell_id-ascending → lowest-cell tie-break,
-    identical to the oracle's (score, cell_id) ordering. Key column
-    keeps its input type; collect bounded by _MAX_CENTROID_ROWS."""
+    The init collect (_probe_rows) brings up to _LOCAL_SOLVER_THRESHOLD + 1
+    rows to the driver: a corpus that fits runs every round there; a
+    larger one runs each round as one corpus pass whose partitions reduce
+    to per-codeword sums and counts, merged on the driver (m·k·dsub ints a
+    partition, never a vector). Both paths call the same ``sums``, so they
+    are bit-equal."""
     import numpy as np
 
-    C, cid = _collect_centroids(cents, "_ce")
-    c2 = (C * C).sum(axis=1)
+    _, X = _probe_rows(q_, "vec_id", max(k, _LOCAL_SOLVER_THRESHOLD + 1))
+    cb = _pq_split(X[:k], m)
+    local = len(X) <= _LOCAL_SOLVER_THRESHOLD
 
-    def _assign(batches, C=C, cid=cid, c2=c2):
-        for pdf in batches:
-            Q = np.vstack(pdf["_q"].to_numpy())
-            S = c2[None, :] - 2 * (Q @ C.T)  # int64, exact
-            out = pdf[[key]].copy()
-            out["cell_id"] = cid[S.argmin(axis=1)]
-            out["_q"] = pdf["_q"]
-            yield out
+    def sums(X, cb):
+        sub = X.reshape(len(X), m, -1)
+        S, N = np.zeros_like(cb), np.zeros(cb.shape[:2], np.int64)
+        for j in range(m):
+            a = (2 * (sub[:, j] @ cb[j].T) - (cb[j] * cb[j]).sum(axis=1)).argmax(axis=1)
+            np.add.at(S[j], a, sub[:, j])
+            N[j] = np.bincount(a, minlength=len(cb[j]))
+        return S, N
 
-    key_t = q_.schema[key].dataType.simpleString()
-    return q_.mapInPandas(_assign, f"{key} {key_t}, cell_id bigint, _q array<bigint>")
+    for _ in range(iters):
+        if local:
+            S, N = sums(X, cb)
+        else:
+
+            def _partial(batches, cb=cb):
+                import pandas as pd
+
+                S, N = np.zeros_like(cb), np.zeros(cb.shape[:2], np.int64)
+                for pdf in batches:
+                    if len(pdf):
+                        s, n = sums(np.vstack(pdf["_q"].to_numpy()), cb)
+                        S, N = S + s, N + n
+                yield pd.DataFrame({"s": [S.ravel().tolist()], "n": [N.ravel().tolist()]})
+
+            parts = q_.mapInPandas(_partial, "s array<bigint>, n array<bigint>").collect()
+            S = np.sum([r["s"] for r in parts], axis=0).reshape(cb.shape)
+            N = np.sum([r["n"] for r in parts], axis=0).reshape(cb.shape[:2])
+        cb = np.where(N[..., None] > 0, S // np.maximum(N, 1)[..., None], cb)
+    return cb
 
 
 def kmeans_fit(
@@ -542,88 +573,24 @@ def kmeans_fit(
     iters: int = 3,
 ) -> DataFrame:
     """Fit deterministic Lloyd's k-means; returns the FITTED MODEL as a
-    k-row DataFrame (cell_id bigint, _ce array<bigint>) — persistable via
-    save_centroids/load_centroids so repeated ANN queries skip the fit
-    (the warehouse's continuous-rollup story applied to model state).
+    k-row driver-local table (cell_id bigint, _ce array<bigint>) —
+    persistable via save_centroids/load_centroids so repeated ANN queries
+    skip the fit (the warehouse's continuous-rollup story applied to model
+    state).
 
-    Engine-portable by construction: init = the k lowest-key vectors
-    (cell_id 0..k-1 in key order); assignment = argmin integer L2 score
-    |c|² − 2x·c (ties → lowest cell); update = per-dimension
-    floor(sum/count) keeping centroids integer. Every round is one
-    broadcast of k centroids (map-side assignment, no shuffle) plus one
-    (cell, dim)-grouped aggregate — at 100 TB the assignment scan
-    dominates and parallelizes perfectly; k·64 centroid cells are
-    driver-trivial. Fixed iteration count (no convergence action) keeps
-    the plan static and the oracle replicable.
-    """
+    Engine-portable by construction (_lloyd with one subspace): init = the
+    k lowest-key vectors (cell_id 0..k-1 in key order); assignment = the
+    nearest centroid by integer L2 (ties → lowest cell); update =
+    per-dimension floor(sum/count) keeping centroids integer; an empty
+    cell keeps its centroid. The k·dim model stays on the driver between
+    rounds; each round is at most one corpus pass."""
     q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
-    # Small-corpus fast path (the union-find / kcenter discipline):
-    # Lloyd's loop is iters sequential rounds of centroid-collect +
-    # assignment scan + (cell,dim) shuffle + checkpoint — ~6 jobs/round
-    # of almost pure scheduling at bench scale. When the quantized corpus
-    # is bounded (limit-collect, ≤ threshold+1 rows ever on the driver)
-    # the IDENTICAL integer math runs in numpy in one job: same k-lowest-
-    # key init, same |c|²−2x·c argmin with first-minimum (lowest-cell)
-    # ties, same floor(int-sum / count) double-division update, same
-    # empty-cell carry-forward. Above the threshold the distributed loop
-    # below runs unchanged (r14: sim_kmeans 18 jobs → 3, 1.7 → 0.8 s).
-    import numpy as np
-
-    rows = q_.limit(_LOCAL_SOLVER_THRESHOLD + 1).collect()
-    if len(rows) <= _LOCAL_SOLVER_THRESHOLD and rows:
-        ids = np.array([r["vec_id"] for r in rows])
-        X = np.array([r["_q"] for r in rows], dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        X = X[order]
-        C = X[:k].copy()
-        for _ in range(iters):
-            S = (C * C).sum(axis=1)[None, :] - 2 * (X @ C.T)
-            a = S.argmin(axis=1)  # first minimum → lowest cell id
-            for c in range(len(C)):
-                m = a == c
-                if m.any():
-                    C[c] = np.floor(
-                        X[m].sum(axis=0).astype(np.float64) / int(m.sum())
-                    ).astype(np.int64)
-        return emb.sparkSession.createDataFrame(
-            [(c, [int(v) for v in C[c]]) for c in range(len(C))],
-            "cell_id bigint, _ce array<bigint>",
-        )
-    # partition the k-row init window by pmod(key,1)≡0: same single task
-    # over k rows, but the non-foldable constant survives Catalyst (a bare
-    # literal is folded out of the partitionSpec) so WindowExec stops
-    # spamming "No Partition Defined" across every log tail
-    w0 = Window.partitionBy(F.pmod(F.col("vec_id"), F.lit(1))).orderBy("vec_id")
-    cents = (
-        q_.orderBy("vec_id").limit(k)
-        .select((F.row_number().over(w0) - 1).alias("cell_id"), F.col("_q").alias("_ce"))
+    C = _lloyd(q_, 1, k, iters)[0]
+    return local_table(
+        emb.sparkSession,
+        [{"cell_id": c, "_ce": row.tolist()} for c, row in enumerate(C)],
+        "cell_id bigint, _ce array<bigint>",
     )
-    for _ in range(iters):
-        assigned = _assign_to_centroids(q_, cents, "vec_id")
-        # centroid update stays the exploded (cell, dim) aggregate ON
-        # PURPOSE: partial aggregation combines map-side down to k·dim rows
-        # before the wire, and no task ever holds a whole cell — a per-cell
-        # pandas mean would ship n/k vectors to one task (straggler/OOM at
-        # scale) and measured no faster
-        upd = (
-            assigned.select("cell_id", F.posexplode("_q").alias("dim", "v"))
-            .groupBy("cell_id", "dim")
-            .agg(F.floor(F.sum("v").cast("double") / F.count(F.lit(1))).cast("bigint").alias("cv"))
-            .groupBy("cell_id")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(dim, cv))), x -> x.cv)"
-                ).alias("_nce")
-            )
-        )
-        cents = (
-            cents.join(upd, "cell_id", "left")
-            .select("cell_id", F.coalesce(F.col("_nce"), F.col("_ce")).alias("_ce"))
-            # k tiny rows, but WITHOUT this each round's plan replays every
-            # previous round (lineage grows multiplicatively)
-            .localCheckpoint()
-        )
-    return cents
 
 
 def save_centroids(cents: DataFrame, path: str) -> None:
@@ -645,16 +612,23 @@ def kmeans_assign(
 ) -> DataFrame:
     """Assign every vector to its k-means cell → (vec_id, cell_id): the
     real coarse quantizer for IVF ANN (ivf_topk's seeded centroids upgrade
-    to this output).
+    to this output). The fitted model goes straight from _lloyd into the
+    nearest-cell pass (_assign_cells, L2).
 
     ``centroids``: a previously fitted (cell_id, _ce) table (from
     kmeans_fit / load_centroids) — assignment then skips the fit entirely
     and is a single map-side pass; k/iters are ignored. Bit-equal to the
-    refit path for the same model by construction (same closure-shipped
-    argmin math — proven in tests/test_llm_ops.py)."""
+    refit path for the same model by construction (same assignment
+    kernel — proven in tests/test_llm_ops.py)."""
+    import numpy as np
+
     q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
-    cents = centroids if centroids is not None else kmeans_fit(emb, k, iters)
-    assigned = _assign_to_centroids(q_, cents, "vec_id")
+    if centroids is not None:
+        cells = _model_rows(centroids)
+    else:
+        C = _lloyd(q_, 1, k, iters)[0]
+        cells = (np.arange(len(C)), C)
+    assigned = _assign_cells(q_, "vec_id", *cells, True)
     return assigned.select("vec_id", F.col("cell_id").cast("bigint").alias("cell_id"))
 
 
@@ -686,13 +660,13 @@ def _probe_rows(q_: DataFrame, key: str, n: int):
 
 
 def _pq_split(C, m: int):
-    """Deterministic PQ codebooks from k codeword rows (the sim_ivf
+    """Deterministic codebooks from k codeword rows (the sim_ivf
     quantizer-init discipline, no RNG): an m × k × dsub int64 array, code
-    id 0..k-1 in row order."""
+    id 0..k-1 in row order; m = 1 is a k-means model."""
     import numpy as np
 
     if C.ndim != 2:
-        raise ValueError("PQ codebooks need at least one vector")
+        raise ValueError("a codebook needs at least one vector")
     if C.shape[1] % m:
         raise ValueError(f"dim {C.shape[1]} not divisible by m={m} subspaces")
     return np.stack(np.split(C, m, axis=1))
@@ -819,57 +793,23 @@ def pq_fit(
     iters: int = 2,
 ):
     """Lloyd-refine the PQ codebooks per subspace (the k-means step of
-    Jégou et al. 2011 §II): init = the k lowest-key subvectors
-    (_probe_rows, _pq_split), then each iteration (a) assigns every
-    subvector to its argmin integer-L2 codeword (_pq_quantizer) and (b)
-    recomputes each codeword as the per-dimension floor-mean of its
-    assigned subvectors (empty codewords keep their previous value).
-    Returns the refined codebooks as a list of m (k × dsub) int64 arrays,
-    passable to pq_codes via ``codebooks=``.
+    Jégou et al. 2011 §II; _lloyd with m subspaces): init = the k
+    lowest-key subvectors, then each iteration (a) assigns every
+    subvector to its nearest integer-L2 codeword and (b) recomputes each
+    codeword as the per-dimension floor-mean of its assigned subvectors
+    (empty codewords keep their previous value). Returns the refined
+    codebooks as a list of m (k × dsub) int64 arrays, passable to
+    pq_codes via ``codebooks=``.
 
-    Scale shape: each iteration is ONE corpus pass; the mapInPandas
-    kernel reduces every Arrow batch down to per-(subspace, code, dim)
-    partial sums+counts BEFORE the wire (≤ m·k·dsub rows per batch —
-    index metadata, not data), so the shuffle is batches·m·k·dsub tiny
-    rows and the final groupBy collect is m·k·dsub rows of driver-side
-    model state, same as any fitted quantizer. Exact integer math; the
-    catalog keys keep the un-refined deterministic init so their DuckDB
-    twins stay replicable — pq_fit is the quality lever a production
-    index build runs first."""
-    import numpy as np
-
+    Scale shape: a corpus over _LOCAL_SOLVER_THRESHOLD rows runs each
+    iteration as ONE corpus pass whose partitions reduce to per-(subspace,
+    code) sums and counts before the wire — m·k·dsub ints of model state
+    per partition, merged on the driver. Exact integer math; the catalog
+    keys keep the un-refined deterministic init so their DuckDB twins
+    stay replicable — pq_fit is the quality lever a production index
+    build runs first."""
     q_ = emb.select("vec_id", quantized("embedding", 1000).alias("_q"))
-    cb = _pq_split(_probe_rows(q_, "vec_id", k)[1], m)
-    for _ in range(iters):
-        _, encode = _pq_quantizer(cb)
-
-        def _stats(batches, encode=encode):
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                Q = np.vstack(pdf["_q"].to_numpy())
-                codes, _ = encode(Q)
-                sub = Q.reshape(len(Q), m, -1)
-                rows = []
-                for j in range(m):
-                    for c in np.unique(codes[:, j]):
-                        mask = codes[:, j] == c
-                        n = mask.sum()
-                        rows += [(j, c, d, s, n) for d, s in enumerate(sub[mask, j].sum(axis=0))]
-                yield pd.DataFrame(rows, columns=["j", "c", "d", "s", "n"])
-
-        stats = (
-            q_.mapInPandas(_stats, "j int, c int, d int, s bigint, n bigint")
-            .groupBy("j", "c", "d")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()  # ≤ m·k·dsub rows — fitted-model state
-        )
-        cb = cb.copy()
-        for r in stats:
-            cb[r["j"], r["c"], r["d"]] = r["s"] // r["n"]
-    return list(cb)
+    return list(_lloyd(q_, m, k, iters))
 
 
 def pq_codes(emb: DataFrame, key: str = "vec_id", codebooks=None) -> DataFrame:
@@ -952,11 +892,7 @@ def semantic_dedup(emb: DataFrame) -> DataFrame:
 
     q_ = emb.select("vec_id", quantized("embedding", 100).alias("_q"))
     n_centroids = max(8, math.isqrt(q_.count()))
-    cents = (
-        q_.orderBy("vec_id").limit(n_centroids)
-        .select(F.col("vec_id").alias("cell_id"), F.col("_q").alias("_qc"))
-    )
-    assigned = _assign_to_centroids_dot(q_, cents, "vec_id")
+    assigned = _assign_cells(q_, "vec_id", *_probe_rows(q_, "vec_id", n_centroids), False)
     thr2 = 95 * 95
 
     def _cell_stats(pdf):
@@ -1052,8 +988,6 @@ def _ivf_pq_scored(q_: DataFrame, ids, P, ncells: int, k: int, n_queries: int, n
     Returns (query_id, vec_id, cell_id, pr, adc)."""
     import numpy as np
 
-    from varda_spark.session import local_table
-
     cb = _pq_split(P[:k], 4)
     cids, C = ids[:ncells], P[:ncells]
     enc = _pq_code_frame(q_, "vec_id", cb, (cids, C))
@@ -1116,9 +1050,9 @@ def kcenter_greedy(emb: DataFrame, k: int = 8, vec: str = "embedding") -> DataFr
     sim_kmeans discipline). The quantized corpus is localCheckpoint-ed
     once so the k-1 scans skip re-reading parquet and re-quantizing.
 
-    Returns k rows (step, vec_id, dist2): the selection order and the
-    selected point's exact min-L2-squared coverage radius at selection
-    time (step 1 is the seed, dist2 0).
+    Returns k rows (step, vec_id, dist2) as a driver-local table: the
+    selection order and the selected point's exact min-L2-squared
+    coverage radius at selection time (step 1 is the seed, dist2 0).
     """
     import numpy as np
 
@@ -1127,56 +1061,47 @@ def kcenter_greedy(emb: DataFrame, k: int = 8, vec: str = "embedding") -> DataFr
     # Small-corpus fast path (the union-find discipline from
     # operators/dedup.py): the greedy loop is inherently sequential —
     # k-1 round-trips of one job each — so when the quantized corpus is
-    # bounded (limit-collect, never more than threshold+1 rows on the
+    # bounded (the seed collect brings at most threshold+1 rows to the
     # driver, ~35 MB at 64 dims) the identical integer greedy runs in
-    # numpy in ONE job. Exact same argmax/tie rules, so the output is
-    # bit-identical; above the threshold the distributed scan loop below
-    # runs unchanged (r14 profile: 11 jobs / 1.9-2.1 s → 2 jobs at sf0.1).
-    rows = q_.limit(_LOCAL_SOLVER_THRESHOLD + 1).collect()
-    # `and rows` mirrors kmeans_fit's empty-input guard (ADVICE r14):
-    # both solvers fall through to the distributed path on empty input
-    # instead of the fast path raising IndexError at ids[0].
-    if len(rows) <= _LOCAL_SOLVER_THRESHOLD and rows:
-        ids = np.array([r["vec_id"] for r in rows])
-        X = np.array([r["_q"] for r in rows], dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        ids, X = ids[order], X[order]
-        picks = [(1, ids[0].item(), 0)]
+    # numpy. Exact same argmax/tie rules, so the output is bit-identical;
+    # above the threshold the distributed scan loop below runs. An empty
+    # corpus has no seed: IndexError at ids[0].
+    ids, X = _probe_rows(q_, "vec_id", _LOCAL_SOLVER_THRESHOLD + 1)
+    picks = [(1, ids[0].item(), 0)]
+    if len(X) <= _LOCAL_SOLVER_THRESHOLD:
         mind2 = ((X - X[0]) ** 2).sum(axis=1)
         for step in range(2, k + 1):
             j = int(np.lexsort((ids, -mind2))[0])
             picks.append((step, ids[j].item(), int(mind2[j])))
             mind2 = np.minimum(mind2, ((X - X[j]) ** 2).sum(axis=1))
-        return emb.sparkSession.createDataFrame(
-            picks, f"step bigint, vec_id {key_t}, dist2 bigint"
-        )
-    q_ = q_.localCheckpoint()
-    seed = q_.orderBy("vec_id").limit(1).collect()[0]
-    centers = np.array([seed["_q"]], dtype=np.int64)
-    picks = [(1, seed["vec_id"], 0)]
-    for step in range(2, k + 1):
+    else:
+        q_ = q_.localCheckpoint()
+        centers = X[:1]
+        for step in range(2, k + 1):
 
-        def _scan(batches, C=centers):
-            import pandas as pd
+            def _scan(batches, C=centers):
+                import pandas as pd
 
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.vstack(pdf["_q"].to_numpy()).astype(np.int64)
-                ids = pdf["vec_id"].to_numpy()
-                # exact int64: |x-c|^2 <= dim * (2*10000)^2 ~ 2.6e10
-                d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).min(axis=1)
-                j = int(np.lexsort((ids, -d2))[0])
-                yield pd.DataFrame(
-                    {"vec_id": [ids[j]], "_d2": [int(d2[j])], "_q": [list(X[j])]}
-                )
+                for pdf in batches:
+                    if not len(pdf):
+                        continue
+                    X = np.vstack(pdf["_q"].to_numpy()).astype(np.int64)
+                    ids = pdf["vec_id"].to_numpy()
+                    # exact int64: |x-c|^2 <= dim * (2*10000)^2 ~ 2.6e10
+                    d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).min(axis=1)
+                    j = int(np.lexsort((ids, -d2))[0])
+                    yield pd.DataFrame(
+                        {"vec_id": [ids[j]], "_d2": [int(d2[j])], "_q": [list(X[j])]}
+                    )
 
-        cand = q_.mapInPandas(_scan, f"vec_id {key_t}, _d2 bigint, _q array<bigint>")
-        best = cand.orderBy(F.col("_d2").desc(), F.col("vec_id").asc()).limit(1).collect()[0]
-        centers = np.vstack([centers, np.array(best["_q"], dtype=np.int64)])
-        picks.append((step, best["vec_id"], int(best["_d2"])))
-    return emb.sparkSession.createDataFrame(
-        picks, f"step bigint, vec_id {key_t}, dist2 bigint"
+            cand = q_.mapInPandas(_scan, f"vec_id {key_t}, _d2 bigint, _q array<bigint>")
+            best = cand.orderBy(F.col("_d2").desc(), F.col("vec_id").asc()).limit(1).collect()[0]
+            centers = np.vstack([centers, np.array(best["_q"], dtype=np.int64)])
+            picks.append((step, best["vec_id"], int(best["_d2"])))
+    return local_table(
+        emb.sparkSession,
+        [dict(zip(("step", "vec_id", "dist2"), p)) for p in picks],
+        f"step bigint, vec_id {key_t}, dist2 bigint",
     )
 
 

@@ -646,6 +646,30 @@ def test_pq_fit_local_vs_distributed_bit_equal(spark, monkeypatch):
     assert [c.shape for c in local] == [(4, 2)] * 3
 
 
+def test_solvers_above_threshold_probe_only_model_rows(spark, monkeypatch):
+    """Above _LOCAL_SOLVER_THRESHOLD a solver's ordered collect asks for
+    its model's k init rows (kcenter: one seed), never the threshold:
+    _probe_rows is a TakeOrdered, which sends up to n rows from every
+    partition to the driver. The corpus-size test is an unordered limit,
+    and the distributed result still equals the driver one."""
+    from varda_spark.operators import similarity
+
+    emb = _rand_emb(spark, 40, dim=6, seed=7).repartition(4)
+    fits = (
+        lambda: similarity.kmeans_fit(emb, k=3, iters=2).collect(),
+        lambda: [c.tolist() for c in similarity.pq_fit(emb, m=3, k=4, iters=2)],
+        lambda: similarity.kcenter_greedy(emb, k=3).collect(),
+    )
+    local = [f() for f in fits]
+    probed, probe = [], similarity._probe_rows
+    monkeypatch.setattr(
+        similarity, "_probe_rows", lambda q_, key, n: probed.append(n) or probe(q_, key, n)
+    )
+    monkeypatch.setattr(similarity, "_LOCAL_SOLVER_THRESHOLD", 10)
+    assert [f() for f in fits] == local
+    assert probed == [3, 4, 1]
+
+
 def test_centroid_builders_collect_once(spark):
     """Building a centroid-model DataFrame (no action) costs one driver
     collect: the model's init and, on a small corpus, every Lloyd round

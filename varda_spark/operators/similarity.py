@@ -33,15 +33,18 @@ Centroid models. Every k-row model — seeded IVF cells, k-means centroids,
 PQ codebooks — is an int64 matrix on the driver: seeded cells are a
 ``_probe_rows`` prefix, a caller's (cell_id, _ce) table comes through
 ``_model_rows`` (bounded by ``_MAX_CENTROID_ROWS``), and a returned model
-is a ``session.local_table``. Two helpers use them:
+is a ``session.local_table``. Three helpers use them:
 
-- ``_assign_cells``: the one nearest-cell kernel, a mapInPandas taking
-  argmax(s·(Q@Cᵀ) − b) per Arrow batch — dot (s = 1, b = 0) or L2 (s = 2,
-  b = |c|², the same order and ties as argmin |x − c|²).
+- ``_nearest_row``: the one nearest-row rule, argmax(s·(X@Cᵀ) − b) —
+  dot (s = 1, b = 0) or L2 (s = 2, b = |c|², the same order and ties as
+  argmin |x − c|²) — shared by the two below and the IVF-PQ cell column.
+- ``_assign_cells``: the one nearest-cell kernel, a mapInPandas applying
+  that rule per Arrow batch.
 - ``_lloyd``: the one Lloyd loop, per subspace (PQ) or over the whole
-  vector (k-means, m = 1); rounds run on the driver for a corpus under
-  ``_LOCAL_SOLVER_THRESHOLD``, else as one corpus pass each, through the
-  same numpy ``sums``.
+  vector (k-means, m = 1); rounds run on the driver for a corpus of at
+  most ``_LOCAL_SOLVER_THRESHOLD`` rows (``_solver_rows``, an unordered
+  bounded collect), else as one corpus pass each, through the same numpy
+  ``sums``.
 
 What runs on executors (score functions, the encoder, the assigner, the
 Lloyd partial sums) is a nested function, which ships by value: Python
@@ -59,12 +62,13 @@ from pyspark.sql.window import Window
 from varda_spark.session import local_table
 
 # Bound for the driver-side solver paths (_lloyd for kmeans_fit/pq_fit,
-# kcenter_greedy): each solver's first collect brings at most this many
-# rows + 1 to the driver, and a corpus that fits runs every round there as
-# identical integer math (no further job) instead of one corpus pass per
-# round. Module-level so tests can force the distributed path on small data
-# and assert bit-equality of the two paths (tests/test_round14_opt.py,
-# tests/test_llm_ops.py).
+# kcenter_greedy): each solver's first collect (_solver_rows, unordered)
+# brings at most this many rows + 1 to the driver, and a corpus that fits
+# runs every round there as identical integer math (no further job)
+# instead of one corpus pass per round; a larger corpus then probes only
+# its k init rows (or kcenter's one seed). Module-level so tests can
+# force the distributed path on small data and assert bit-equality of the
+# two paths (tests/test_round14_opt.py, tests/test_llm_ops.py).
 _LOCAL_SOLVER_THRESHOLD = 65536
 
 
@@ -489,24 +493,36 @@ def _model_rows(model: DataFrame):
     return cids, C
 
 
+def _nearest_row():
+    """The one nearest-row rule, as a closure that ships to executors by
+    value: ``nearest(X, C, l2)`` → for each row of X the index of its
+    nearest row of C, argmax(s·(X@Cᵀ) − b) — the largest dot (s = 1,
+    b = 0) or, with ``l2``, s = 2 and b = |c|², which orders rows as the
+    smallest |x − c|² does. Exact int64; the first maximum → the lowest
+    index on ties, the oracles' order."""
+    import numpy as np
+
+    def nearest(X, C, l2):
+        s, b = (2, (C * C).sum(axis=1)) if l2 else (1, 0)
+        return np.argmax(s * (X @ C.T) - b, axis=1)
+
+    return nearest
+
+
 def _assign_cells(q_: DataFrame, key: str, cids, C, l2: bool) -> DataFrame:
     """Map-side nearest-cell assignment of a quantized (key, _q) frame to
     the k-row model (cell ids ``cids``, matrix ``C``) → (key, cell_id, _q):
     one mapInPandas, the model in the task closure, one int64 matmul per
-    Arrow batch. The cell is argmax(s·(Q@Cᵀ) − b): the largest dot (s = 1,
-    b = 0) or, with ``l2``, s = 2 and b = |c|², which orders cells as the
-    smallest |x − c|² does. Exact; the first maximum over the model's
-    ascending rows → the lowest cell on ties, the oracles' order. The key
-    keeps its input type (string doc ids work)."""
+    Arrow batch (``_nearest_row``, dot or ``l2``). The key keeps its input
+    type (string doc ids work)."""
     import numpy as np
 
-    s, b = (2, (C * C).sum(axis=1)) if l2 else (1, 0)
+    nearest = _nearest_row()
 
     def _assign(batches):
         for pdf in batches:
-            Q = np.vstack(pdf["_q"].to_numpy())
             out = pdf[[key]].copy()
-            out["cell_id"] = cids[(s * (Q @ C.T) - b).argmax(axis=1)]
+            out["cell_id"] = cids[nearest(np.vstack(pdf["_q"].to_numpy()), C, l2)]
             out["_q"] = pdf["_q"]
             yield out
 
@@ -518,35 +534,35 @@ def _lloyd(q_: DataFrame, m: int, k: int, iters: int):
     """Lloyd's k-means in each of m subspaces of a quantized (vec_id, _q)
     frame → m × k × dsub int64 codebooks; k-means is m = 1. Init = the k
     lowest-key vectors' subvectors (cell/code id = key order); each round
-    gives every subvector its nearest codeword (largest 2x·c − |c|², i.e.
-    smallest |x − c|², ties → lowest id) and moves each codeword to the
-    per-dimension floor-mean of its subvectors; a codeword no subvector
-    chose keeps its value. A fixed round count keeps the plan static and
-    the oracle replicable.
+    gives every subvector its nearest codeword (``_nearest_row``, L2; ties
+    → lowest id) and moves each codeword to the per-dimension floor-mean
+    of its subvectors; a codeword no subvector chose keeps its value. A
+    fixed round count keeps the plan static and the oracle replicable.
 
-    The init collect (_probe_rows) brings up to _LOCAL_SOLVER_THRESHOLD + 1
-    rows to the driver: a corpus that fits runs every round there; a
-    larger one runs each round as one corpus pass whose partitions reduce
-    to per-codeword sums and counts, merged on the driver (m·k·dsub ints a
-    partition, never a vector). Both paths call the same ``sums``, so they
-    are bit-equal."""
+    A corpus of at most _LOCAL_SOLVER_THRESHOLD rows (``_solver_rows``)
+    runs every round on the driver; a larger one takes its init from a
+    k-row probe collect and runs each round as one corpus pass whose
+    partitions reduce to per-codeword sums and counts, merged on the
+    driver (m·k·dsub ints a partition, never a vector). Both paths call
+    the same ``sums``, so they are bit-equal."""
     import numpy as np
 
-    _, X = _probe_rows(q_, "vec_id", max(k, _LOCAL_SOLVER_THRESHOLD + 1))
+    corpus = _solver_rows(q_, "vec_id")
+    X = corpus[1] if corpus is not None else _probe_rows(q_, "vec_id", k)[1]
     cb = _pq_split(X[:k], m)
-    local = len(X) <= _LOCAL_SOLVER_THRESHOLD
+    nearest = _nearest_row()
 
     def sums(X, cb):
         sub = X.reshape(len(X), m, -1)
         S, N = np.zeros_like(cb), np.zeros(cb.shape[:2], np.int64)
         for j in range(m):
-            a = (2 * (sub[:, j] @ cb[j].T) - (cb[j] * cb[j]).sum(axis=1)).argmax(axis=1)
+            a = nearest(sub[:, j], cb[j], True)
             np.add.at(S[j], a, sub[:, j])
             N[j] = np.bincount(a, minlength=len(cb[j]))
         return S, N
 
     for _ in range(iters):
-        if local:
+        if corpus is not None:
             S, N = sums(X, cb)
         else:
 
@@ -649,10 +665,27 @@ def _probe_rows(q_: DataFrame, key: str, n: int):
     """The n lowest-key rows of a quantized (key, _q) frame as (ids,
     n × dim int64 matrix): one bounded driver collect. A builder calls it
     once, for the longest prefix it needs (codewords, coarse cells,
-    probes), and slices that."""
+    probes), and slices that. The ordered limit is a TakeOrdered, which
+    sends up to n rows from EVERY partition to the driver, so n is a
+    model's or a probe set's size, never a corpus bound."""
+    return _as_matrix(q_.select(key, "_q").orderBy(key).limit(n).collect(), key)
+
+
+def _solver_rows(q_: DataFrame, key: str):
+    """The whole quantized (key, _q) corpus as (ids, matrix) in key order
+    when it has at most _LOCAL_SOLVER_THRESHOLD rows, else None. One
+    unordered limit collect (a CollectLimit, which stops scanning
+    partitions once it holds threshold + 1 rows), sorted on the driver."""
+    rows = q_.select(key, "_q").limit(_LOCAL_SOLVER_THRESHOLD + 1).collect()
+    if len(rows) > _LOCAL_SOLVER_THRESHOLD:
+        return None
+    return _as_matrix(sorted(rows, key=lambda r: r[key]), key)
+
+
+def _as_matrix(rows, key: str):
+    """Collected (key, _q) rows as (ids, int64 matrix)."""
     import numpy as np
 
-    rows = q_.select(key, "_q").orderBy(key).limit(n).collect()
     return (
         np.array([r[key] for r in rows]),
         np.array([r["_q"] for r in rows], dtype=np.int64),
@@ -711,6 +744,7 @@ def _pq_code_frame(q_: DataFrame, key: str, cb, cells) -> DataFrame:
 
     m = len(cb)
     _, encode = _pq_quantizer(cb)
+    nearest = _nearest_row()
 
     def _enc(batches):
         for pdf in batches:
@@ -719,7 +753,7 @@ def _pq_code_frame(q_: DataFrame, key: str, cb, cells) -> DataFrame:
             Q = np.vstack(pdf["_q"].to_numpy())
             out = pdf[[key]].copy()
             if cells is not None:
-                out["cell_id"] = cells[0][(Q @ cells[1].T).argmax(axis=1)]
+                out["cell_id"] = cells[0][nearest(Q, cells[1], False)]
             codes, qerr = encode(Q)
             for j in range(m):
                 out[f"code_{j}"] = codes[:, j]
@@ -1061,21 +1095,23 @@ def kcenter_greedy(emb: DataFrame, k: int = 8, vec: str = "embedding") -> DataFr
     # Small-corpus fast path (the union-find discipline from
     # operators/dedup.py): the greedy loop is inherently sequential —
     # k-1 round-trips of one job each — so when the quantized corpus is
-    # bounded (the seed collect brings at most threshold+1 rows to the
-    # driver, ~35 MB at 64 dims) the identical integer greedy runs in
-    # numpy. Exact same argmax/tie rules, so the output is bit-identical;
-    # above the threshold the distributed scan loop below runs. An empty
-    # corpus has no seed: IndexError at ids[0].
-    ids, X = _probe_rows(q_, "vec_id", _LOCAL_SOLVER_THRESHOLD + 1)
+    # bounded (_solver_rows: at most threshold+1 rows on the driver,
+    # ~35 MB at 64 dims) the identical integer greedy runs in numpy.
+    # Exact same argmax/tie rules, so the output is bit-identical; above
+    # the threshold the seed is a one-row probe and the distributed scan
+    # loop below runs. An empty corpus has no seed: IndexError at ids[0].
+    corpus = _solver_rows(q_, "vec_id")
+    if corpus is None:
+        q_ = q_.localCheckpoint()
+    ids, X = corpus or _probe_rows(q_, "vec_id", 1)
     picks = [(1, ids[0].item(), 0)]
-    if len(X) <= _LOCAL_SOLVER_THRESHOLD:
+    if corpus is not None:
         mind2 = ((X - X[0]) ** 2).sum(axis=1)
         for step in range(2, k + 1):
             j = int(np.lexsort((ids, -mind2))[0])
             picks.append((step, ids[j].item(), int(mind2[j])))
             mind2 = np.minimum(mind2, ((X - X[j]) ** 2).sum(axis=1))
     else:
-        q_ = q_.localCheckpoint()
         centers = X[:1]
         for step in range(2, k + 1):
 

@@ -114,29 +114,28 @@ def test_merge_intervals_random_vs_bruteforce(spark):
 
 def test_nearest_interval_random_vs_bruteforce(spark):
     """Property: the sweep+overlap nearest equals brute-force nearest with
-    (distance, key) tie-break on random data."""
+    (distance, key) tie-break on random data; a point on a chromosome
+    without intervals gets one row with NULL key and distance."""
     import random
 
     from varda_spark.operators.interval import nearest_interval
 
     rng = random.Random(23)
-    pts = [("c", rng.randint(1, 500), i) for i in range(80)]
+    pts = [("c", rng.randint(1, 500), i) for i in range(80)] + [("d", 250, 80)]
     ivs = [
         ("c", b, b + rng.randint(0, 30), k)
         for k in range(40)
         for b in [rng.randint(1, 500)]
     ]
-    got = {
-        (r.position, r.p_partkey): (r.nearest_key, r.distance)
-        for r in nearest_interval(
-            spark.createDataFrame(pts, ["chromosome", "position", "p_partkey"]),
-            spark.createDataFrame(ivs, ["chromosome", "begin", "end", "sample_key"]),
-        ).collect()
-    }
+    rows = nearest_interval(
+        spark.createDataFrame(pts, ["chromosome", "position", "p_partkey"]),
+        spark.createDataFrame(ivs, ["chromosome", "begin", "end", "sample_key"]),
+    ).collect()
+    assert len(rows) == len(pts)
+    got = {(r.position, r.p_partkey): (r.nearest_key, r.distance) for r in rows}
     for c, pos, pid in pts:
-        best = min(
-            (max(b - pos, pos - e, 0), k) for _, b, e, k in ivs
-        )
+        dists = [(max(b - pos, pos - e, 0), k) for ic, b, e, k in ivs if ic == c]
+        best = min(dists) if dists else (None, None)
         assert got[(pos, pid)] == (best[1], best[0]), (pos, pid)
 
 

@@ -11,7 +11,12 @@ import pytest
 
 from varda_spark.frequency import frequency
 from varda_spark.sources.bed import read_bed
-from varda_spark.sources.genome import quarantine_split, read_fasta, validate_reference
+from varda_spark.sources.genome import (
+    build_fai,
+    quarantine_split,
+    region_reader,
+    validate_reference,
+)
 from varda_spark.sources.sinks import (
     format_annotated_vcf_lines,
     write_annotated_vcf,
@@ -108,8 +113,7 @@ def test_read_bed(spark, tmp_path):
 def test_fasta_validation(spark, tmp_path):
     fa = tmp_path / "ref.fa"
     fa.write_text(">1 test\nAAAAAAAAAA\nCCCCCCCCCC\n>2\nGGGG\n")
-    genome = read_fasta(str(fa))
-    assert genome["1"][9:12] == "ACC"  # pos 10..12 1-based
+    assert region_reader(build_fai(str(fa)))(str(fa), "1", 10, 3) == "ACC"  # pos 10..12 1-based
     obs = spark.createDataFrame(
         [
             ("1", 10, "AC", "A"),   # matches AC at 10,11
@@ -120,8 +124,10 @@ def test_fasta_validation(spark, tmp_path):
         ],
         ["chromosome", "position", "reference", "observed"],
     )
-    valid, quarantined = quarantine_split(validate_reference(obs, genome))
+    valid, quarantined = quarantine_split(validate_reference(obs, str(fa)))
     assert valid.count() == 3 and quarantined.count() == 2
+    with pytest.raises(ValueError, match="gzip"):
+        validate_reference(obs, str(tmp_path / "ref.fa.gz"))
 
 
 def test_read_vcf_wide_samples(spark, tmp_path):
@@ -170,8 +176,6 @@ def test_faidx_windowed_access(spark, tmp_path):
     whole-file load is asserted NOT to occur via byte accounting."""
     import random
 
-    from varda_spark.sources.genome import build_fai, fetch_region, validate_reference_indexed
-
     rng = random.Random(7)
     chr1 = "".join(rng.choice("ACGT") for _ in range(5000))   # 60-col lines
     chr2 = "".join(rng.choice("ACGT") for _ in range(3001))   # 7-col lines, ragged tail
@@ -184,14 +188,15 @@ def test_faidx_windowed_access(spark, tmp_path):
 
     fai = build_fai(str(fa))
     assert fai["1"][0] == 5000 and fai["2"][0] == 3001
+    fetch_region = region_reader(fai)
     full = {"1": chr1, "2": chr2}
     for _ in range(50):
         c = rng.choice(["1", "2"])
         start = rng.randint(1, len(full[c]))
         ln = rng.randint(0, 80)
-        assert fetch_region(str(fa), fai, c, start, ln) == full[c][start - 1 : start - 1 + ln]
-    assert fetch_region(str(fa), fai, "chrX", 1, 5) is None
-    assert fetch_region(str(fa), fai, "2", 3001, 10) == chr2[-1]  # clamp at end
+        assert fetch_region(str(fa), c, start, ln) == full[c][start - 1 : start - 1 + ln]
+    assert fetch_region(str(fa), "chrX", 1, 5) is None
+    assert fetch_region(str(fa), "2", 3001, 10) == chr2[-1]  # clamp at end
 
     # byte accounting: a 30-base fetch must read ~30 bytes + newlines, not 8 KB
     class CountingFile:
@@ -207,12 +212,12 @@ def test_faidx_windowed_access(spark, tmp_path):
             return self.f.read(n)
 
     cf = CountingFile(str(fa))
-    got = fetch_region(cf, fai, "1", 101, 30)
+    got = fetch_region(cf, "1", 101, 30)
     assert got == chr1[100:130]
     assert cf.bytes_read < 40, f"read {cf.bytes_read} bytes for a 30-base slice"
     cf.f.close()
 
-    # Spark path: index-based validation agrees with the dict-based one
+    # Spark path: the validator agrees with the slices above
     obs = spark.createDataFrame(
         [
             ("1", 101, chr1[100:110], "G"),
@@ -226,7 +231,7 @@ def test_faidx_windowed_access(spark, tmp_path):
     )
     got = {
         (r.chromosome, r.position, r.reference): r.ref_ok
-        for r in validate_reference_indexed(obs, str(fa)).collect()
+        for r in validate_reference(obs, str(fa)).collect()
     }
     assert got[("1", 101, chr1[100:110])] is True
     assert got[("1", 101, "TTTTTTTTTTT")] is False

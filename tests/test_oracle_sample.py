@@ -53,6 +53,9 @@ SAMPLE = [
     "sim_kmeans",
     # frequencies: the keys branch with two selections, and hom/het
     "freq_annotate", "freq_zygosity",
+    # keys run through an operator they share with a library caller:
+    # cascade_radius_stream, salted_join
+    "stream_cascade", "join_salted",
 ]
 
 

@@ -8,7 +8,9 @@ those by reference) passes there and fails anywhere else with
 ``ModuleNotFoundError: No module named 'varda_spark'``. This test
 materializes one key per executor-code family in a subprocess whose
 working directory is outside the checkout and whose ``PYTHONPATH`` does
-not name it: only the driver puts the package on its ``sys.path``.
+not name it: only the driver puts the package on its ``sys.path``. The
+same subprocess also runs the reference validator, whose pandas UDF
+seek-reads a FASTA on the workers.
 """
 
 import os
@@ -39,6 +41,13 @@ spark = get_spark("worker-isolation", shuffle_partitions=4)
 for key in {keys!r}:
     REGISTRY[key].fn(spark, {sf!r}).write.format("noop").mode("overwrite").save()
     print("ran", key, flush=True)
+from varda_spark.sources.genome import quarantine_split, validate_reference
+obs = spark.createDataFrame(
+    [("1", 10, "AC"), ("1", 10, "T"), ("2", 1, "GG"), ("1", 5, ""), ("3", 1, "A")],
+    ["chromosome", "position", "reference"],
+)
+valid, quarantined = quarantine_split(validate_reference(obs, {fasta!r}))
+print("validated", valid.count(), quarantined.count(), flush=True)
 spark.stop()
 """
 
@@ -49,10 +58,13 @@ def test_keys_run_with_the_package_on_the_driver_only(tmp_path):
         p for p in env.get("PYTHONPATH", "").split(os.pathsep)
         if p and Path(p).resolve() != ROOT
     )
-    script = SCRIPT.format(root=str(ROOT), keys=KEYS, sf=SF_SMALL)
+    fasta = tmp_path / "ref.fa"
+    fasta.write_text(">1 test\nAAAAAAAAAA\nCCCCCCCCCC\n>2\nGGGG\n")
+    script = SCRIPT.format(root=str(ROOT), keys=KEYS, sf=SF_SMALL, fasta=str(fasta))
     r = subprocess.run(
         [sys.executable, "-c", script], cwd=tmp_path, env=env,
         capture_output=True, text=True, timeout=900,
     )
     ran = [line.split()[1] for line in r.stdout.splitlines() if line.startswith("ran ")]
     assert r.returncode == 0 and ran == KEYS, (ran, r.stderr[-4000:])
+    assert "validated 3 2" in r.stdout.splitlines(), r.stderr[-4000:]

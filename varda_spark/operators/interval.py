@@ -105,7 +105,9 @@ def interval_join_naive(points: DataFrame, intervals: DataFrame) -> DataFrame:
 def nearest_interval(points: DataFrame, intervals: DataFrame) -> DataFrame:
     """bedtools-closest: for each ``p_partkey`` point the nearest interval
     (distance 0 if overlapping; ties broken by lowest ``sample_key``) — WITHOUT an all-pairs
-    join, at any scale.
+    join, at any scale. Every point gets exactly one row: a point whose
+    chromosome has no interval gets NULL ``nearest_key`` and ``distance``
+    (``knn_intervals`` emits no row for it).
 
     Three bounded candidate sources, no pair blow-up anywhere:
     1. overlapping intervals (distance 0) from the binned interval join,

@@ -1,4 +1,4 @@
-"""Skew-handling utilities: salted joins for hot keys.
+"""Skew-handling utilities: salted joins and aggregations for hot keys.
 
 AQE's skew-join splitting (enabled in session.py) handles most skew at
 shuffle time; salting is the explicit fallback for EXTREME hot keys
@@ -6,15 +6,15 @@ shuffle time; salting is the explicit fallback for EXTREME hot keys
 sort-merge-join stages AQE can't split (e.g. followed by a window on the
 same key).
 
-Mechanics: the fact side gets a random-but-deterministic salt in
-[0, n_salts) appended to the join key; the dimension side is exploded
-n_salts× so every salted fact key finds its row. Fact shuffle spread
-n_salts ways; dim grows n_salts× (fine — it's the small side).
+Mechanics: every fact row gets a salt in [0, n) (``_salt``); a join
+explodes the dimension n× so every (key, salt) finds its row, and an
+aggregation sums within (key, salt) before combining per key. The fact
+shuffle spreads n ways; the dim grows n× (fine — it's the small side).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -42,19 +42,11 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def with_salt(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
-    """Deterministic salt from a content hash (reproducible across runs,
-    unlike rand()): salt = xxhash64(whole row key + monotonic id) % n, as
-    ``_salted_key``."""
-    salt = F.pmod(F.xxhash64(F.col(key), F.monotonically_increasing_id()), F.lit(n_salts))
-    return df.withColumn("_salted_key", F.concat_ws("#", F.col(key).cast("string"), salt.cast("string")))
-
-
-def explode_dim(dim: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
-    """Replicate each dimension row once per salt value (``_salted_key``)."""
-    return dim.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))).withColumn(
-        "_salted_key", F.concat_ws("#", F.col(key).cast("string"), F.col("_salt").cast("string"))
-    ).drop("_salt")
+def _salt(n_salts: int) -> Column:
+    """A per-row salt in [0, n_salts): a hash of the row's monotonic id.
+    Any per-row spreading value works — a salted result is
+    salt-independent."""
+    return F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salts))
 
 
 def salted_join(facts: DataFrame, dim: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
@@ -62,12 +54,15 @@ def salted_join(facts: DataFrame, dim: DataFrame, key: str, n_salts: int = 16) -
 
     Result equals facts.join(dim, key) (property-tested); use when a
     handful of keys dominate and AQE skew splitting isn't available for
-    the stage. The dim side must tolerate n_salts× replication.
+    the stage. The join runs on (key, salt) against the dimension
+    exploded once per salt value, so the dim side must tolerate n_salts×
+    replication. The exploded dimension carries the merge hint: salting
+    only pays on a shuffle join, and a small dimension would otherwise
+    be broadcast.
     """
-    f = with_salt(facts, key, n_salts)
-    d = explode_dim(dim.withColumnRenamed(key, f"_dim_{key}"), f"_dim_{key}", n_salts)
-    out = f.join(d, f["_salted_key"] == d["_salted_key"], "inner")
-    return out.drop("_salted_key", f"_dim_{key}")
+    f = facts.withColumn("_salt", _salt(n_salts))
+    d = dim.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)])))
+    return f.join(d.hint("merge"), [key, "_salt"]).drop("_salt")
 
 
 def salted_agg(df: DataFrame, group_cols: list[str], agg_col: str) -> DataFrame:
@@ -78,10 +73,6 @@ def salted_agg(df: DataFrame, group_cols: list[str], agg_col: str) -> DataFrame:
     holds a disproportionate share of rows and map-side partial
     aggregation alone can't absorb it (e.g. high-cardinality payload
     columns defeat hash-map combining)."""
-    # any per-row spreading value works — the final result is salt-
-    # independent because the sum is associative
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(16))
-    )
+    salted = df.withColumn("_salt", _salt(16))
     stage1 = salted.groupBy(*group_cols, "_salt").agg(F.sum(agg_col).alias("_partial"))
     return stage1.groupBy(*group_cols).agg(F.sum("_partial").alias(f"sum_{agg_col}"))

@@ -2,61 +2,32 @@
 
 Reference semantics (varda `utils.py ReferenceMismatch` + pyfaidx usage
 [P]): imported variants whose REF allele disagrees with the reference
-genome are rejected. Our Spark translation: the genome (or just the
-chromosomes present in the batch) is loaded driver-side and broadcast;
-validation is a join-free Column check via a broadcast map of slices.
+genome are rejected. Our Spark translation is faidx-style windowed
+access, one path for test and real genomes (GRCh38 ≈ 3 GB) alike: a
+tiny index of byte offsets (name, length, offset, linebases, linewidth —
+the samtools .fai contract) is built once driver-side and shipped with
+the validator; each executor seek-reads only the slices its batch needs —
+O(bytes compared) I/O, no whole-genome copy anywhere. The FASTA must be
+plain text: gzip has no random access (bgzip+.gzi would).
 
-Two paths, same contract (validate(df) → df + ref_ok, quarantine split):
-- dict loader + broadcast map (read_fasta/validate_reference) for tiny
-  test genomes;
-- faidx-style windowed access (build_fai/fetch_region/
-  validate_reference_indexed) for real genomes (GRCh38 ≈ 3 GB): only the
-  byte-offset INDEX is broadcast, each executor seek-reads the slices its
-  batch needs — O(bytes compared) I/O, no whole-genome copy anywhere.
+``validate_reference(df, path)`` adds ``ref_ok``; ``quarantine_split``
+turns it into (valid, quarantined).
 """
 
 from __future__ import annotations
-
-import gzip
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 
-def read_fasta(path: str) -> dict[str, str]:
-    """Tiny-FASTA loader (test genomes); returns {chromosome: sequence}."""
-    opener = gzip.open if path.endswith(".gz") else open
-    out: dict[str, str] = {}
-    name, chunks = None, []
-    with opener(path, "rt") as f:  # type: ignore[operator]
-        for line in f:
-            line = line.strip()
-            if line.startswith(">"):
-                if name is not None:
-                    out[name] = "".join(chunks)
-                name, chunks = line[1:].split()[0], []
-            elif line:
-                chunks.append(line.upper())
-    if name is not None:
-        out[name] = "".join(chunks)
-    return out
-
-
-# ---------------------------------------------------------------------
-# A4 scale path: faidx-style windowed access. A real genome (GRCh38 ≈ 3 GB)
-# must never be dict-loaded per executor; instead a tiny index of byte
-# offsets (name, length, offset, linebases, linewidth — the samtools .fai
-# contract) is built once driver-side, broadcast, and executors seek-read
-# only the slices a batch needs.
-# ---------------------------------------------------------------------
-
 def build_fai(path: str) -> dict[str, tuple[int, int, int, int]]:
     """One sequential driver-side pass → {chrom: (length, offset,
     linebases, linewidth)}. Matches the samtools faidx fields; requires
     uniform line length within each sequence body (standard FASTA).
-    Plain files only — gzip has no random access (bgzip+.gzi would);
-    gzipped test genomes should use the dict loader above.
+    Plain files only: a ``.gz`` path raises ValueError.
     """
+    if path.endswith(".gz"):
+        raise ValueError(f"{path}: gzip has no random access; decompress the FASTA")
     fai: dict[str, tuple[int, int, int, int]] = {}
     name = None
     length = offset = linebases = linewidth = 0
@@ -80,42 +51,49 @@ def build_fai(path: str) -> dict[str, tuple[int, int, int, int]]:
     return fai
 
 
-def fetch_region(
-    path_or_file, fai: dict[str, tuple[int, int, int, int]], chrom: str, start: int, length: int
-) -> str | None:
-    """1-based slice [start, start+length) of `chrom`, reading only the
-    covered bytes (seek + one bounded read spanning the newlines).
-    Returns None for unknown chromosome; clamps at sequence end.
+def region_reader(fai: dict[str, tuple[int, int, int, int]]):
+    """``fetch(path_or_file, chrom, start, length)`` over the index
+    ``fai``, as a closure that ships to executors by value (Python
+    workers never import this package).
+
+    ``fetch`` returns the 1-based slice [start, start+length) of `chrom`,
+    reading only the covered bytes (seek + one bounded read spanning the
+    newlines); None for an unknown chromosome; clamped at sequence end.
     """
-    rec = fai.get(chrom)
-    if rec is None:
-        return None
-    seq_len, offset, linebases, linewidth = rec
-    start0 = max(0, start - 1)
-    end0 = min(seq_len, start0 + length)
-    if start0 >= end0 or linebases == 0:
-        return ""
-    byte_lo = offset + (start0 // linebases) * linewidth + start0 % linebases
-    byte_hi = offset + ((end0 - 1) // linebases) * linewidth + (end0 - 1) % linebases + 1
-    own = isinstance(path_or_file, str)
-    f = open(path_or_file, "rb") if own else path_or_file
-    try:
-        f.seek(byte_lo)
-        raw = f.read(byte_hi - byte_lo)
-    finally:
-        if own:
-            f.close()
-    return raw.replace(b"\n", b"").replace(b"\r", b"").decode().upper()
+
+    def fetch(path_or_file, chrom: str, start: int, length: int) -> str | None:
+        rec = fai.get(chrom)
+        if rec is None:
+            return None
+        seq_len, offset, linebases, linewidth = rec
+        start0 = max(0, start - 1)
+        end0 = min(seq_len, start0 + length)
+        if start0 >= end0 or linebases == 0:
+            return ""
+        byte_lo = offset + (start0 // linebases) * linewidth + start0 % linebases
+        byte_hi = offset + ((end0 - 1) // linebases) * linewidth + (end0 - 1) % linebases + 1
+        own = isinstance(path_or_file, str)
+        f = open(path_or_file, "rb") if own else path_or_file
+        try:
+            f.seek(byte_lo)
+            raw = f.read(byte_hi - byte_lo)
+        finally:
+            if own:
+                f.close()
+        return raw.replace(b"\n", b"").replace(b"\r", b"").decode().upper()
+
+    return fetch
 
 
-def validate_reference_indexed(df: DataFrame, path: str) -> DataFrame:
-    """Windowed twin of validate_reference: broadcast the .fai INDEX (a few
-    KB) instead of the genome; each executor lazily opens the local FASTA
-    once and seek-reads only the alleles' slices. Arrow-batched pandas UDF —
-    one file handle per worker, O(bytes actually compared) I/O.
+def validate_reference(df: DataFrame, path: str) -> DataFrame:
+    """Add ``ref_ok``: does the reference allele match the genome at
+    ``path`` at its position? Unknown chromosomes fail; empty reference
+    alleles (pure insertions) validate trivially.
+
+    Arrow-batched pandas UDF: each Python worker lazily opens the local
+    FASTA once and seek-reads only the alleles' slices.
     """
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(build_fai(path))
+    fetch = region_reader(build_fai(path))
     handles: dict[str, object] = {}
 
     @F.pandas_udf("boolean")
@@ -123,40 +101,11 @@ def validate_reference_indexed(df: DataFrame, path: str) -> DataFrame:
         f = handles.get(path)
         if f is None:
             f = handles[path] = open(path, "rb")
-        fai_ = bc.value
 
         def check(c, p, r):
             if r is None or r == "":
                 return True
-            return fetch_region(f, fai_, c, int(p), len(r)) == r.upper()
-
-        return pd.Series([check(c, p, r) for c, p, r in zip(chrom, pos, ref)])
-
-    return df.withColumn("ref_ok", _ok(F.col("chromosome"), F.col("position"), F.col("reference")))
-
-
-def validate_reference(df: DataFrame, genome: dict[str, str]) -> DataFrame:
-    """Add ``ref_ok``: does reference allele match the genome at position?
-
-    Uses a broadcast map literal (chromosome → sequence) and substring —
-    fine for test genomes; swap the map for per-executor faidx at scale.
-    Empty reference alleles (pure insertions) validate trivially.
-    """
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(genome)
-
-    @F.pandas_udf("boolean")
-    def _ok(chrom: pd.Series, pos: pd.Series, ref: pd.Series) -> pd.Series:
-        g = bc.value
-
-        def check(c, p, r):
-            if r is None or r == "":
-                return True
-            seq = g.get(c)
-            if seq is None:
-                return False
-            start = int(p) - 1
-            return seq[start : start + len(r)] == r.upper()
+            return fetch(f, c, int(p), len(r)) == r.upper()
 
         return pd.Series([check(c, p, r) for c, p, r in zip(chrom, pos, ref)])
 

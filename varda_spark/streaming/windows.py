@@ -8,9 +8,13 @@ core to a ``readStream`` source with watermarking. Batch/stream equivalence
 is pytest-verified on sf0.001.
 
 Scale notes: tumbling/sliding aggs are partial-aggregated map-side before
-the shuffle on (window, key); session windows use Spark's native
-``session_window`` in streaming (state-store backed) and a gaps-and-islands
-window function in batch. Watermarks bound state: 10 min on event time.
+the shuffle on (window, key). Watermarks bound state: 10 min on event time.
+
+The one wrapper with its own core is the session window: streaming uses
+Spark's native ``session_window`` (state-store backed, merging sessions
+as events arrive), batch a gaps-and-islands window function that numbers
+each user's sessions. The two differ by design (the stream has no session
+number to emit), so their test compares session counts and totals.
 """
 
 from __future__ import annotations
@@ -116,20 +120,7 @@ def read_events_stream(spark, path: str, schema) -> DataFrame:
 def tumbling_counts_stream(ev_stream: DataFrame) -> DataFrame:
     """I1+I4: the same tumbling core under a 10-minute watermark (late data
     bounded)."""
-    return (
-        ev_stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("win.start")).cast("bigint").alias("win_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return tumbling_counts(ev_stream.withWatermark("ts", "10 minutes"))
 
 
 def session_windows_stream(ev_stream: DataFrame) -> DataFrame:
@@ -244,99 +235,11 @@ def ewma_stream(ev_stream: DataFrame) -> DataFrame:
     )
 
 
-def _make_type_counts_processor():
-    """Build the TypeCounts StatefulProcessor class instance.
-
-    Module-level factory so the handler logic is unit-testable WITHOUT
-    the transformWithState wire protocol: the class only touches the
-    handle via getMapState() and the MapState via containsKey/getValue/
-    updateValue with (key,)/(value,) tuple shapes, so a faithful fake
-    handle (tests/test_streaming.py::test_type_counts_processor_logic)
-    executes every line of handleInputRows — covering the tuple-shape
-    and accumulation logic that the env-gated end-to-end test cannot
-    reach in a protobuf-less container.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TypeCounts(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getMapState(
-                "counts", "event_type string", "n bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            batch: dict[str, int] = {}
-            for pdf in rows:
-                for et, c in pdf.groupby("event_type").size().items():
-                    batch[et] = batch.get(et, 0) + int(c)
-            out = {"user_id": [], "event_type": [], "n": []}
-            for et, add in sorted(batch.items()):
-                prev = (
-                    self._counts.getValue((et,))[0]
-                    if self._counts.containsKey((et,))
-                    else 0
-                )
-                total = prev + add
-                self._counts.updateValue((et,), (total,))
-                out["user_id"].append(int(key[0]))
-                out["event_type"].append(et)
-                out["n"].append(total)
-            yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    return TypeCounts()
-
-
-def type_counts_stream_tws(ev_stream: DataFrame) -> DataFrame:
-    """I5+ third custom stateful operator, on Spark 4's NEW
-    transformWithStateInPandas API (the arbitrary-state successor to
-    applyInPandasWithState): per-user running count per event type,
-    held in a MapState keyed by event_type.
-
-    Why MapState matters at 100 TB: the legacy API forces ONE value blob
-    per group, so a per-type counter means deserializing and rewriting
-    the whole map on every event; MapState gives per-entry point reads/
-    writes in the state store (RocksDB at scale), touching only the
-    types present in the micro-batch. Emits the updated cumulative count
-    per (user, type) each batch; the last emission per pair equals the
-    batch groupBy count — pytest-checked.
-
-    STATUS — EXPERIMENTAL: the transformWithState wire protocol needs a
-    working google.protobuf on the Python side; this container ships
-    none, so the end-to-end equivalence test importorskips and the
-    protocol path has never executed here. What IS executed every run:
-    the full handler logic (batch accumulation, MapState tuple shapes)
-    via the fake-handle unit test on _make_type_counts_processor, and
-    the protobuf-free stateful path end-to-end via applyInPandasWithState
-    (ewma_stream above). Treat the protocol wiring as unproven until a
-    protobuf-equipped environment runs the gated test.
-    """
-    return ev_stream.groupBy("user_id").transformWithStateInPandas(
-        _make_type_counts_processor(),
-        outputStructType="user_id bigint, event_type string, n bigint",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def purchase_view_join_batch(ev: DataFrame) -> DataFrame:
-    """I5 stream-stream join, batch core: each purchase joined to every
-    view by the same user within the preceding 60 minutes.
-
-    The streaming twin (purchase_view_join_stream) is the same join under
-    watermarks; the time bound is what lets Spark expire join state —
-    an unbounded stream-stream join would hold both streams forever.
-    """
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts")
-    )
-    v = ev.filter(F.col("event_type") == "view").select(
+def _purchase_view_join(purchases: DataFrame, views: DataFrame) -> DataFrame:
+    """I5 join core: each purchase joined to every view by the same user
+    within the preceding 60 minutes."""
+    p = purchases.select("user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts"))
+    v = views.select(
         F.col("user_id").alias("v_user"), F.col("event_id").alias("view_id"), F.col("ts").alias("v_ts")
     )
     cond = (
@@ -353,21 +256,25 @@ def purchase_view_join_batch(ev: DataFrame) -> DataFrame:
     )
 
 
+def purchase_view_join_batch(ev: DataFrame) -> DataFrame:
+    """I5 stream-stream join, batch core: the join core over one events
+    frame split by event type.
+
+    The streaming twin (purchase_view_join_stream) is the same join under
+    watermarks; the time bound is what lets Spark expire join state —
+    an unbounded stream-stream join would hold both streams forever.
+    """
+    return _purchase_view_join(
+        ev.filter(F.col("event_type") == "purchase"), ev.filter(F.col("event_type") == "view")
+    )
+
+
 def purchase_view_join_stream(purchases: DataFrame, views: DataFrame) -> DataFrame:
-    """I5 streaming twin: stream-stream interval join under 10-minute
+    """I5 streaming twin: the join core over two streams under 10-minute
     watermarks."""
-    p = purchases.withWatermark("ts", "10 minutes").select(
-        "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts")
+    return _purchase_view_join(
+        purchases.withWatermark("ts", "10 minutes"), views.withWatermark("ts", "10 minutes")
     )
-    v = views.withWatermark("ts", "10 minutes").select(
-        F.col("user_id").alias("v_user"), F.col("event_id").alias("view_id"), F.col("ts").alias("v_ts")
-    )
-    cond = (
-        (F.col("user_id") == F.col("v_user"))
-        & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 60 MINUTES"))
-    )
-    return p.join(v, cond).select("user_id", "purchase_id", "p_ts", "view_id", "v_ts")
 
 
 def enrich_counts(ev: DataFrame, dim: DataFrame) -> DataFrame:
@@ -385,7 +292,8 @@ def enrich_counts(ev: DataFrame, dim: DataFrame) -> DataFrame:
 
 
 def cascade_radius_stream(query_stream: DataFrame, corpus: DataFrame) -> DataFrame:
-    """I5+/K3 streaming retrieval cascade (twin of catalog stream_cascade).
+    """I5+/K3 streaming retrieval cascade (catalog stream_cascade runs it
+    on a static query batch).
 
     ``query_stream`` is a stream of sign-encoded queries (vec_id, w1, w2,
     e_q — operators/similarity.py::sign_words64); ``corpus`` is the STATIC
